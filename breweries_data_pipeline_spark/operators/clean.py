@@ -25,6 +25,8 @@ def deduplicate(
     pipelines pass ``order_by`` to keep the first row under that order
     (implemented as a ``row_number() = 1`` window — one shuffle on
     ``keys``, same cost shape as dropDuplicates' hash aggregate).
+    ``order_by`` must be a total order within key groups: rows that tie
+    on it are kept arbitrarily, exactly like dropDuplicates.
 
     Scale: both forms shuffle on the key columns. With heavily skewed
     keys prefer the window form — AQE skew-join handling does not apply

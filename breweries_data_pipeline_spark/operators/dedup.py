@@ -16,8 +16,22 @@ never an all-pairs crossJoin:
   blocks of 16 bits => at least one block equal when k <= 3), again a
   self equi-join on the block value.
 
-Hash family: seeded ``xxhash64(value, i)`` — pure JVM, and avoids
-``(a*h+b) mod p`` arithmetic that overflows long under ANSI mode.
+MinHash signatures come from one of two hash families, both emitting
+the same ``minhash array<bigint>`` column:
+
+- ``minhash_signatures``: tokens hash with JVM ``xxhash64``; shingle
+  hashes and the family minima (an affine ``a*h + b`` family in
+  wrapping uint64 arithmetic) run in an Arrow-batched numpy kernel.
+  The production path.
+- ``md5_minhash_signatures``: lanes cut from md5 digests of each
+  shingle, pure JVM. DuckDB computes the same lanes, so the md5 twins
+  in the query registry are reproducible by an oracle.
+
+Everything downstream of the signature exists once and serves both:
+band keys (``lsh_band_keys``), candidate pairs
+(``lsh_candidate_pairs``), bucket stars (``lsh_bucket_stars``), the
+exact-Jaccard verify (``jaccard_pairs``) and the connected-components
+keep-min (``keep_component_min``).
 """
 
 from __future__ import annotations
@@ -261,6 +275,73 @@ def minhash_signatures(
     ).select(id_col, F.col("_s.shingles").alias("shingles"), F.col("_s.minhash").alias("minhash"))
 
 
+def md5_minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
+    """MinHash signatures on the md5 lane family, from an exploded
+    shingle stream with a string column ``s``: one row per group of
+    every other column of ``sh`` (the doc id, plus anything constant
+    within a doc such as an exact-dup multiplicity), carrying the same
+    ``minhash array<bigint>`` column as :func:`minhash_signatures`.
+
+    Lane r is the 32-bit hex slice ``(r % 4) * 8 + 1`` of
+    ``md5(s || ':mh{r // 4}')`` — four lanes per digest, the spelling
+    DuckDB reproduces. Lanes are a pure function of the SHINGLE, and
+    shingles repeat heavily across documents (sf0.1: 260k exploded rows
+    over 27k distinct shingles), so the digest chain runs once per
+    DISTINCT shingle (a map-side-combined aggregate, skew-proof) and
+    the small (shingle, lanes) table joins back under the same
+    broadcast hint as the frequency tables (see :func:`_freq_hint`):
+    the exploded stream never shuffles before the per-doc min
+    aggregate."""
+    keys = [c for c in sh.columns if c != "s"]
+    # a null shingle has no lanes, so a doc with only null shingles gets no signature
+    sh = sh.where(F.col("s").isNotNull())
+    digs = sh.select("s").distinct().select(
+        "s",
+        *[
+            F.md5(F.concat(F.col("s"), F.lit(f":mh{g}"))).alias(f"__d{g}")
+            for g in range((num_hashes + 3) // 4)
+        ],
+    )
+    lanes = digs.select(
+        "s",
+        *[
+            F.conv(
+                F.substring(F.col(f"__d{r // 4}"), (r % 4) * 8 + 1, 8), 16, 10
+            ).cast("long").alias(f"__l{r}")
+            for r in range(num_hashes)
+        ],
+    )
+    return sh.join(_freq_hint(lanes), "s").groupBy(*keys).agg(
+        F.array(*[F.min(f"__l{r}") for r in range(num_hashes)]).alias("minhash")
+    )
+
+
+def lsh_band_keys(
+    sig_df: DataFrame, bands: int = 16, rows_per_band: int = 4
+) -> DataFrame:
+    """(every non-``minhash`` column, band, band_hash): one row per doc
+    per band, ``band_hash = xxhash64`` of the band's ``rows_per_band``
+    signature slice, via ONE explode of an array of band structs — a
+    single pass over the signature table. Two docs share a bucket iff
+    they agree on the band's whole slice (up to 64-bit hash
+    collisions, which only ADD bucket members)."""
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("band"),
+                F.xxhash64(
+                    F.slice("minhash", j * rows_per_band + 1, rows_per_band)
+                ).alias("band_hash"),
+            )
+            for j in range(bands)
+        ]
+    )
+    rest = [c for c in sig_df.columns if c != "minhash"]
+    return sig_df.select(*rest, F.explode(band_structs).alias("__b")).select(
+        *rest, "__b.band", "__b.band_hash"
+    )
+
+
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str = "doc_id",
@@ -277,21 +358,7 @@ def lsh_candidate_pairs(
     docs) produces a quadratic bucket locally; the exact-dedup pass
     should run first so LSH only sees unique texts.
     """
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(F.slice("minhash", j * rows_per_band + 1, rows_per_band)).alias(
-                    "band_hash"
-                ),
-            )
-            for j in range(bands)
-        ]
-    )
-    buckets = (
-        sig_df.select(F.col(id_col), F.explode(band_structs).alias("b"))
-        .select(id_col, "b.band", "b.band_hash")
-    )
+    buckets = lsh_band_keys(sig_df.select(id_col, "minhash"), bands, rows_per_band)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -332,26 +399,24 @@ def lsh_bucket_star_edges(
     before the join (no edges to contribute), so edge volume is
     bounded by bucket memberships of docs that actually collide.
     """
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(
-                    F.slice("minhash", j * rows_per_band + 1, rows_per_band)
-                ).alias("band_hash"),
-            )
-            for j in range(bands)
-        ]
-    )
     # persisted: the bucket table feeds BOTH the per-bucket min
     # aggregate and the join-back; without it the upstream signature
     # kernel (the expensive part) runs twice. 20 bytes/row
     # (id + band + hash), tracked for bulk release.
     buckets = track_persist(
-        sig_df.select(
-            F.col(id_col), F.explode(band_structs).alias("b")
-        ).select(id_col, "b.band", "b.band_hash")
+        lsh_band_keys(sig_df.select(id_col, "minhash"), bands, rows_per_band)
     )
+    return lsh_bucket_stars(buckets, id_col).select("id_a", "id_b").distinct()
+
+
+def lsh_bucket_stars(buckets: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(band, id_a, id_b) star rows of a band-key table (from
+    :func:`lsh_band_keys`): per (band, band_hash) bucket with two or
+    more members, one row bucket_min_id -> member for each non-minimum
+    member. A doc sits in exactly one bucket per band, so the rows are
+    already distinct per band. Plan: one groupBy(bucket) min + one
+    join back, both keyed by the band hash; singleton buckets drop
+    before the join."""
     rep = (
         buckets.groupBy("band", "band_hash")
         .agg(F.min(id_col).alias("__rep"), F.count(F.lit(1)).alias("__n"))
@@ -361,8 +426,7 @@ def lsh_bucket_star_edges(
     return (
         buckets.join(rep, ["band", "band_hash"])
         .filter(F.col(id_col) != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
-        .distinct()
+        .select("band", F.col("__rep").alias("id_a"), F.col(id_col).alias("id_b"))
     )
 
 
@@ -393,6 +457,16 @@ def near_dedup_lsh_buckets(
     edges = track_persist(
         lsh_bucket_star_edges(sigs, id_col, bands, num_hashes // bands)
     )
+    return keep_component_min(df, edges, id_col)
+
+
+def keep_component_min(df: DataFrame, edges: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """``df`` minus every doc that is not the minimum id of its
+    connected component in the undirected (id_a, id_b) ``edges``. The
+    CC label table holds only docs that appear in some edge
+    (duplicates are a small fraction of a real corpus), and the drop
+    is one anti-join. ``connected_components`` is looked up on the
+    graph module at call time."""
     from breweries_data_pipeline_spark.operators.graph import (
         connected_components,
     )
@@ -407,6 +481,24 @@ def near_dedup_lsh_buckets(
     )
     drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
     return df.join(drop, id_col, "left_anti")
+
+
+def jaccard_pairs(
+    pairs: DataFrame, sets: DataFrame, id_col: str = "doc_id", sets_col: str = "shingles"
+) -> DataFrame:
+    """``pairs`` (id_a, id_b, ...) with a ``jaccard`` column appended:
+    the exact set Jaccard (:func:`ngram_jaccard`) of the two docs'
+    ``sets_col`` arrays in ``sets``. Two hash joins of the (small)
+    pair stream against the set table — broadcast-able when pairs
+    are rare, which AQE decides at runtime. Callers apply the
+    threshold."""
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col(sets_col).alias("__sa"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col(sets_col).alias("__sb"))
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(*pairs.columns, ngram_jaccard(F.col("__sa"), F.col("__sb")).alias("jaccard"))
+    )
 
 
 def collapse_exact_text_duplicates(
@@ -476,17 +568,7 @@ def verified_near_dup_pairs(
     # (at 100 TB: MEMORY_AND_DISK, sized ~ (num_hashes*8 + shingles) B/doc)
     sigs = track_persist(minhash_signatures(df, text_col, id_col, num_hashes, shingle_size))
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    sh = sigs.select(F.col(id_col), "shingles")
-    return (
-        cands.join(sh.withColumnsRenamed({id_col: "id_a", "shingles": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "shingles": "sh_b"}), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            ngram_jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return jaccard_pairs(cands, sigs, id_col).filter(F.col("jaccard") >= threshold)
 
 
 def edit_gated_near_dup_pairs(
@@ -585,20 +667,7 @@ def near_dedup_minhash(
     if not chain_safe:
         dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
         return df.join(dup_ids, id_col, "left_anti")
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-
-    paired = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    comp = connected_components(
-        pairs, paired, src="id_a", dst="id_b", id_col=id_col
-    )
-    drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
-    return df.join(drop, id_col, "left_anti")
+    return keep_component_min(df, pairs, id_col)
 
 
 def _simhash_udf() -> Column:

@@ -235,7 +235,10 @@ def run_transform_stage(
     Clean defaults derived from metadata when not declared:
     dedup key = first schema column; required = non-nullable schema
     columns present in the input; trim/lower = all string columns when
-    the ``normalize`` flags are on."""
+    the ``normalize`` flags are on. A declared ``dedup_order_by`` is
+    completed with the remaining schema columns (ascending, nulls
+    last) into a total order, so versions that tie on it resolve the
+    same way on every run and in every page order."""
     p = stage.parameters
     meta = load_metadata(paths.resolve(p["metadata_path"]))
     norm = p.get("normalize", {}) or {}
@@ -246,7 +249,14 @@ def run_transform_stage(
     required = norm.get("required") or [
         f.name for f in meta.schema.fields if not f.nullable
     ]
-    df = deduplicate(df, dedup_keys, order_by=norm.get("dedup_order_by"))
+    order_by = norm.get("dedup_order_by")
+    if order_by:
+        order_by = list(order_by) + [
+            F.col(f.name).asc_nulls_last()
+            for f in meta.schema.fields
+            if f.name not in dedup_keys and f.name not in order_by
+        ]
+    df = deduplicate(df, dedup_keys, order_by=order_by)
     df = drop_null_required(df, required)
     if norm.get("trim_strings") or norm.get("lowercase_cols"):
         df = normalize_strings(df, _string_columns(meta.schema))

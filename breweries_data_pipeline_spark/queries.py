@@ -41,7 +41,15 @@ from breweries_data_pipeline_spark.functions.text import (
     tokens,
 )
 from breweries_data_pipeline_spark.operators.dedup import (
+    _ensure_parallelism,
     exact_dedup,
+    jaccard_pairs,
+    keep_component_min,
+    lsh_band_keys,
+    lsh_bucket_star_edges,
+    lsh_bucket_stars,
+    lsh_candidate_pairs,
+    md5_minhash_signatures,
     near_dedup_incremental,
     near_dedup_lsh_buckets,
     near_dedup_minhash,
@@ -9010,87 +9018,6 @@ def _sql_minhash_cols(n: int = 16) -> str:
     )
 
 
-def _minhash_sig(sh, n: int = 16, carry: tuple = ()):
-    """(doc_id, h0..h{n-1}) min-hash signature from an exploded
-    (doc_id, s) shingle stream. The lane values are a pure function of
-    the SHINGLE (n/4 md5 digests split into four 32-bit lanes each,
-    mirroring _sql_minhash_cols exactly), and shingles repeat heavily
-    across documents (sf0.1: 260k exploded rows over 27k distinct
-    shingles, a 9.6x duplication factor) — so r13 computes the digest
-    chain once per DISTINCT shingle and broadcast-joins the small
-    (shingle, lanes) table back onto the stream (guide §2.3: don't
-    compute per row what a 4 MB lookup determines; r12 had already cut
-    md5 count 4x by sharing digests across lanes, 9.1 s -> ~4 s).
-    The distinct pass is a map-side-combined hash aggregate
-    (skew-proof: a Zipf-head shingle collapses per map task), the
-    join-back a BroadcastHashJoin, so the exploded stream still never
-    shuffles before the per-doc min aggregate. Corpora whose distinct
-    shingle set exceeds broadcast capacity drop the hint via
-    ``spark.breweries.dedup.broadcastFreq`` (shared with the
-    dedup-operator frequency tables): the join-back then shuffles,
-    which AQE skew handling can split.
-    ``carry`` names extra per-doc columns to keep (constant within a
-    doc_id — they join the grouping key, which costs nothing since
-    doc_id already determines them)."""
-    digs = sh.select("s").distinct().select(
-        "s",
-        *[
-            F.md5(F.concat(F.col("s"), F.lit(f":mh{g}"))).alias(f"__d{g}")
-            for g in range((n + 3) // 4)
-        ],
-    )
-    lanes = digs.select(
-        "s",
-        *[
-            F.conv(
-                F.substring(F.col(f"__d{r // 4}"), (r % 4) * 8 + 1, 8), 16, 10
-            ).cast("long").alias(f"__l{r}")
-            for r in range(n)
-        ],
-    )
-    bcast = sh.sparkSession.conf.get(
-        "spark.breweries.dedup.broadcastFreq", "true"
-    )
-    if str(bcast).lower() == "true":
-        lanes = F.broadcast(lanes)
-    return sh.join(lanes, "s").groupBy("doc_id", *carry).agg(
-        *[F.min(f"__l{r}").alias(f"h{r}") for r in range(n)]
-    )
-
-
-def _minhash_band_rows(sig, n_bands: int = 4, rows: int = 4,
-                       carry: tuple = ()):
-    """(doc_id, band, v0..v3) from a signature table via ONE explode of
-    an array of band structs — a single pass over sig. (The 4-way
-    union-of-projections spelling recomputes the signature aggregate
-    once per band: Catalyst does not reuse non-cached exchanges across
-    union branches.) ``carry`` names extra sig columns to ride along
-    (e.g. an exact-dup multiplicity weight)."""
-    return sig.select(
-        "doc_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        *[
-                            F.col(f"h{b * rows + i}").alias(f"v{i}")
-                            for i in range(rows)
-                        ],
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("__b"),
-    ).select(
-        "doc_id",
-        *carry,
-        F.col("__b.band").alias("band"),
-        *[F.col(f"__b.v{i}").alias(f"v{i}") for i in range(rows)],
-    )
-
-
 def _sql_minhash_bands(n_bands: int = 4, rows: int = 4) -> str:
     parts = []
     for b in range(n_bands):
@@ -9142,59 +9069,26 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a long) instead of xxhash64, so — unlike q_neardup_pairs_minhash
     (rows-only by hash family) — signatures, banding (4 bands x 4
     rows), candidate generation AND exact-Jaccard verification (>= 0.5)
-    are all reproduced bit-for-bit by DuckDB. Plan: one shingle
-    explode + ONE hash aggregate computes all 16 lanes (map-side
-    combined mins); banding self-joins on (band, 4 lane values) —
-    candidate volume only from genuine signature collisions; verify
-    re-attaches shingle sets to candidates only. md5 costs ~3x
-    xxhash64 per shingle — the production path keeps xxhash64; this
-    query is the auditable twin with identical plan shape."""
+    are all reproduced by DuckDB. Downstream of the md5 signature
+    (operators/dedup.py:md5_minhash_signatures) it is the production
+    pipeline's own steps: lsh_candidate_pairs bands on the xxhash64
+    band key and self-joins per bucket, jaccard_pairs verifies. The
+    oracle's equality on the four lane values picks the same buckets
+    up to 64-bit hash collisions."""
     docs = read_table(spark, sf_dir, "documents")
     # persist the distinct-shingle arrays (regex extraction feeds the
     # signature explode AND both verify sides) and the signature table
     # (both sides of the band self-join) — the same persist discipline
     # as the xxhash64 production path; without it Catalyst recomputes
     # the shingle regex 3x and the 16-min aggregate 2x
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-
     shs = _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id").select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     ).transform(_persist)
-    sh = shs.select("doc_id", F.explode("s").alias("s"))
-
-    sig = _persist(_minhash_sig(sh))
-    bands = _minhash_band_rows(sig)
-    left = bands.select(
-        F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3"
+    sig = _persist(
+        md5_minhash_signatures(shs.select("doc_id", F.explode("s").alias("s")))
     )
-    right = bands.select(
-        F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-    )
-    cand = (
-        left.join(right, ["band", "v0", "v1", "v2", "v3"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa"))
-    sb = shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb"))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("__sa", "__sb")).cast("double")
-                / F.size(
-                    F.array_distinct(F.concat("__sa", "__sb"))
-                ).cast("double")
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
+    cand = lsh_candidate_pairs(sig, "doc_id", 4, 4)
+    return jaccard_pairs(cand, shs, "doc_id", "s").filter(F.col("jaccard") >= 0.5)
 
 
 @register(
@@ -9245,63 +9139,38 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 VERIFICATION-FREE LSH dedup with a full oracle — the
-    bucket-star mode (operators/dedup.py:lsh_bucket_star_edges /
-    near_dedup_lsh_buckets) realized on the md5 lane family so DuckDB
-    reproduces it bit-for-bit: same bucket in ANY band implies same
-    cluster; keep each connected component's minimum doc_id. The
-    banding (4 bands x 4 rows here) IS the duplicate decision — no
-    pair-level Jaccard verification.
+    bucket-star mode of near_dedup_lsh_buckets realized on the md5
+    lane family so DuckDB reproduces it: same bucket in ANY band
+    implies same cluster; keep each connected component's minimum
+    doc_id. The banding (4 bands x 4 rows here) IS the duplicate
+    decision — no pair-level Jaccard verification.
 
     The scale point this query pins: candidate volume is LINEAR. Per
-    (band, v0..v3) bucket the plan emits one STAR edge
-    (bucket-min -> member) per non-minimum member — a groupBy min +
-    join back, NO self-join — and a star has the same connected
-    components as the bucket's clique, so the output is provably
-    identical to the all-pairs form while a k-member bucket costs k-1
-    edges instead of k(k-1)/2 pairs. The two-decade curve (SCALE.md
-    round-7e) shows the pairs-emitting twin (q_minhash_lsh) tracking
-    quadratic clique growth while this form stays linear in docs.
+    bucket the plan emits one STAR edge (bucket-min -> member) per
+    non-minimum member — a groupBy min + join back, NO self-join —
+    and a star has the same connected components as the bucket's
+    clique, so the output is provably identical to the all-pairs form
+    while a k-member bucket costs k-1 edges instead of k(k-1)/2 pairs.
+    The two-decade curve (SCALE.md round-7e) shows the pairs-emitting
+    twin (q_minhash_lsh) tracking quadratic clique growth while this
+    form stays linear in docs.
 
-    Oracle: identical banding + per-bucket min + star edges in SQL,
-    then the same recursive-CTE reachability closure q_dedup_neardup
-    uses, proving the distributed CC against an independent fixpoint."""
+    Composition: md5_minhash_signatures, then the production steps
+    lsh_bucket_star_edges and keep_component_min (operators/dedup.py)
+    — q_neardup_buckets_minhash minus the Arrow signature kernel.
+    Oracle: banding on lane-value equality + per-bucket min + star
+    edges in SQL, then the same recursive-CTE reachability closure
+    q_dedup_neardup uses, proving the distributed CC against an
+    independent fixpoint."""
     docs = read_table(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
-    # persisted (tracked): bands feeds the per-bucket min AND the
-    # join-back; edges feeds the node projection AND the CC — without
-    # these the md5 signature aggregate recomputes 3x
-    bands = _persist(_minhash_band_rows(_minhash_sig(sh)))
-    keys = ["band", "v0", "v1", "v2", "v3"]
-    rep = (
-        bands.groupBy(*keys)
-        .agg(F.min("doc_id").alias("__rep"), F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .drop("__n")
-    )
+    # persisted (tracked): edges feed the node projection AND the CC
     edges = _persist(
-        bands.join(rep, keys)
-        .filter(F.col("doc_id") != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col("doc_id").alias("id_b"))
-        .distinct()
+        lsh_bucket_star_edges(md5_minhash_signatures(sh), "doc_id", 4, 4)
     )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
-
-    paired = (
-        edges.select(F.col("id_a").alias("doc_id"))
-        .unionByName(edges.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    comp = connected_components(
-        edges, paired, src="id_a", dst="id_b", id_col="doc_id"
-    )
-    drop = comp.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    return docs.join(drop, "doc_id", "left_anti").select(
+    return keep_component_min(docs, edges, "doc_id").select(
         "doc_id", "lang", "source"
     )
 
@@ -9418,50 +9287,27 @@ def q_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode — and it is LINEAR by the same star argument that makes the
     dedup linear: instead of verifying C(n,2) pairs per bucket, it
     verifies exactly the n-1 rep->member star edges the dedup
-    actually consumes, one exact-Jaccard check per edge (J >= 0.5 in
-    integer-ppm fixed point). The per-band true-edge fraction is the
-    measured operating point of the banding S-curve on this corpus —
-    the number a pipeline owner watches when tuning bands x rows.
-    Complements q_lsh_recall_audit (which measures the verified
-    path's RECALL and is deliberately quadratic, being exhaustive).
-    Full oracle: md5-lane signatures, identical star construction,
-    integer comparison and ppm division."""
+    actually consumes, one exact-Jaccard check per edge (J >= 0.5).
+    The per-band true-edge fraction is the measured operating point of
+    the banding S-curve on this corpus — the number a pipeline owner
+    watches when tuning bands x rows. Complements q_lsh_recall_audit
+    (which measures the verified path's RECALL and is deliberately
+    quadratic, being exhaustive). Composition: md5_minhash_signatures
+    -> lsh_band_keys -> lsh_bucket_stars -> jaccard_pairs. Full oracle:
+    md5-lane signatures, the same star construction, and an integer
+    comparison 2|A∩B| >= |A∪B| that the double ratio's >= 0.5 matches
+    exactly (0.5 is representable and the quotient is correctly
+    rounded)."""
     docs = read_table(spark, sf_dir, "documents")
     shs = docs.select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     ).transform(_persist)
-    sh = shs.select("doc_id", F.explode("s").alias("s"))
-    bands = _persist(_minhash_band_rows(_minhash_sig(sh)))
-    keys = ["band", "v0", "v1", "v2", "v3"]
-    rep = (
-        bands.groupBy(*keys)
-        .agg(F.min("doc_id").alias("__rep"), F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .drop("__n")
-    )
-    e = (
-        bands.join(rep, keys)
-        .filter(F.col("doc_id") != F.col("__rep"))
-        .select(
-            "band",
-            F.col("__rep").alias("id_a"),
-            F.col("doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa"))
-    sb = shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb"))
-    inter = F.size(F.array_intersect("__sa", "__sb")).cast("long")
-    uni = F.size(F.array_distinct(F.concat("__sa", "__sb"))).cast("long")
-    v = (
-        e.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "band",
-            F.when(inter * 1_000_000 >= 500_000 * uni, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("ok"),
-        )
+    sig = md5_minhash_signatures(shs.select("doc_id", F.explode("s").alias("s")))
+    # persisted: the band keys feed the per-bucket min AND the join-back
+    keys = _persist(lsh_band_keys(sig, 4, 4))
+    v = jaccard_pairs(lsh_bucket_stars(keys, "doc_id"), shs, "doc_id", "s").select(
+        "band",
+        F.when(F.col("jaccard") >= 0.5, F.lit(1)).otherwise(F.lit(0)).alias("ok"),
     )
     return (
         v.groupBy("band")
@@ -9478,13 +9324,14 @@ def q_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q_neardup_buckets_minhash", None)
 def q_neardup_buckets_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X7 verification-free bucket-star dedup, PRODUCTION path
-    (seeded-xxhash64 MinHash, 64 hashes x 16 bands — not DuckDB-
+    """X7 verification-free bucket-star dedup, PRODUCTION path (the
+    Arrow MinHash kernel, 64 hashes x 16 bands — not DuckDB-
     reproducible, hence rows-only; q_dedup_lsh_buckets is the
-    oracle-complete md5 twin with the identical composition). This is
-    the registry entry the sf10 scale curve measures: linear edge
-    volume through the pathological 100-near-sibling cliques where
-    the pair-emitting form goes quadratic."""
+    oracle-complete twin: the same band-key, star-edge and keep-min
+    steps over md5-lane signatures). This is the registry entry the
+    sf10 scale curve measures: linear edge volume through the
+    pathological 100-near-sibling cliques where the pair-emitting
+    form goes quadratic."""
     docs = read_table(spark, sf_dir, "documents")
     return near_dedup_lsh_buckets(docs).select("doc_id", "lang", "source")
 
@@ -9767,37 +9614,15 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = quality.join(keep, "doc_id", "semi").transform(_persist)
 
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-
     shs = _ensure_parallelism(exact, key="doc_id").select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     ).transform(_persist)
-    sh = shs.select("doc_id", F.explode("s").alias("s"))
-
-    sig = _persist(_minhash_sig(sh))
-    bands = _minhash_band_rows(sig)
-    cand = (
-        bands.select(F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-            ),
-            ["band", "v0", "v1", "v2", "v3"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    sig = _persist(
+        md5_minhash_signatures(shs.select("doc_id", F.explode("s").alias("s")))
     )
     drops = (
-        cand.join(shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa")), "id_a")
-        .join(shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb")), "id_b")
-        .filter(
-            F.size(F.array_intersect("__sa", "__sb")).cast("double")
-            / F.size(F.array_distinct(F.concat("__sa", "__sb"))).cast("double")
-            >= 0.5
-        )
+        jaccard_pairs(lsh_candidate_pairs(sig, "doc_id", 4, 4), shs, "doc_id", "s")
+        .filter(F.col("jaccard") >= 0.5)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -9956,12 +9781,6 @@ def q_corpus_funnel_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-7e. Full oracle including the recursive-CTE closure."""
     from breweries_data_pipeline_spark.functions.text import normalized_text
     from breweries_data_pipeline_spark.operators.corpus import hash_bucket
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
 
     raw = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     quality = raw.filter(F.size(tokens("text")) >= 20)
@@ -9977,34 +9796,12 @@ def q_corpus_funnel_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _ensure_parallelism(exact, key="doc_id").select(
         "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
-    # same tracked-persist discipline as q_dedup_lsh_buckets: bands
-    # and edges both fan out to two consumers
-    bands = _persist(_minhash_band_rows(_minhash_sig(sh)))
-    keys = ["band", "v0", "v1", "v2", "v3"]
-    rep = (
-        bands.groupBy(*keys)
-        .agg(F.min("doc_id").alias("__rep"), F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > 1)
-        .drop("__n")
-    )
+    # same tracked-persist discipline as q_dedup_lsh_buckets: the
+    # edges fan out to the node projection and the CC
     edges = _persist(
-        bands.join(rep, keys)
-        .filter(F.col("doc_id") != F.col("__rep"))
-        .select(F.col("__rep").alias("id_a"), F.col("doc_id").alias("id_b"))
-        .distinct()
+        lsh_bucket_star_edges(md5_minhash_signatures(sh), "doc_id", 4, 4)
     )
-    paired = (
-        edges.select(F.col("id_a").alias("doc_id"))
-        .unionByName(edges.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    comp = connected_components(
-        edges, paired, src="id_a", dst="id_b", id_col="doc_id"
-    )
-    drop = comp.filter(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    neardup = exact.join(drop, "doc_id", "left_anti").select("doc_id")
+    neardup = keep_component_min(exact, edges, "doc_id").select("doc_id")
     return _funnel_stage_counts(raw, quality, exact, neardup, hash_bucket)
 
 
@@ -10130,10 +9927,6 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm numerator is c_ab * U^2 * 1e6 — fits a long through ~1e5
     tokens; larger corpora lift to decimal(38,0)/HUGEINT, same
     arithmetic."""
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-
     docs = read_table(spark, sf_dir, "documents")
     toks = _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id").select(
         "doc_id", F.posexplode(tokens("text")).alias("idx0", "w")
@@ -10307,10 +10100,6 @@ def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical 16-bit block), exact bit_count verify on candidates
     only. The oracle joins all pairs — fine at oracle SF, and it
     proves the blocking loses nothing."""
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-
     docs = read_table(spark, sf_dir, "documents")
     toks = _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id").select(
         "doc_id", F.explode(tokens("text")).alias("w")
@@ -10659,7 +10448,6 @@ def _lsh_recall_audit_body(docs: DataFrame) -> DataFrame:
     exact prefix-filtered truth pairs vs the banded-LSH candidate set,
     reduced to one (n_true, n_cand, n_hit, recall_ppm) row."""
     from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
         prefix_filtered_similarity_join,
     )
 
@@ -10674,25 +10462,12 @@ def _lsh_recall_audit_body(docs: DataFrame) -> DataFrame:
         )
     )
 
-    shs = _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id").select(
-        "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
+    sh = _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id").select(
+        "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
-    sh = shs.select("doc_id", F.explode("s").alias("s"))
-    sig = _minhash_sig(sh)
-    bands = _minhash_band_rows(sig)
-    cand = (
-        bands.select(F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-            ),
-            ["band", "v0", "v1", "v2", "v3"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .transform(_persist)
-    )
+    cand = lsh_candidate_pairs(
+        md5_minhash_signatures(sh), "doc_id", 4, 4
+    ).transform(_persist)
     t = truth.agg(F.count("*").alias("n_true"))
     c = cand.agg(F.count("*").alias("n_cand"))
     h = truth.join(cand, ["id_a", "id_b"]).agg(F.count("*").alias("n_hit"))
@@ -10858,9 +10633,6 @@ def q_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup pass defensible to auditors. Plan reuses the
     q_minhash_lsh/q_corpus_funnel persisted-signature shape."""
     from breweries_data_pipeline_spark.functions.text import normalized_text
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     wfp = Window.partitionBy(F.md5(normalized_text("text")))
@@ -10874,35 +10646,12 @@ def q_dedup_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     shs = _ensure_parallelism(survivors, key="doc_id").select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
     ).transform(_persist)
-    sh = shs.select("doc_id", F.explode("s").alias("s"))
-    sig = _persist(_minhash_sig(sh))
-    bands = _minhash_band_rows(sig)
-    cand = (
-        bands.select(F.col("doc_id").alias("id_a"), "band", "v0", "v1", "v2", "v3")
-        .join(
-            bands.select(
-                F.col("doc_id").alias("id_b"), "band", "v0", "v1", "v2", "v3"
-            ),
-            ["band", "v0", "v1", "v2", "v3"],
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    sig = _persist(
+        md5_minhash_signatures(shs.select("doc_id", F.explode("s").alias("s")))
     )
     near_pairs = (
-        cand.join(
-            shs.select(F.col("doc_id").alias("id_a"), F.col("s").alias("__sa")),
-            "id_a",
-        )
-        .join(
-            shs.select(F.col("doc_id").alias("id_b"), F.col("s").alias("__sb")),
-            "id_b",
-        )
-        .filter(
-            F.size(F.array_intersect("__sa", "__sb")).cast("double")
-            / F.size(F.array_distinct(F.concat("__sa", "__sb"))).cast("double")
-            >= 0.5
-        )
+        jaccard_pairs(lsh_candidate_pairs(sig, "doc_id", 4, 4), shs, "doc_id", "s")
+        .filter(F.col("jaccard") >= 0.5)
         .select("id_a", "id_b")
     )
     near_surv = near_pairs.groupBy(F.col("id_b").alias("doc_id")).agg(
@@ -11174,10 +10923,6 @@ def q_split_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose with bloom_prune_join when the train side is huge);
     scalars attach declaratively."""
     from breweries_data_pipeline_spark.operators.corpus import hash_bucket
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-
     docs = _ensure_parallelism(
         read_table(spark, sf_dir, "documents").select("doc_id", "text"),
         key="doc_id",
@@ -11350,10 +11095,6 @@ def q_lsh_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     (30-50% exact-dup mass) this cuts the dominant hash cost by the
     dup factor; on the 10x replicated soak corpus it is ~10x
     (measured: 17.7s -> ~4s sf1)."""
-    from breweries_data_pipeline_spark.operators.dedup import (
-        _ensure_parallelism,
-    )
-
     docs = read_table(spark, sf_dir, "documents")
     uniq = (
         _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id")
@@ -11363,13 +11104,13 @@ def q_lsh_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("w"),
         )
     )
-    shs = uniq.select(
-        "doc_id", "w", F.array_distinct(shingles("text", 3)).alias("s")
+    # the multiplicity w is constant per doc, so it rides the
+    # signature's grouping key and the band keys
+    sh = uniq.select(
+        "doc_id", "w", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
-    sh = shs.select("doc_id", "w", F.explode("s").alias("s"))
-    sig = _minhash_sig(sh, carry=("w",))
-    bands = _minhash_band_rows(sig, carry=("w",))
-    buckets = bands.groupBy("band", "v0", "v1", "v2", "v3").agg(
+    sig = md5_minhash_signatures(sh)
+    buckets = lsh_band_keys(sig, 4, 4).groupBy("band", "band_hash").agg(
         F.sum("w").alias("k")
     )
     return buckets.groupBy("band").agg(
@@ -15628,15 +15369,14 @@ def q_winnow_dedup_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: ONE Arrow kernel pass; rep + df in a single count/min window
     over the 8-byte fp (one exchange, no join-back re-evaluating the
-    kernel lineage); CC is O(log diameter) rounds of bucketed
-    equi-joins (operators/graph.py). Oracle: DuckDB WITH RECURSIVE
+    kernel lineage); the keep-min is the LSH dedup's own
+    keep_component_min (operators/dedup.py): CC over the docs that
+    have an edge, O(log diameter) rounds of bucketed equi-joins, then
+    one anti-join. Oracle: DuckDB WITH RECURSIVE
     reachability over the same star edges proves the collapse is the
     true transitive closure, not just the pairing."""
     from breweries_data_pipeline_spark.functions.text import (
         winnow_fingerprints_udf,
-    )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
     )
     from pyspark.sql import Window as W
 
@@ -15659,14 +15399,8 @@ def q_winnow_dedup_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("rep").alias("id_a"), F.col("doc_id").alias("id_b"))
         .distinct()
     )
-    cc = connected_components(
-        edges, docs.select("doc_id"), id_col="doc_id",
-        label_col="cluster_id",
-    )
-    return (
-        cc.filter(F.col("cluster_id") == F.col("doc_id"))
-        .join(docs.select("doc_id", "lang", "source"), "doc_id")
-        .select("doc_id", "lang", "source")
+    return keep_component_min(
+        docs.select("doc_id", "lang", "source"), edges, "doc_id"
     )
 
 

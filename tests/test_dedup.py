@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from breweries_data_pipeline_spark.operators.dedup import (
     exact_dedup,
+    md5_minhash_signatures,
     minhash_signatures,
     near_dedup_minhash,
     simhash_near_dup_pairs,
@@ -45,6 +46,21 @@ def test_minhash_identical_docs_identical_signatures(spark):
     assert sigs[0] == sigs[1]
     assert sigs[0] != sigs[3]
     assert len(sigs[0]) == 64
+
+
+def test_md5_signature_skips_null_shingles(spark):
+    """A null shingle contributes no lanes: a doc whose shingles are
+    all null has no signature row, and a null beside real shingles
+    leaves the signature unchanged. Every column other than ``s``
+    groups the signature."""
+    sh = spark.createDataFrame(
+        [(1, 7, "a b c"), (1, 7, None), (2, 7, None), (3, 9, "a b c")],
+        "doc_id long, w long, s string",
+    )
+    sig = {(r.doc_id, r.w): r.minhash for r in md5_minhash_signatures(sh).collect()}
+    assert sorted(sig) == [(1, 7), (3, 9)]
+    assert sig[(1, 7)] == sig[(3, 9)]
+    assert len(sig[(1, 7)]) == 16
 
 
 def test_near_dup_pairs_find_the_near_dup(spark):
@@ -368,11 +384,9 @@ def test_bucket_star_survivors_equal_clique_survivors(spark, sf_dir):
     (quadratic self-join) must yield identical connected components,
     hence identical dedup survivors."""
     from breweries_data_pipeline_spark.operators.dedup import (
+        keep_component_min,
         lsh_bucket_star_edges,
         lsh_candidate_pairs,
-    )
-    from breweries_data_pipeline_spark.operators.graph import (
-        connected_components,
     )
     from breweries_data_pipeline_spark.sources import read_table
 
@@ -384,23 +398,8 @@ def test_bucket_star_survivors_equal_clique_survivors(spark, sf_dir):
     try:
 
         def survivors(edges):
-            paired = (
-                edges.select(F.col("id_a").alias("doc_id"))
-                .unionByName(edges.select(F.col("id_b").alias("doc_id")))
-                .distinct()
-            )
-            comp = connected_components(
-                edges, paired, src="id_a", dst="id_b", id_col="doc_id"
-            )
-            drop = comp.filter(
-                F.col("doc_id") != F.col("cluster_id")
-            ).select("doc_id")
-            return {
-                r.doc_id
-                for r in docs.join(drop, "doc_id", "left_anti")
-                .select("doc_id")
-                .collect()
-            }
+            kept = keep_component_min(docs, edges, "doc_id").select("doc_id")
+            return {r.doc_id for r in kept.collect()}
 
         star = survivors(lsh_bucket_star_edges(sigs, "doc_id", 16, 4))
         clique = survivors(lsh_candidate_pairs(sigs, "doc_id", 16, 4))

@@ -26,3 +26,45 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     df = fn(spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+# the registry's md5 twins of the LSH pipeline in operators/dedup.py
+LSH_TWINS = [
+    "q_bucket_audit",
+    "q_corpus_funnel",
+    "q_corpus_funnel_buckets",
+    "q_dedup_ledger",
+    "q_dedup_lsh_buckets",
+    "q_lsh_cost_model",
+    "q_lsh_recall_audit",
+    "q_lsh_recall_audit_sampled",
+    "q_minhash_lsh",
+]
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """Drop the dedup frequency-table broadcast hint and size-based
+    broadcasts, so the shared LSH steps run their sort-merge join
+    paths (the ones used at scale) on the small test tables; the
+    Spark session's settings are restored afterwards."""
+    overrides = {
+        "spark.breweries.dedup.broadcastFreq": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("name", LSH_TWINS)
+def test_lsh_twin_parity_without_broadcast(spark, sf_dir, no_broadcast, name):
+    fn, sql = REGISTRY[name]
+    result = compare(fn(spark, sf_dir), sql, sf_dir)
+    assert result["match"], f"{name}: {result['detail']}"

@@ -1,6 +1,7 @@
 """S10 + §2.7: YAML config loading and the config-driven pipeline
-runner, proven against the REFERENCE'S OWN yaml files
-(/root/reference/configs — read-only) and a breweries-shaped fixture.
+runner, proven against fixture configs in the reference pipeline's
+own YAML shapes (tests/fixtures/reference_configs) and a
+breweries-shaped stub API.
 """
 
 from __future__ import annotations
@@ -17,7 +18,9 @@ from breweries_data_pipeline_spark.pipeline import (
     run_pipeline,
 )
 
-REF_CONFIGS = "/root/reference/configs"
+REF_CONFIGS = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fixtures", "reference_configs"
+)
 
 # a paginated stub API: mixed-case/whitespace strings, a duplicate id,
 # a null name — exercising every silver cleaning rule
@@ -256,3 +259,44 @@ def test_pipeline_failure_metric_and_on_failure_hook(spark, tmp_path):
     assert alerts[0]["stage"] == "fetch_data_bronze"
     assert alerts[0]["status"] == "failed"
     assert "api unreachable" in alerts[0]["error"]
+
+
+def test_tied_versions_give_the_same_silver_in_either_page_order(spark, tmp_path):
+    """A declared dedup order that ties (two versions of one id with
+    the same updated_at) is completed with the remaining schema
+    columns, so the silver row kept does not depend on the order the
+    API served the pages in."""
+    tied = [
+        {"id": "b1", "name": "Beta Brew", "brewery_type": "micro",
+         "city": "Austin", "state": "TX", "country": "US",
+         "updated_at": "2025-01-01T00:00:00Z"},
+        {"id": "b2", "name": "Gamma", "brewery_type": "nano",
+         "city": "Dallas", "state": "TX", "country": "US",
+         "updated_at": "2025-01-01T00:00:00Z"},
+    ]
+    other = [
+        {"id": "b1", "name": "Alpha Brew", "brewery_type": "brewpub",
+         "city": "Austin", "state": "TX", "country": "US",
+         "updated_at": "2025-01-01T00:00:00Z"},
+    ]
+
+    def silver_rows(pages, name):
+        cfg = load_pipeline_config(f"{REF_CONFIGS}/breweries_ingestion_pipeline.yml")
+        cfg.stages[1].parameters["normalize"]["dedup_order_by"] = ["updated_at"]
+        results = run_pipeline(
+            spark,
+            cfg,
+            variables={"ds": "2025-01-01"},
+            path_rewrites={
+                "/opt/airflow/data": str(tmp_path / name),
+                "/opt/airflow/configs": REF_CONFIGS,
+            },
+            fetch_page=lambda page, per_page: pages[page - 1] if page <= len(pages) else [],
+        )
+        silver = spark.read.parquet(results["transform_silver"]["output_path"])
+        return sorted(tuple(r) for r in silver.select(sorted(silver.columns)).collect())
+
+    first = silver_rows([tied, other], "a")
+    second = silver_rows([other, tied], "b")
+    assert first == second
+    assert len(first) == 2

@@ -585,3 +585,57 @@ def test_bitext_mine_reuses_persisted_candidates(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 3, plan[:1500]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+# Plan budget of the LSH dedup compositions at sf0.001: node counts
+# over every SQL execution a query triggers (connected components runs
+# several), with the cached subplans counted at each read site. Planned
+# with AQE off so the counts are the static plan shape; AQE's runtime
+# replanning depends on which stages finish first.
+_LSH_PLAN_BUDGET = {
+    "q_neardup_buckets_minhash": {
+        "Exchange": 42, "BroadcastExchange": 14, "BroadcastHashJoin": 15,
+        "SortMergeJoin": 4, "ArrowEvalPython": 16, "InMemoryTableScan": 27,
+    },
+    "q_dedup_lsh_buckets": {
+        "Exchange": 50, "BroadcastExchange": 30, "BroadcastHashJoin": 31,
+        "SortMergeJoin": 4, "ArrowEvalPython": 0, "InMemoryTableScan": 27,
+    },
+    "q_minhash_lsh": {
+        "Exchange": 7, "BroadcastExchange": 4, "BroadcastHashJoin": 5,
+        "SortMergeJoin": 0, "ArrowEvalPython": 0, "InMemoryTableScan": 7,
+    },
+}
+
+
+@pytest.mark.parametrize("name", sorted(_LSH_PLAN_BUDGET))
+def test_lsh_dedup_plan_budget(spark, sf_dir, name):
+    from breweries_data_pipeline_spark.queries import release_caches
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        bus.waitUntilEmpty()
+        lst = store.executionsList()
+        return {lst.apply(i).executionId() for i in range(lst.size())}
+
+    budget = _LSH_PLAN_BUDGET[name]
+    release_caches()
+    spark.catalog.clearCache()
+    before = execution_ids()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        REGISTRY[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    counts = dict.fromkeys(budget, 0)
+    for eid in sorted(execution_ids() - before):
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i).name()
+            if node in counts:
+                counts[node] += 1
+    release_caches()
+    assert counts == budget
