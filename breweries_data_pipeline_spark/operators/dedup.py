@@ -710,27 +710,18 @@ def simhash64(
     return pre.select(F.col(id_col), sh(F.col("_th")).alias("simhash"))
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """(id_a, id_b, hamming) pairs with hamming(simhash) <= k, k <= 3.
-    Pigeonhole blocking: split 64 bits into 4 blocks of 16; distance
-    <= 3 implies at least one identical block, so candidates come from
-    ONE self equi-join on the exploded (block index, block value) —
-    bucketed, never all-pairs. The earlier 4-separate-joins + union
-    spelling planned 4 join stages; the exploded form is one, the
-    hamming verify runs INSIDE the join projection so the filter cuts
-    volume BEFORE the distinct exchange, and the distinct moves
-    (id_a, id_b, hamming) rows instead of two full signatures
-    (verified row-identical; ~12% off the sf1 wall of the md5 twin)."""
+def simhash_pairs(sigs: DataFrame, id_col: str = "doc_id", max_hamming: int = 3) -> DataFrame:
+    """(id_a, id_b, hamming) pairs of a bigint ``simhash`` column with
+    hamming <= max_hamming <= 3. Pigeonhole blocking: split the 64 bits
+    into 4 blocks of 16; distance <= 3 implies at least one identical
+    block, so candidates come from ONE self equi-join on the exploded
+    (block index, block value) — bucketed, never all-pairs. The
+    Hamming verify runs inside the join projection, so the filter cuts
+    volume before the distinct exchange, which then moves (id_a, id_b,
+    hamming) rows instead of two signatures. ``sigs`` is read once per
+    join side: persist it when it is costly to recompute."""
     if max_hamming > 3:
         raise ValueError("4-block pigeonhole blocking is exact only for max_hamming <= 3")
-    # persisted: the block self-join would otherwise recompute the
-    # explode+64-way aggregate once per side
-    sigs = track_persist(simhash64(df, text_col, id_col))
     mask = F.lit(0xFFFF).cast("long")
     bl = sigs.select(
         F.col(id_col),
@@ -763,6 +754,20 @@ def simhash_near_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
+
+
+def simhash_near_dup_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 3,
+) -> DataFrame:
+    """(id_a, id_b, hamming) pairs with hamming(simhash64) <= k, k <= 3
+    (blocking and verify: :func:`simhash_pairs`)."""
+    # persisted: the block self-join would otherwise recompute the
+    # token hashing and signature kernel once per side
+    sigs = track_persist(simhash64(df, text_col, id_col))
+    return simhash_pairs(sigs, id_col, max_hamming)
 
 
 def dedup_incremental(

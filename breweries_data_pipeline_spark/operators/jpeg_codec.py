@@ -198,18 +198,6 @@ def _ycbcr_to_rgb(px: np.ndarray) -> np.ndarray:
     return np.stack([r, g, b], axis=-1)
 
 
-def _blocks(plane: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """Edge-replicate a plane to 8-multiples and cut 8x8 blocks in
-    raster order. Returns (blocks[n,8,8], blocks_h, blocks_w)."""
-    h, w = plane.shape
-    bh, bw = -(-h // 8), -(-w // 8)
-    padded = np.pad(plane, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge")
-    blocks = (
-        padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-    )
-    return blocks, bh, bw
-
-
 _SAMPLING = {
     # name -> (h, v) per YCbCr component; grayscale is always (1,1)
     "4:4:4": [(1, 1), (1, 1), (1, 1)],

@@ -483,23 +483,6 @@ def ivf_topk(
     ).withColumn("rank", F.col("rank").cast("long"))
 
 
-def hyperplane_signature(vec_col: str | Column, n_planes: int = N_PLANES) -> list[Column]:
-    """One sign-bit column per hyperplane: dot(vec, plane) > 0.
-    Each plane is a constant array literal zipped against the vector —
-    Catalyst constant-folds the array, so the per-row work is just the
-    multiply-add chain, all JVM-side (no UDF, no shuffle)."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bits = []
-    for j in range(n_planes):
-        plane_arr = F.array(*[F.lit(c) for c in HYPERPLANES[j]])
-        prods = F.zip_with(
-            v, F.slice(plane_arr, 1, F.size(v)), lambda x, y: x.cast("double") * y
-        )
-        dot = F.aggregate(prods, F.lit(0.0), lambda acc, val: acc + val)
-        bits.append((dot > 0).cast("int").alias(f"__bit{j}"))
-    return bits
-
-
 def hyperplane_bands(vec_col: str | Column, n_planes: int = N_PLANES, bands: int = 8) -> Column:
     """Vectorized LSH banding: all ``n_planes`` sign bits in ONE numpy
     matmul per Arrow batch, packed into ``bands`` integer band values
@@ -538,18 +521,6 @@ def hyperplane_bands(vec_col: str | Column, n_planes: int = N_PLANES, bands: int
 
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return _bands(v)
-
-
-def _band_cols(n_planes: int, bands: int) -> list[Column]:
-    """Pack adjacent sign bits into per-band integer values."""
-    per = n_planes // bands
-    cols = []
-    for b in range(bands):
-        val = F.lit(0)
-        for i in range(per):
-            val = val + F.col(f"__bit{b * per + i}") * (1 << i)
-        cols.append(val.alias(f"__band{b}"))
-    return cols
 
 
 def ann_topk(

@@ -11,9 +11,14 @@ Differences from the reference's Airflow execution model, on purpose:
 - one process, one session: stages hand DataFrames through the
   filesystem only at declared layer boundaries, not because each task
   is a separate Python process.
-- each stage runs exactly one Spark action (the write); the
+- each stage runs at most one Spark action (the write); the
   reference's repeated ``df.count()`` re-executions
   (breweries_transform_silver_notebook.py:81,112) are dropped.
+- Bronze is one JSONL file whose records carry the ``ingestion_date``
+  stamp from the moment they are written, so the ingest stage runs no
+  Spark job; the reference re-reads the raw file with schema
+  inference and rewrites it as a second, stamped JSON copy
+  (breweries_fetch_bronze_notebook.py:96-106).
 - unknown quality-rule types raise instead of vacuously passing
   (reference breweries_data_quality_gold.py:32-33).
 
@@ -170,18 +175,13 @@ class PathResolver:
         self.rewrites = sorted(
             (rewrites or {}).items(), key=lambda kv: -len(kv[0])
         )
-        # exact-path redirects registered at runtime (e.g. a transform
-        # stage reading an ingest stage's enriched output instead of
-        # the raw file the config names)
-        self.overrides: dict[str, str] = {}
 
     def resolve(self, path: str) -> str:
         path = _TEMPLATE_RE.sub(lambda m: str(self.variables.get(m.group(1), m.group(0))), path)
         for prefix, repl in self.rewrites:
             if path.startswith(prefix):
-                path = repl + path[len(prefix):]
-                break
-        return self.overrides.get(path, path)
+                return repl + path[len(prefix):]
+        return path
 
 
 def _string_columns(schema: T.StructType) -> list[str]:
@@ -194,10 +194,12 @@ def run_ingest_stage(
     paths: PathResolver,
     fetch_page: FetchPage,
 ) -> dict[str, Any]:
-    """Bronze: paginated fetch -> atomic JSONL -> schema-inferred read
-    -> ingestion stamp -> enriched JSONL (reference
-    breweries_fetch_bronze_notebook.py:113-130). The transport is
-    injected — no network inside the engine."""
+    """Bronze: paginated fetch -> JSONL stamped with ``ingestion_date``
+    (``ds``) as each record is serialised -> atomic publish (reference
+    breweries_fetch_bronze_notebook.py:113-130, which re-reads the
+    file with Spark only to add the stamp). Runs no Spark job; silver
+    reads the published file. The transport is injected — no network
+    inside the engine."""
     p = stage.parameters
     pag = p.get("pagination", {}) or {}
     records = fetch_all(
@@ -207,22 +209,18 @@ def run_ingest_stage(
         retries=p.get("retries", 3),
         backoff=p.get("backoff_seconds", 2.0),
     )
+    stamp = (
+        {"ingestion_date": paths.variables.get("ds")}
+        if p.get("add_ingestion_date", True)
+        else {}
+    )
     raw_path = paths.resolve(p["target_path"])
     os.makedirs(os.path.dirname(raw_path) or ".", exist_ok=True)
-    import json as _json
-
     tmp = raw_path + ".tmp"
     with open(tmp, "w") as f:
         for r in records:
-            f.write(_json.dumps(r, sort_keys=True) + "\n")
+            f.write(json.dumps({**r, **stamp}, sort_keys=True) + "\n")
     os.rename(tmp, raw_path)  # atomic publish (reference S2)
-
-    df = spark.read.json(raw_path)  # S3: schema inference on raw
-    if p.get("add_ingestion_date", True):
-        df = df.withColumn("ingestion_date", F.lit(paths.variables.get("ds")))
-        out_dir = raw_path + ".enriched"
-        df.write.mode("overwrite").json(out_dir)
-        return {"raw_path": raw_path, "enriched_path": out_dir, "records": len(records)}
     return {"raw_path": raw_path, "records": len(records)}
 
 
@@ -422,10 +420,6 @@ def run_pipeline(
                         f"stage {stage.task_id!r} is an ingest stage; pass fetch_page"
                     )
                 res = run_ingest_stage(spark, stage, paths, fetch_page)
-                if "enriched_path" in res:
-                    # downstream stages that name the raw file read
-                    # the stamped records instead
-                    paths.overrides[res["raw_path"]] = res["enriched_path"]
             else:
                 res = _RUNNERS[stage.kind](spark, stage, paths)
         except Exception as e:

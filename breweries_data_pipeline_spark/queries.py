@@ -54,6 +54,7 @@ from breweries_data_pipeline_spark.operators.dedup import (
     near_dedup_lsh_buckets,
     near_dedup_minhash,
     simhash_near_dup_pairs,
+    simhash_pairs,
     verified_near_dup_pairs,
 )
 from breweries_data_pipeline_spark.operators.joins import anti_join, dim_join, semi_join
@@ -10096,10 +10097,10 @@ def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     all DuckDB-reproducible — the auditable twin of q_simhash_pairs
     (xxhash64, rows-only). Plan identical to the production path: one
     distinct-token explode, ONE 64-column signed-bit-sum aggregate
-    (map-side combined), 4 block equi-joins (hamming <= 3 implies one
-    identical 16-bit block), exact bit_count verify on candidates
-    only. The oracle joins all pairs — fine at oracle SF, and it
-    proves the blocking loses nothing."""
+    (map-side combined), then the operator's pigeonhole blocking and
+    exact bit_count verify (``simhash_pairs``). The oracle joins all
+    pairs — fine at oracle SF, and it proves the blocking loses
+    nothing."""
     docs = read_table(spark, sf_dir, "documents")
     toks = _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id").select(
         "doc_id", F.explode(tokens("text")).alias("w")
@@ -10130,54 +10131,14 @@ def q_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0).cast("long"))
         return out
 
+    # the two 32-bit halves packed as lo | (hi << 32): the packed
+    # value's four 16-bit blocks and XOR popcount are exactly those of
+    # the (lo, hi) pair, so the operator's blocking and verify apply
     sigs = bitsums.select(
-        "doc_id", assemble("lo").alias("lo"), assemble("hi").alias("hi")
-    ).transform(_persist)
-    # ONE self equi-join on the exploded (block index, block value)
-    # instead of 4 joins + union (r12: one join stage; the hamming
-    # verify runs inside the join projection so the <= 3 filter cuts
-    # volume BEFORE the distinct exchange, and the distinct moves
-    # 20-byte (id_a, id_b, hamming) rows instead of two signatures —
-    # verified row-identical, ~12% off the sf1 wall, which is OUTPUT-
-    # bound there: the replica corpus emits 27M true pairs)
-    mask = F.lit(0xFFFF).cast("long")
-    bl = sigs.select(
         "doc_id",
-        "lo",
-        "hi",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("j"), F.col("lo").bitwiseAND(mask).alias("blk")),
-                F.struct(F.lit(1).alias("j"), F.shiftright("lo", 16).bitwiseAND(mask).alias("blk")),
-                F.struct(F.lit(2).alias("j"), F.col("hi").bitwiseAND(mask).alias("blk")),
-                F.struct(F.lit(3).alias("j"), F.shiftright("hi", 16).bitwiseAND(mask).alias("blk")),
-            )
-        ).alias("__b"),
-    ).select(
-        "doc_id", "lo", "hi",
-        F.col("__b.j").alias("j"), F.col("__b.blk").alias("blk"),
-    )
-    a = bl.alias("a")
-    b = bl.alias("b")
-    ham = (
-        F.bit_count(F.col("a.lo").bitwiseXOR(F.col("b.lo")))
-        + F.bit_count(F.col("a.hi").bitwiseXOR(F.col("b.hi")))
-    ).cast("int")
-    return (
-        a.join(
-            b,
-            (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 3)
-        .distinct()
-    )
+        assemble("lo").bitwiseOR(F.shiftleft(assemble("hi"), 32)).alias("simhash"),
+    ).transform(_persist)
+    return simhash_pairs(sigs, "doc_id", 3)
 
 
 @register(

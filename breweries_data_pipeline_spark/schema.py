@@ -82,10 +82,3 @@ def build_struct_type(columns: list[dict[str, Any]]) -> T.StructType:
             )
         )
     return T.StructType(fields)
-
-
-def cast_map(columns: list[dict[str, Any]] | dict[str, str]) -> dict[str, T.DataType]:
-    """Metadata -> {column_name: DataType} for explicit cast pipelines."""
-    if isinstance(columns, dict):
-        return {name: parse_type(t)[0] for name, t in columns.items()}
-    return {c["name"]: parse_type(c["type"])[0] for c in columns}

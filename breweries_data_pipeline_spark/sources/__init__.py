@@ -22,6 +22,3 @@ from breweries_data_pipeline_spark.sources.writers import (  # noqa: F401
     write_quality_report,
     write_zordered,
 )
-from breweries_data_pipeline_spark.sources.paged_datasource import (  # noqa: F401
-    PagedJsonDataSource,
-)

@@ -12,6 +12,11 @@ reference that cannot scale, so this engine provides two modes:
   fan the page range out over executors with ``mapInPandas`` so a
   1000-executor cluster pulls 1000 pages concurrently.
 
+These two modes are the whole of S1: both share the ``FetchPage``
+transport and the retry policy. The pipeline's ingest stage writes
+``fetch_all``'s records straight to the Bronze JSONL, and Spark first
+touches them when Silver reads that file under the enforced schema.
+
 The HTTP transport is injectable (``fetch_page``) so tests use a stub
 and no network access is required.
 """
@@ -114,72 +119,3 @@ def fetch_distributed(
     pages = spark.range(n_pages).repartition(n_tasks)
     return pages.mapInPandas(fetch_partition, schema="json string")
 
-
-def records_to_dataframe(spark: SparkSession, records: list[dict[str, Any]]) -> DataFrame:
-    """Driver records -> DataFrame with JSON-datasource schema inference
-    (same semantics as reading the JSONL file back, reference
-    breweries_fetch_bronze_notebook.py:96-98).
-
-    RDD-free (Spark-Connect-compatible): inference runs eagerly through
-    the JSON datasource — the same merge/widening/PERMISSIVE semantics
-    as reading the JSONL file back — and the rows are then parsed
-    in-plan with ``from_json`` under the inferred schema. No lazy plan
-    ever depends on a temp file.
-
-    The inference scan prefers a driver-local temp file (one syscall,
-    works wherever driver and cluster share a filesystem — local mode,
-    tests). When they do NOT (remote Connect server, HDFS/S3
-    defaultFS), that read fails with PATH_NOT_FOUND and inference
-    falls back to a cluster-side round-trip: ship the lines via Arrow
-    (``createDataFrame``), ``write.text`` under the session's
-    warehouse dir — resolved on the CLUSTER's filesystem — and
-    ``read.json`` it back eagerly, then best-effort delete.
-    """
-    from pyspark.sql import functions as F
-
-    lines = [json.dumps(r, sort_keys=True) for r in records]
-    if not lines:
-        # an empty fetch (API returned no rows) must yield the same
-        # thing reading back an empty JSONL would: a 0-row, 0-column
-        # frame — not a createDataFrame inference crash
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame([], T.StructType([]))
-    ds = spark.createDataFrame([(s,) for s in lines], ["json"])
-    schema = _infer_json_schema(spark, ds, lines)
-    return ds.select(F.from_json("json", schema).alias("r")).select("r.*")
-
-
-def _infer_json_schema(spark: SparkSession, ds: DataFrame, lines: list[str]):
-    import os
-    import posixpath
-    import tempfile
-    import uuid
-
-    fd, tmp = tempfile.mkstemp(suffix=".jsonl")
-    try:
-        with os.fdopen(fd, "w") as f:
-            f.write("\n".join(lines))
-        return spark.read.json(tmp).schema  # eager: inference scans now
-    except Exception:  # noqa: BLE001 — driver /tmp invisible to the
-        pass  # cluster (remote Connect / HDFS defaultFS): fall through
-    finally:
-        os.unlink(tmp)
-    tmpdir = posixpath.join(
-        spark.conf.get("spark.sql.warehouse.dir"),
-        f"_records_schema_tmp_{uuid.uuid4().hex}",
-    )
-    ds.write.mode("overwrite").text(tmpdir)
-    try:
-        return spark.read.json(tmpdir).schema
-    finally:
-        try:  # classic sessions can delete via the JVM Hadoop FS; a
-            # Connect client cannot — the orphaned dir is tiny and
-            # name-spaced, so leaving it beats failing the read
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(tmpdir)
-            jpath.getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            ).delete(jpath, True)
-        except Exception:  # noqa: BLE001
-            pass

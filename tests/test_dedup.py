@@ -4,6 +4,7 @@ all-pairs crossJoin."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from breweries_data_pipeline_spark.operators.dedup import (
@@ -12,6 +13,7 @@ from breweries_data_pipeline_spark.operators.dedup import (
     minhash_signatures,
     near_dedup_minhash,
     simhash_near_dup_pairs,
+    simhash_pairs,
     verified_near_dup_pairs,
 )
 
@@ -87,6 +89,45 @@ def test_simhash_pairs_exact_dups_zero_distance(spark):
     }
     assert pairs.get((0, 1)) == 0
     assert not any(3 in p for p in pairs)
+
+
+def test_simhash_pairs_on_packed_halves_match_all_pairs(spark):
+    """Two 32-bit halves packed as lo | (hi << 32) keep their blocks
+    and XOR popcount, so the blocked pairs equal an all-pairs Hamming
+    scan over the (lo, hi) form."""
+    import random
+
+    rng = random.Random(7)
+    halves = []
+    for i in range(60):
+        lo, hi = rng.getrandbits(32), rng.getrandbits(32)
+        if i % 3:  # near copies of an earlier row, 0-4 flipped bits
+            lo, hi = halves[rng.randrange(len(halves))][1:]
+            for bit in rng.sample(range(64), rng.randrange(5)):
+                if bit < 32:
+                    lo ^= 1 << bit
+                else:
+                    hi ^= 1 << (bit - 32)
+        halves.append((i, lo, hi))
+    want = {
+        (a, b): bin(la ^ lb).count("1") + bin(ha ^ hb).count("1")
+        for a, la, ha in halves
+        for b, lb, hb in halves
+        if a < b and bin(la ^ lb).count("1") + bin(ha ^ hb).count("1") <= 3
+    }
+    sigs = spark.createDataFrame(halves, "doc_id long, lo long, hi long").select(
+        "doc_id",
+        F.col("lo").bitwiseOR(F.shiftleft("hi", 32)).alias("simhash"),
+    )
+    got = {(r.id_a, r.id_b): r.hamming for r in simhash_pairs(sigs).collect()}
+    assert got == want
+    assert any(h == 3 for h in want.values())
+
+
+def test_simhash_pairs_rejects_hamming_above_block_bound(spark):
+    sigs = spark.createDataFrame([(1, 0)], "doc_id long, simhash long")
+    with pytest.raises(ValueError, match="max_hamming <= 3"):
+        simhash_pairs(sigs, max_hamming=4)
 
 
 def test_lsh_plan_has_no_cartesian_product(spark, sf_dir):

@@ -300,3 +300,63 @@ def test_tied_versions_give_the_same_silver_in_either_page_order(spark, tmp_path
     second = silver_rows([other, tied], "b")
     assert first == second
     assert len(first) == 2
+
+
+def _run_ingest_only(spark, tmp_path, add_ingestion_date=True):
+    """Run just the reference config's Bronze stage; return the stage
+    result and the ids of the Spark jobs it launched."""
+    from breweries_data_pipeline_spark.pipeline import PathResolver, run_ingest_stage
+
+    cfg = load_pipeline_config(f"{REF_CONFIGS}/breweries_ingestion_pipeline.yml")
+    stage = cfg.stages[0]
+    stage.parameters["add_ingestion_date"] = add_ingestion_date
+    paths = PathResolver({"ds": "2025-01-01"}, {"/opt/airflow/data": str(tmp_path)})
+    sc = spark.sparkContext
+    group = f"bronze-{tmp_path.name}"
+    sc.setJobGroup(group, "ingest stage only")
+    try:
+        res = run_ingest_stage(spark, stage, paths, stub_fetch_page)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return res, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_stage_runs_no_spark_job_and_writes_one_file(spark, tmp_path):
+    """Bronze is one stamped JSONL file, written without Spark."""
+    res, jobs = _run_ingest_only(spark, tmp_path)
+    assert jobs == []
+    bronze_dir = os.path.dirname(res["raw_path"])
+    assert os.listdir(bronze_dir) == [os.path.basename(res["raw_path"])]
+    with open(res["raw_path"]) as f:
+        lines = [json.loads(line) for line in f]
+    assert res["records"] == len(lines) == 5
+    assert all(r["ingestion_date"] == "2025-01-01" for r in lines)
+
+
+def test_ingest_stage_without_stamp_writes_no_ingestion_date(spark, tmp_path):
+    res, jobs = _run_ingest_only(spark, tmp_path, add_ingestion_date=False)
+    assert jobs == []
+    with open(res["raw_path"]) as f:
+        lines = [json.loads(line) for line in f]
+    assert len(lines) == 5
+    assert not any("ingestion_date" in r for r in lines)
+
+
+def test_silver_rows_carry_the_bronze_ingestion_date(spark, tmp_path):
+    import datetime
+
+    cfg = load_pipeline_config(f"{REF_CONFIGS}/breweries_ingestion_pipeline.yml")
+    results = run_pipeline(
+        spark,
+        cfg,
+        variables={"ds": "2025-01-01"},
+        path_rewrites={
+            "/opt/airflow/data": str(tmp_path / "data"),
+            "/opt/airflow/configs": REF_CONFIGS,
+        },
+        fetch_page=stub_fetch_page,
+    )
+    silver = spark.read.parquet(results["transform_silver"]["output_path"])
+    dates = [r.ingestion_date for r in silver.select("ingestion_date").collect()]
+    assert len(dates) == 3
+    assert set(dates) == {datetime.date(2025, 1, 1)}

@@ -20,7 +20,6 @@ from breweries_data_pipeline_spark.sources.rest_api import (
     RetryableFetchError,
     fetch_all,
     fetch_distributed,
-    records_to_dataframe,
 )
 from breweries_data_pipeline_spark.sources.writers import (
     write_parquet,
@@ -95,33 +94,6 @@ def test_fetch_distributed_pulls_all_pages(spark):
     assert len(rows) == 12
     parsed = {json.loads(r.json)["id"] for r in rows}
     assert parsed == {f"p{p}r{i}" for p in range(1, 5) for i in range(3)}
-
-
-def test_records_to_dataframe_infers_schema(spark):
-    df = records_to_dataframe(spark, [{"a": 1, "b": "x"}, {"a": 2, "b": None}])
-    assert dict(df.dtypes) == {"a": "bigint", "b": "string"}
-    assert df.count() == 2
-
-
-def test_records_to_dataframe_cluster_side_fallback(spark, monkeypatch):
-    """When the driver-local temp file is unreadable by the cluster
-    (remote Connect server, HDFS defaultFS), schema inference must
-    fall back to the warehouse-dir round-trip and still return the
-    datasource-inferred schema."""
-    import os as _os
-
-    real_fdopen = _os.fdopen
-
-    def broken_fdopen(*a, **kw):
-        raise OSError("simulated: driver /tmp invisible to cluster")
-
-    monkeypatch.setattr(_os, "fdopen", broken_fdopen)
-    try:
-        df = records_to_dataframe(spark, [{"a": 1, "b": "x"}, {"a": 2}])
-    finally:
-        monkeypatch.setattr(_os, "fdopen", real_fdopen)
-    assert dict(df.dtypes) == {"a": "bigint", "b": "string"}
-    assert df.count() == 2
 
 
 # ---------------------------------------------------------------- schema
@@ -702,76 +674,6 @@ def test_prefix_filtered_similarity_join_complete_on_frequent_overlap(spark):
     assert (1, 2) in got  # the planted frequent-overlap pair survived
 
 
-class TestPagedJsonDataSource:
-    """Spark 4 Python DataSource form of the reference's paginated
-    ingest (S1): one InputPartition per page, task-parallel fetch,
-    PERMISSIVE field projection."""
-
-    def _write_pages(self, tmp_path, n_pages=5, per_page=7):
-        import json as _json
-
-        d = tmp_path / "pages"
-        d.mkdir()
-        rid = 0
-        for p in range(n_pages):
-            lines = []
-            for _ in range(per_page):
-                lines.append(_json.dumps({"id": rid, "name": f"rec{rid}"}))
-                rid += 1
-            (d / f"page-{p}.json").write_text("\n".join(lines) + "\n")
-        return str(d)
-
-    def test_reads_all_pages_in_parallel_partitions(self, spark, tmp_path):
-        from breweries_data_pipeline_spark.sources import PagedJsonDataSource
-
-        spark.dataSource.register(PagedJsonDataSource)
-        path = self._write_pages(tmp_path, n_pages=5, per_page=7)
-        df = (
-            spark.read.format("paged_json")
-            .schema("id long, name string")
-            .option("path", path)
-            .load()
-        )
-        assert df.count() == 35
-        assert df.rdd.getNumPartitions() == 5  # one task per page
-        assert {r.id for r in df.collect()} == set(range(35))
-
-    def test_permissive_missing_fields_are_null(self, spark, tmp_path):
-        import json as _json
-
-        from breweries_data_pipeline_spark.sources import PagedJsonDataSource
-
-        spark.dataSource.register(PagedJsonDataSource)
-        d = tmp_path / "pages2"
-        d.mkdir()
-        (d / "page-0.json").write_text(
-            _json.dumps({"id": 1}) + "\n" + _json.dumps({"name": "x", "junk": 9})
-        )
-        df = (
-            spark.read.format("paged_json")
-            .schema("id long, name string")
-            .option("path", str(d))
-            .load()
-        )
-        rows = sorted(df.collect(), key=lambda r: (r.id is None, r.id))
-        assert rows[0].id == 1 and rows[0].name is None
-        assert rows[1].id is None and rows[1].name == "x"
-
-    def test_empty_directory_yields_empty_frame(self, spark, tmp_path):
-        from breweries_data_pipeline_spark.sources import PagedJsonDataSource
-
-        spark.dataSource.register(PagedJsonDataSource)
-        d = tmp_path / "pages3"
-        d.mkdir()
-        df = (
-            spark.read.format("paged_json")
-            .schema("id long, name string")
-            .option("path", str(d))
-            .load()
-        )
-        assert df.count() == 0
-
-
 class TestBenchRecheck:
     """The bench's soak self-audit (_recheck_outliers) — pure harness
     logic, tested without Spark by stubbing the subprocess."""
@@ -1308,43 +1210,6 @@ def test_cdc_kernel_matches_spec_and_is_shift_robust(spark, sf_dir):
     f0, f1 = cdc_chunk_fps(text), cdc_chunk_fps("Z" + text)
     assert f0[1:] == f1[1:]          # every chunk after the first intact
     assert f0[0] != f1[0]
-
-
-def test_records_to_dataframe_empty_fetch_yields_empty_frame(spark):
-    """An empty API fetch day must behave like reading back an empty
-    JSONL: 0 rows, 0 columns — not a createDataFrame inference crash."""
-    df = records_to_dataframe(spark, [])
-    assert df.columns == []
-    assert df.count() == 0
-
-
-class TestPagedDataSourcePermissive:
-    def test_malformed_line_yields_corrupt_record_row(self, spark, tmp_path):
-        """A malformed page line must become an all-null row (raw text
-        in _corrupt_record when declared), not kill the ingest task —
-        the same PERMISSIVE posture as spark.read.json."""
-        import json as _json
-
-        from breweries_data_pipeline_spark.sources import PagedJsonDataSource
-
-        spark.dataSource.register(PagedJsonDataSource)
-        d = tmp_path / "pages_bad"
-        d.mkdir()
-        (d / "page-0.json").write_text(
-            _json.dumps({"id": 1, "name": "ok"}) + "\n"
-            + '{"id": 2, "name": br'  # truncated mid-object
-            + "\n[1, 2, 3]\n"  # valid JSON, but not an object
-        )
-        df = (
-            spark.read.format("paged_json")
-            .schema("id long, name string, _corrupt_record string")
-            .option("path", str(d))
-            .load()
-        )
-        rows = sorted(df.collect(), key=lambda r: (r.id is None, r.id or 0))
-        assert (rows[0].id, rows[0].name, rows[0]._corrupt_record) == (1, "ok", None)
-        assert rows[1].id is None and rows[1]._corrupt_record == '{"id": 2, "name": br'
-        assert rows[2].id is None and rows[2]._corrupt_record == "[1, 2, 3]"
 
 
 def test_bpe_learn_merges_closed_form(spark):

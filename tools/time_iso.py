@@ -61,7 +61,9 @@ def main() -> None:
         os.path.join(os.path.dirname(args.sf_dir.rstrip("/")), "sf0.1"),
         args.sf_dir,
     ]
-    sf01 = next(d for d in candidates if d and os.path.isdir(d))
+    sf01 = next((d for d in candidates if d and os.path.isdir(d)), None)
+    if sf01 is None:
+        raise SystemExit(f"no probe dir found; tried {[d for d in candidates if d]}")
     bench._calibration_probe(spark, sf01)  # burn codegen/first-touch
 
     out: dict[str, dict] = {}
