@@ -5,7 +5,6 @@ from breweries_data_pipeline_spark.functions.text import (  # noqa: F401
     tokens,
 )
 from breweries_data_pipeline_spark.functions.vectors import (  # noqa: F401
-    cosine_similarity,
     dot_product,
     l2_norm,
 )

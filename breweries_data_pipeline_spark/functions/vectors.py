@@ -22,7 +22,3 @@ def l2_norm(a: Column) -> Column:
         a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")
     )
     return F.sqrt(sq)
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))

@@ -40,9 +40,7 @@ from breweries_data_pipeline_spark.operators.dedup import (  # noqa: F401
     near_dedup_against_index,
     near_dedup_incremental,
     prefix_filtered_similarity_join,
-    read_shingle_index,
     read_shingle_index_bucketed,
-    write_shingle_index,
     write_shingle_index_bucketed,
 )
 from breweries_data_pipeline_spark.operators.graph import (  # noqa: F401
@@ -66,7 +64,6 @@ from breweries_data_pipeline_spark.operators.text import (  # noqa: F401
     with_fingerprint,
     with_lang_id,
     with_quality_score,
-    with_token_count,
 )
 from breweries_data_pipeline_spark.operators.merge import merge_upsert  # noqa: F401
 from breweries_data_pipeline_spark.operators.multimodal import (  # noqa: F401

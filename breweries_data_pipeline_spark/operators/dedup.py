@@ -32,6 +32,15 @@ band keys (``lsh_band_keys``), candidate pairs
 (``lsh_candidate_pairs``), bucket stars (``lsh_bucket_stars``), the
 exact-Jaccard verify (``jaccard_pairs``) and the connected-components
 keep-min (``keep_component_min``).
+
+The exact AllPairs/PPJoin prefix-filter join has one set of steps
+too: shingle sets (``_shingle_sets``), the rarest-first prefix cut
+(``_prefix_rows``) and the candidate-and-verify pairs step
+(``_verified_prefix_pairs``). The self-join
+``prefix_filtered_similarity_join`` runs them with the corpus on both
+sides; ``near_dedup_against_index`` runs them with a new batch against
+a ``ShingleIndex``, whose one storage form is the bucketed catalog
+tables of ``write_shingle_index_bucketed``.
 """
 
 from __future__ import annotations
@@ -82,7 +91,7 @@ def _prefix_len_expr(size_col: str, t_ppm: int):
     )
 
 
-def _hash_gate_cols(sets_df: DataFrame, id_alias: str, side: str) -> DataFrame:
+def _hash_gate_cols(sets_df: DataFrame) -> DataFrame:
     """Per-doc columns for the exact 64-bit hash pre-gate that runs
     between candidate generation and string verification: the distinct
     xxhash64 array (8-byte elements intersect ~an order of magnitude
@@ -96,27 +105,29 @@ def _hash_gate_cols(sets_df: DataFrame, id_alias: str, side: str) -> DataFrame:
     inflated pairs die in the exact string verify that follows. So
     gate-pass ⊇ true pairs always, at ~2^-64 per-pair flag odds."""
     return sets_df.select(
-        F.col("id").alias(id_alias),
-        F.array_distinct(
-            F.expr("transform(shingles, s -> xxhash64(s))")
-        ).alias(f"__h_{side}"),
-        F.col("size").cast("long").alias(f"__sz_{side}"),
-    ).withColumn(
-        f"__flag_{side}", F.size(f"__h_{side}") < F.col(f"__sz_{side}")
-    )
+        "id",
+        F.array_distinct(F.expr("transform(shingles, s -> xxhash64(s))")).alias("__h"),
+        F.col("size").cast("long").alias("__sz"),
+    ).withColumn("__flag", F.size("__h") < F.col("__sz"))
 
 
-def _hash_gate_keep(side_a: str, side_b: str, t_ppm: int):
-    """Gate predicate: hash-overlap Jaccard >= t (in exact ppm using
+def _hash_gate_keep(t_ppm: int):
+    """Gate predicate over two ``_hash_gate_cols`` tables suffixed
+    ``_a`` / ``_b``: hash-overlap Jaccard >= t (in exact ppm using
     TRUE set sizes, valid because deficit implies a flag), or either
     side flagged."""
-    inter = F.size(F.array_intersect(f"__h_{side_a}", f"__h_{side_b}")).cast("long")
-    sa, sb = F.col(f"__sz_{side_a}"), F.col(f"__sz_{side_b}")
+    inter = F.size(F.array_intersect("__h_a", "__h_b")).cast("long")
+    sa, sb = F.col("__sz_a"), F.col("__sz_b")
     return (
         (inter * 1_000_000 >= t_ppm * (sa + sb - inter))
-        | F.col(f"__flag_{side_a}")
-        | F.col(f"__flag_{side_b}")
+        | F.col("__flag_a")
+        | F.col("__flag_b")
     )
+
+
+def _suffixed(df: DataFrame, side: str) -> DataFrame:
+    """Every column of ``df`` renamed ``<name>_<side>``."""
+    return df.select(*[F.col(c).alias(f"{c}_{side}") for c in df.columns])
 
 
 def _ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -819,129 +830,43 @@ def prefix_filtered_similarity_join(
     appears in half the corpus is never anyone's candidate key unless
     a doc is so small that t forces a long prefix.
 
-    Plan (r13 shape): shingle explode -> corpus-frequency partial
-    AGGREGATE broadcast-joined back (the r12 count window put every
-    occurrence of a hot shingle in one window partition — a skew
-    hazard at scale; see _freq_hint. The exploded stream is now never
-    exchanged by the Zipfian shingle key) -> per-doc
-    row_number window (shuffle by doc id, uniform) -> self equi-join
-    on the prefix token's 8-BYTE xxhash64 (ids + hash shuffled, never
-    text; a hash collision can only ADD candidates, which die in the
-    gate/verify, so the zero-false-negative guarantee is untouched —
-    the rarest-first ORDER itself still ties on the exact string) ->
-    distinct pairs -> exact verify joining the two shingle arrays
-    back (AQE-broadcastable candidate side). Output is exact
-    fixed-point ppm, so it is oracle-checkable against brute force.
+    Plan: the shared prefix-filter steps with the corpus on both
+    sides — persisted shingle sets (:func:`_shingle_sets`; they feed
+    the token explode AND both verify sides, without the cache the
+    regex shingle extraction re-runs 4x) -> corpus-frequency partial
+    AGGREGATE broadcast-joined back (see _freq_hint: the exploded
+    stream is never exchanged by the Zipfian shingle key) -> per-doc
+    rarest-first window (:func:`_prefix_rows`; shuffle by doc id,
+    uniform) -> :func:`_verified_prefix_pairs`. The persisted prefix
+    carries the shingle's 8-BYTE xxhash64 as the candidate key (ids +
+    hash shuffled, never text; a hash collision can only ADD
+    candidates, which die in the gate/verify, so the
+    zero-false-negative guarantee is untouched — the rarest-first
+    ORDER itself still ties on the exact string). Output is exact
+    fixed-point ppm ``(id_a, id_b, jaccard_ppm)`` with ``id_a <
+    id_b``, so it is oracle-checkable against brute force.
     """
-    from pyspark.sql import Window
-
-    from breweries_data_pipeline_spark.functions.text import shingles
-
-    # persist the shingle arrays: they feed the token explode (freq +
-    # prefix) AND both verify sides — without the cache the regex
-    # shingle extraction re-runs 4x (measured ~2x wall on the whole
-    # join). Same persist discipline as the MinHash signature table.
-    sets = (
-        docs.select(
-            F.col(id_col).alias("__id"),
-            F.array_distinct(shingles(text_col, shingle_size)).alias("__s"),
-        )
-        .withColumn("__size", F.size("__s"))
-        .transform(track_persist)
+    sets = track_persist(_shingle_sets(docs, text_col, id_col, shingle_size))
+    prefix = track_persist(
+        _prefix_rows(sets, _shingle_freq(sets), threshold)
+        .withColumn("shingle", F.xxhash64("shingle"))
     )
-    toks = sets.select("__id", "__size", F.explode("__s").alias("__sh"))
-    w = Window.partitionBy("__id").orderBy("__n_sh", "__sh")
-    t_ppm = _t_ppm(threshold)
-    prefix_len = _prefix_len_expr("__size", t_ppm)
-    freq = toks.groupBy("__sh").agg(F.count(F.lit(1)).alias("__n_sh"))
-    prefix = (
-        toks.join(_freq_hint(freq), "__sh")
-        .withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= prefix_len)
-        .select(
-            F.xxhash64("__sh").alias("__h"),
-            "__id",
-            F.col("__size").alias("size"),
-            "pos",
-        )
-        .transform(track_persist)  # both sides of the candidate self-join
-    )
-    # AllPairs length filter: J(A,B) >= t forces min(|A|,|B|) >=
-    # t*max(|A|,|B|) — a necessary condition evaluated INSIDE the
-    # candidate join, so size-mismatched pairs never reach distinct
-    # or verify (cuts candidates ~2x at t=0.8 on size-diverse corpora).
-    # The PPJoin positional bound stacks on top (exact, see
-    # _ppjoin_position_filter) — it prunes rows whose shared token
-    # sits too deep in either prefix to reach the required overlap.
-    cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.__h") == F.col("b.__h"))
-            & (F.col("a.__id") < F.col("b.__id"))
-            & (F.col("a.size").cast("long") * 1_000_000 >= t_ppm * F.col("b.size").cast("long"))
-            & (F.col("b.size").cast("long") * 1_000_000 >= t_ppm * F.col("a.size").cast("long"))
-            & _ppjoin_position_filter("a", "b", t_ppm),
-        )
-        .select(F.col("a.__id").alias("__id_a"), F.col("b.__id").alias("__id_b"))
-        .distinct()
-    )
-    # exact 64-bit hash pre-gate before the string verify (see
-    # _hash_gate_cols for the exactness argument). ONE persisted gate
-    # table serves both candidate sides: the interpreted
-    # transform(shingles, xxhash64) pass (CodegenFallback) previously
-    # ran once per side — the single most expensive projection of the
-    # gate phase, measured ~half its wall at sf1.
-    gate_tbl = _hash_gate_cols(
-        sets.select(
-            F.col("__id").alias("id"), F.col("__s").alias("shingles"),
-            F.col("__size").alias("size"),
-        ),
-        "__gid",
-        "g",
-    ).transform(track_persist)
-    ga = gate_tbl.select(
-        F.col("__gid").alias("__id_a"), F.col("__h_g").alias("__h_a"),
-        F.col("__sz_g").alias("__sz_a"), F.col("__flag_g").alias("__flag_a"),
-    )
-    gb = gate_tbl.select(
-        F.col("__gid").alias("__id_b"), F.col("__h_g").alias("__h_b"),
-        F.col("__sz_g").alias("__sz_b"), F.col("__flag_g").alias("__flag_b"),
-    )
-    gated = (
-        cand.join(ga, "__id_a")
-        .join(gb, "__id_b")
-        .where(_hash_gate_keep("a", "b", t_ppm))
-        .select("__id_a", "__id_b")
-    )
-    sa = sets.select(F.col("__id").alias("__id_a"), F.col("__s").alias("__s_a"))
-    sb = sets.select(F.col("__id").alias("__id_b"), F.col("__s").alias("__s_b"))
-    ppm = F.expr(
-        "(cast(size(array_intersect(__s_a, __s_b)) as bigint) * 1000000) div "
-        "(cast(size(__s_a) as bigint) + cast(size(__s_b) as bigint) "
-        " - cast(size(array_intersect(__s_a, __s_b)) as bigint))"
-    )
-    return (
-        gated.join(sa, "__id_a")
-        .join(sb, "__id_b")
-        .select(
-            F.col("__id_a").alias("id_a"),
-            F.col("__id_b").alias("id_b"),
-            ppm.alias("jaccard_ppm"),
-        )
-        .where(F.col("jaccard_ppm") >= t_ppm)
+    return _verified_prefix_pairs(
+        prefix, sets, prefix, sets, _t_ppm(threshold), gate=True
     )
 
 
 class ShingleIndex:
     """Persisted artifact for :func:`near_dedup_against_index` — the
     near-dup analog of the fingerprint column that makes
-    :func:`dedup_incremental` cheap. Three tables:
+    :func:`dedup_incremental` cheap. Three tables, stored as bucketed
+    catalog tables by :func:`write_shingle_index_bucketed` and read
+    back by :func:`read_shingle_index_bucketed`:
 
-    - ``prefix``: (shingle, id, size) — one row per PREFIX shingle per
-      indexed doc (the AllPairs candidate join side). Append-only
-      across ingest days; bucket by ``shingle`` on disk and the daily
-      candidate join is exchange-free on the corpus side.
+    - ``prefix``: (shingle, id, size, pos) — one row per PREFIX
+      shingle per indexed doc (the AllPairs candidate join side).
+      Append-only across ingest days; bucketed by ``shingle`` on disk,
+      so the daily candidate join is exchange-free on the corpus side.
     - ``sets``: (id, shingles, size) — per-doc distinct shingle arrays
       for exact verification of candidates.
     - ``freq``: (shingle, n) — the FROZEN corpus shingle-frequency
@@ -1010,6 +935,16 @@ def _shingle_sets(
     )
 
 
+def _shingle_freq(sets: DataFrame) -> DataFrame:
+    """Corpus shingle frequencies (shingle, n) over ``_shingle_sets``
+    rows: the rarest-first order that :func:`_prefix_rows` cuts by."""
+    return (
+        sets.select(F.explode("shingles").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 def _prefix_rows(sets: DataFrame, freq: DataFrame, threshold: float) -> DataFrame:
     """Cut each doc's rarest-first prefix (length |X| - ceil(t|X|) + 1)
     under the given frequency snapshot; shingles absent from the
@@ -1054,6 +989,100 @@ def _ppjoin_position_filter(a: str, b: str, t_ppm: int):
     return ubound * (1_000_000 + t_ppm) >= t_ppm * (sa + sb)
 
 
+def _verified_prefix_pairs(
+    prefix_a: DataFrame,
+    sets_a: DataFrame,
+    prefix_b: DataFrame,
+    sets_b: DataFrame,
+    t_ppm: int,
+    *,
+    gate: bool,
+) -> DataFrame:
+    """The one candidate-and-verify step of the prefix-filter joins,
+    shared by the self-join (:func:`prefix_filtered_similarity_join`:
+    the same tables on both sides, pairs emitted once as
+    ``id_a < id_b``) and the batch-against-index join
+    (:func:`near_dedup_against_index`: batch as ``a``, index as
+    ``b``). ``prefix_*`` are :func:`_prefix_rows` tables cut under ONE
+    shared frequency order; ``sets_*`` are :func:`_shingle_sets`
+    tables. Returns ``(id_a, id_b, jaccard_ppm, *extras)`` for every
+    pair with exact Jaccard >= t, where ``extras`` are the columns
+    ``sets_b`` carries beyond ``id, shingles, size`` (the collapsed
+    index's ``w``).
+
+    1. Candidates: one equi-join on the prefix shingle. The AllPairs
+       length filter (J(A,B) >= t forces min(|A|,|B|) >=
+       t*max(|A|,|B|)) and the PPJoin positional bound
+       (:func:`_ppjoin_position_filter`) run INSIDE the join, so
+       size-mismatched pairs and shared tokens too deep in either
+       prefix never reach distinct or verify (on dense-vocabulary
+       corpora the positional bound is what keeps verify proportional
+       to true-match volume; it halved the sf1 wall when it landed).
+    2. ``gate``: the exact 64-bit hash pre-gate (:func:`_hash_gate_cols`)
+       — candidates that survive the prefix filters are still mostly
+       false, and intersecting 8-byte hash arrays costs ~an order of
+       magnitude less than comparing shingle strings. Skip it when the
+       sets already ARE hash arrays (a fingerprinted index): the
+       verify is then exactly the gate's intersection. A self-join
+       persists ONE gate table for both sides: the interpreted
+       transform(shingles, xxhash64) pass (CodegenFallback) is the
+       most expensive projection of the gate phase (~half its wall at
+       sf1), and would otherwise run once per side.
+    3. Verify: exact Jaccard in fixed-point ppm, joining the two
+       shingle-array tables back on the candidate ids (the smaller side
+       AQE-broadcastable)."""
+    self_join = prefix_a is prefix_b and sets_a is sets_b
+    on = F.col("a.shingle") == F.col("b.shingle")
+    if self_join:
+        # first: the cheapest conjunct drops half the rows before the
+        # bigint arithmetic of the two filters below
+        on = on & (F.col("a.id") < F.col("b.id"))
+    sa, sb = F.col("a.size").cast("long"), F.col("b.size").cast("long")
+    on = (
+        on
+        & (sa * 1_000_000 >= t_ppm * sb)
+        & (sb * 1_000_000 >= t_ppm * sa)
+        & _ppjoin_position_filter("a", "b", t_ppm)
+    )
+    pairs = (
+        prefix_a.alias("a")
+        .join(prefix_b.alias("b"), on)
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    if gate:
+        if self_join:
+            gate_a = gate_b = track_persist(_hash_gate_cols(sets_a))
+        else:
+            gate_a, gate_b = _hash_gate_cols(sets_a), _hash_gate_cols(sets_b)
+        pairs = (
+            pairs.join(_suffixed(gate_a, "a"), "id_a")
+            .join(_suffixed(gate_b, "b"), "id_b")
+            .where(_hash_gate_keep(t_ppm))
+            .select("id_a", "id_b")
+        )
+    extras = [c for c in sets_b.columns if c not in ("id", "shingles", "size")]
+    ppm = F.expr(
+        "(cast(size(array_intersect(__s_a, __s_b)) as bigint) * 1000000) div "
+        "(cast(size(__s_a) as bigint) + cast(size(__s_b) as bigint) "
+        " - cast(size(array_intersect(__s_a, __s_b)) as bigint))"
+    )
+    return (
+        pairs.join(
+            sets_a.select(F.col("id").alias("id_a"), F.col("shingles").alias("__s_a")),
+            "id_a",
+        )
+        .join(
+            sets_b.select(
+                F.col("id").alias("id_b"), F.col("shingles").alias("__s_b"), *extras
+            ),
+            "id_b",
+        )
+        .select("id_a", "id_b", ppm.alias("jaccard_ppm"), *extras)
+        .where(F.col("jaccard_ppm") >= t_ppm)
+    )
+
+
 def build_shingle_index(
     history: DataFrame,
     *,
@@ -1068,8 +1097,9 @@ def build_shingle_index(
     explode feeds both the frequency aggregate and the prefix window;
     the sets table is the explode input persisted. All three outputs
     are plain DataFrames — write once with
-    :func:`write_shingle_index`, re-read daily, and only the (small)
-    new batch is ever shingled again.
+    :func:`write_shingle_index_bucketed`, re-read daily with
+    :func:`read_shingle_index_bucketed`, and only the (small) new
+    batch is ever shingled again.
 
     ``fingerprint=True`` builds the index over xxhash64 shingle
     fingerprints instead of raw strings (see :func:`_shingle_sets`):
@@ -1125,46 +1155,9 @@ def build_shingle_index(
     # broadcast join-back of _prefix_rows has map-side partial
     # aggregation and never exchanges the exploded stream by the
     # shingle key at all (see _freq_hint).
-    freq = track_persist(
-        sets.select(F.explode("shingles").alias("shingle"))
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    freq = track_persist(_shingle_freq(sets))
     prefix = _prefix_rows(sets, freq, threshold)
     return ShingleIndex(prefix, sets, freq, threshold, shingle_size, fingerprint)
-
-
-def write_shingle_index(index: ShingleIndex, path: str) -> None:
-    """Persist the index as three parquet dirs + a tiny JSON meta.
-    ``prefix`` is repartitioned by shingle so same-shingle rows
-    co-locate (the layout the daily candidate join wants; on a real
-    deployment make it a bucketed table and the join side is
-    exchange-free)."""
-    import posixpath
-
-    spark = index.prefix.sparkSession
-    index.prefix.repartition("shingle").write.mode("overwrite").parquet(
-        posixpath.join(path, "prefix")
-    )
-    index.sets.write.mode("overwrite").parquet(posixpath.join(path, "sets"))
-    index.freq.write.mode("overwrite").parquet(posixpath.join(path, "freq"))
-    # meta travels through the same Hadoop filesystem as the tables —
-    # a local open() would split the index across filesystems on
-    # HDFS/S3 paths (parquet remote, meta local or IOError)
-    spark.createDataFrame(
-        [(
-            int(round(index.threshold * 1_000_000)),
-            index.shingle_size,
-            # fingerprinted layouts are a DIFFERENT on-disk format
-            # (bigint shingle column): version 3, so readers that
-            # enforce the version set fail loudly instead of silently
-            # null-joining string shingles against fingerprints
-            3 if index.fingerprint else 2,
-            bool(index.fingerprint),
-        )],
-        "threshold_ppm bigint, shingle_size int, format_version int, "
-        "fingerprint boolean",
-    ).coalesce(1).write.mode("overwrite").json(posixpath.join(path, "meta"))
 
 
 def _meta_format_version(meta, where: str) -> int:
@@ -1186,39 +1179,6 @@ def _meta_format_version(meta, where: str) -> int:
             "rebuild the index with this version's writer."
         )
     return ver
-
-
-def read_shingle_index(spark, path: str) -> ShingleIndex:
-    import posixpath
-
-    try:
-        meta = spark.read.json(posixpath.join(path, "meta")).first()
-        assert meta is not None and meta["threshold_ppm"] is not None
-    except Exception as exc:  # noqa: BLE001 — translate to actionable
-        raise ValueError(
-            f"no readable meta dataset under {path!r}: either this is not "
-            "a shingle index, or it was written by a pre-v2 "
-            "write_shingle_index (meta.json flat file, float threshold, "
-            "no positional prefix column). Rebuild it with "
-            "build_shingle_index + write_shingle_index."
-        ) from exc
-    _meta_format_version(meta, f"at {path!r}")
-    prefix = spark.read.parquet(posixpath.join(path, "prefix"))
-    if "pos" not in prefix.columns:
-        raise ValueError(
-            f"shingle index at {path!r} has a prefix table without the "
-            "'pos' column (pre-v2 format); the PPJoin positional filter "
-            "requires it. Rebuild the index with write_shingle_index."
-        )
-    return ShingleIndex(
-        prefix,
-        spark.read.parquet(posixpath.join(path, "sets")),
-        spark.read.parquet(posixpath.join(path, "freq")),
-        meta["threshold_ppm"] / 1_000_000,
-        int(meta["shingle_size"]),
-        # absent on v2 indexes written before the fingerprint option
-        bool(meta["fingerprint"]) if "fingerprint" in meta.__fields__ else False,
-    )
 
 
 def _drop_table_and_stale_location(spark, name: str) -> None:
@@ -1278,7 +1238,11 @@ def write_shingle_index_bucketed(
         [(
             int(round(index.threshold * 1_000_000)),
             index.shingle_size,
-            3 if index.fingerprint else 2,  # see write_shingle_index
+            # fingerprinted layouts are a DIFFERENT on-disk format
+            # (bigint shingle column): version 3, so readers that
+            # enforce the version set fail loudly instead of silently
+            # null-joining string shingles against fingerprints
+            3 if index.fingerprint else 2,
             bool(index.fingerprint),
         )],
         "threshold_ppm bigint, shingle_size int, format_version int, "
@@ -1321,14 +1285,11 @@ def near_dedup_against_index(
     rarest-first order, any (new, old) pair with J >= t shares a
     shingle inside both prefixes, so candidates = batch prefix
     equi-join ``index.prefix`` — no crossJoin, and Zipf-head shingles
-    are never join keys. The AllPairs length filter (min size >=
-    t * max size) AND the PPJoin positional bound
-    (:func:`_ppjoin_position_filter`, exact) run inside the join —
-    on dense-vocabulary corpora the positional bound is what keeps
-    the verify stage proportional to true-match volume (it halved the
-    sf1 wall the moment it landed, r7); exact verification joins the
-    two shingle-array tables on candidate ids (batch side
-    AQE-broadcastable).
+    are never join keys. The length and positional filters, the hash
+    pre-gate (skipped for a fingerprinted index, whose sets already
+    are hash arrays) and the exact verify are the self-join's own
+    step, :func:`_verified_prefix_pairs`, with the batch as side
+    ``a`` and the index as side ``b``.
 
     ``threshold`` defaults to the index's own; a HIGHER one is allowed
     (the indexed prefixes are supersets of what that gate needs — see
@@ -1380,67 +1341,25 @@ def near_dedup_against_index(
             "would lose candidates (rebuild the index at the lower threshold)"
         )
     t_ppm = _t_ppm(t)
-    sets_b = track_persist(
+    sets = track_persist(
         _shingle_sets(
             new_batch, text_col, id_col, index.shingle_size,
             fingerprint=index.fingerprint,
         )
     )
-    cand = (
-        _prefix_rows(sets_b, index.freq, t)
-        .alias("b")
-        .join(
-            index.prefix.alias("h"),
-            (F.col("b.shingle") == F.col("h.shingle"))
-            & (F.col("b.size").cast("long") * 1_000_000 >= t_ppm * F.col("h.size").cast("long"))
-            & (F.col("h.size").cast("long") * 1_000_000 >= t_ppm * F.col("b.size").cast("long"))
-            & _ppjoin_position_filter("b", "h", t_ppm),
-        )
-        .select(F.col("b.id").alias("__bid"), F.col("h.id").alias("__hid"))
-        .distinct()
-    )
-    # 64-bit hash pre-gate: candidates that survive the prefix filters
-    # are still mostly false on dense-vocabulary corpora; intersecting
-    # 8-byte hash arrays first costs ~an order of magnitude less than
-    # shipping + comparing the shingle strings, and the gate is exact
-    # (see _hash_gate_cols) — true pairs always pass, hash-inflated
-    # ones die in the string verify below. A FINGERPRINTED index skips
-    # the gate: its sets already ARE 8-byte hash arrays, so the verify
-    # below is exactly the gate's intersection — running both would
-    # double the work for zero extra pruning.
-    if index.fingerprint:
-        gated = cand
-    else:
-        gated = (
-            cand.join(_hash_gate_cols(sets_b, "__bid", "b"), "__bid")
-            .join(_hash_gate_cols(index.sets, "__hid", "h"), "__hid")
-            .where(_hash_gate_keep("b", "h", t_ppm))
-            .select("__bid", "__hid")
-        )
-    ppm = F.expr(
-        "(cast(size(array_intersect(__s_b, __s_h)) as bigint) * 1000000) div "
-        "(cast(size(__s_b) as bigint) + cast(size(__s_h) as bigint) "
-        " - cast(size(array_intersect(__s_b, __s_h)) as bigint))"
-    )
-    # a collapsed index carries per-rep multiplicities: each match row
-    # stands for w byte-identical corpus docs, so counts weight by w
-    # (best_match_id stays the group's min id — the rep IS that id)
-    h_w = (
-        F.col("w").cast("long") if "w" in index.sets.columns else F.lit(1)
-    ).alias("__w")
-    verified = (
-        gated.join(
-            sets_b.select(F.col("id").alias("__bid"), F.col("shingles").alias("__s_b")),
-            "__bid",
-        )
-        .join(
-            index.sets.select(
-                F.col("id").alias("__hid"), F.col("shingles").alias("__s_h"), h_w
-            ),
-            "__hid",
-        )
-        .select("__bid", "__hid", "__w", ppm.alias("__ppm"))
-        .where(F.col("__ppm") >= t_ppm)
+    # batch as side a, index as side b: the index's sets carry the
+    # collapsed index's per-rep multiplicities ``w`` through the step
+    verified = _verified_prefix_pairs(
+        _prefix_rows(sets, index.freq, t), sets, index.prefix, index.sets, t_ppm,
+        gate=not index.fingerprint,
+    ).select(
+        F.col("id_a").alias("__bid"),
+        F.col("id_b").alias("__hid"),
+        # each match row of a collapsed index stands for w
+        # byte-identical corpus docs, so counts weight by w
+        # (best_match_id stays the group's min id — the rep IS that id)
+        (F.col("w").cast("long") if "w" in index.sets.columns else F.lit(1)).alias("__w"),
+        F.col("jaccard_ppm").alias("__ppm"),
     )
     wb = Window.partitionBy("__bid")
     best = (
@@ -1451,7 +1370,7 @@ def near_dedup_against_index(
         .where(F.col("__rk") == 1)
     )
     return (
-        sets_b.select(F.col("id").alias(id_col))
+        sets.select(F.col("id").alias(id_col))
         .join(best.withColumnRenamed("__bid", id_col), id_col, "left")
         .select(
             id_col,

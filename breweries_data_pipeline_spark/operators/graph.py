@@ -403,9 +403,9 @@ def bfs_distances(
 
     ``canonical=True`` declares the input distinct with each
     UNDIRECTED edge present once as (u < v) — the cheap edge-build
-    form (see kcore_peel). Only the |E| canonical rows are persisted;
-    the traversal probes a narrow union-flip view (both directions,
-    zero extra shuffle, zero extra cache) — half the materialized
+    form, and the one kcore_peel takes. Only the |E| canonical rows
+    are persisted; the traversal probes a narrow union-flip view (both
+    directions, zero extra shuffle, zero extra cache) — half the materialized
     bytes of persisting a pre-symmetrized 2|E| table (measured at
     sf1: edge build + persist 15.3s symmetrized vs 6.3s canonical).
 
@@ -534,9 +534,6 @@ def kcore_peel(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 3,
-    symmetric: bool = False,
-    canonical: bool = False,
-    dedup_input: bool = False,
 ) -> DataFrame:
     """Bounded-round k-core peeling: each round drops every node whose
     degree in the CURRENT surviving subgraph is below ``k``, plus the
@@ -552,6 +549,18 @@ def kcore_peel(
     filter (drop weakly-connected periphery before expensive
     analysis).
 
+    Input shape: each undirected edge ONCE as (u < v); rows with
+    ``u >= v`` are dropped. The peel carries |E| rows instead of 2|E|
+    through every scan and semi-join probe, and degrees come from an
+    endpoint explode (``explode(array(u, v))``) into one
+    map-side-combined aggregate, never materializing the second edge
+    direction (measured at sf0.1: 2x faster cold than peeling a
+    symmetrized both-directions edge list, same output).
+
+    PRECONDITION: the input must be DISTINCT. The peel does not
+    re-distinct, so duplicate edge rows silently inflate degrees and
+    change which nodes survive peeling.
+
     Scale shape: ZERO edge writebacks. Surviving-node sets are nested
     (keep_r ⊆ keep_{r-1}), so round r's edge set is the ONE cached
     base filtered by the latest keep alone — each round costs one
@@ -559,138 +568,69 @@ def kcore_peel(
     plus one map-side-combined degree aggregate, and only the tiny
     node-bounded keep set is ever materialized. Lineage stays flat
     because every round's plan hangs off the base checkpoint and one
-    checkpointed keep, never off the previous round's plan.
-
-    ``symmetric=True`` declares the input already distinct with both
-    directions present (the natural output of a co-occurrence
-    self-join with a ``!=`` filter) and skips the symmetrizing
-    union + distinct — at sf1 that distinct shuffles 2x the edge
-    list (48M rows for the 24M-edge part graph) to rebuild the very
-    set it was given: the single most expensive stage of the peel.
-
-    ``canonical=True`` goes one further: the input is distinct with
-    each undirected edge present ONCE as (u < v). The peel then
-    carries |E| rows instead of 2|E| through every scan and
-    semi-join probe. Degrees come
-    from an endpoint explode (``explode(array(u, v))``), which feeds
-    the same map-side-combined aggregate volume as the symmetric
-    form's groupBy but without ever materializing the second edge
-    direction. Measured at sf0.1: 2x faster cold than the symmetric
-    form, identical output. Prefer this whenever the edge producer
-    can emit ``src < dst`` (a ``<`` filter instead of ``!=`` on a
-    self-join — which also halves the edge-build distinct).
-
-    PRECONDITION for ``canonical=True``: the input must already be
-    DISTINCT. Unlike the default path (which re-distincts after
-    symmetrizing), the canonical branch only applies the ``u < v``
-    filter — duplicate edge rows silently inflate degrees and change
-    which nodes survive peeling. If the producer cannot guarantee
-    distinctness, pass ``dedup_input=True`` to spend one extra
-    up-front shuffle (still far cheaper than a wrong core)."""
-    u, v = F.col("__u"), F.col("__v")
-    if canonical:
-        canon = edges.select(
-            F.col(src).alias("__u"), F.col(dst).alias("__v")
-        ).where(u < v)
-        if dedup_input:
-            canon = canon.distinct()
-        base = canon.localCheckpoint(eager=True)
-
-        def _filtered(keep_nodes: DataFrame | None) -> DataFrame:
-            """base with both endpoints in keep_nodes — the ENTIRE
-            round-r surviving edge set, filtered by the LATEST keep
-            alone. Valid because surviving-node sets are NESTED:
-            deg only shrinks as edges are removed, so
-            n in keep_r => deg_r(n) >= k => deg_{r-1}(n) >= k
-            => n in keep_{r-1}; by induction
-            E_r = E_0 ∩ (keep_{r-1} × keep_{r-1}) with every earlier
-            keep-filter subsumed. That makes the peel ZERO-writeback:
-            no round ever materializes an edge list — each round is
-            one scan of the cached base through two broadcast hash
-            probes + one map-side-combined degree aggregate.
-            (The r7 form eagerly localCheckpoint'ed the filtered
-            edges every round: 72s of the 273s sf10 wall was a single
-            checkpoint write of 119M surviving rows.)"""
-            if keep_nodes is None:
-                return base
-            # EXPLICIT broadcast: keep is bounded by |V| (a few MB
-            # per million nodes), but past ~10 MB the planner's
-            # auto-broadcast gives up and both semi-joins flip to
-            # SortMergeJoin, shuffling+sorting the FULL edge list
-            # twice per round — measured as the r7 sf10 cliff (the
-            # 2M-node keep set = ~16 MB > threshold). Pinning the
-            # broadcast keeps every round's filter a narrow probe at
-            # any graph size whose node set fits an executor (the
-            # k-core regime).
-            return base.join(
-                F.broadcast(keep_nodes.select(F.col("__n").alias("__u"))),
-                "__u",
-                "left_semi",
-            ).join(
-                F.broadcast(keep_nodes.select(F.col("__n").alias("__v"))),
-                "__v",
-                "left_semi",
-            )
-
-        keep: DataFrame | None = None
-        for _ in range(rounds):
-            deg = (
-                _filtered(keep)
-                .select(F.explode(F.array("__u", "__v")).alias("__n"))
-                .groupBy("__n")
-                .agg(F.count(F.lit(1)).alias("__d"))
-            )
-            # keep is consumed by BOTH semi-joins of the next round's
-            # filter (and the round after reads it transitively), so
-            # materialize it — it is node-bounded and tiny next to
-            # the edges
-            keep = (
-                deg.filter(F.col("__d") >= k)
-                .select("__n")
-                .localCheckpoint(eager=True)
-            )
-        return (
-            _filtered(keep)
-            .select(F.explode(F.array("__u", "__v")).alias("node"))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-    directed = edges.select(
-        F.col(src).alias("__u"), F.col(dst).alias("__v")
-    ).where(u != v)
-    if not symmetric:
-        directed = directed.unionByName(
-            edges.select(F.col(dst).alias("__u"), F.col(src).alias("__v")).where(
-                u != v
-            )
-        ).distinct()
-    base = directed.localCheckpoint(eager=True)
+    checkpointed keep, never off the previous round's plan."""
+    base = (
+        edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))
+        .where(F.col("__u") < F.col("__v"))
+        .localCheckpoint(eager=True)
+    )
 
     def _filtered(keep_nodes: DataFrame | None) -> DataFrame:
-        # latest-keep-only filter: valid by the same nesting argument
-        # as the canonical branch (keep_r ⊆ keep_{r-1}); explicit
-        # broadcast for the same >10 MB auto-threshold reason
+        """base with both endpoints in keep_nodes — the ENTIRE
+        round-r surviving edge set, filtered by the LATEST keep
+        alone. Valid because surviving-node sets are NESTED:
+        deg only shrinks as edges are removed, so
+        n in keep_r => deg_r(n) >= k => deg_{r-1}(n) >= k
+        => n in keep_{r-1}; by induction
+        E_r = E_0 ∩ (keep_{r-1} × keep_{r-1}) with every earlier
+        keep-filter subsumed. That makes the peel ZERO-writeback:
+        no round ever materializes an edge list — each round is
+        one scan of the cached base through two broadcast hash
+        probes + one map-side-combined degree aggregate.
+        (The r7 form eagerly localCheckpoint'ed the filtered
+        edges every round: 72s of the 273s sf10 wall was a single
+        checkpoint write of 119M surviving rows.)"""
         if keep_nodes is None:
             return base
-        return base.join(F.broadcast(keep_nodes), "__u", "left_semi").join(
-            F.broadcast(keep_nodes.select(F.col("__u").alias("__v"))),
+        # EXPLICIT broadcast: keep is bounded by |V| (a few MB
+        # per million nodes), but past ~10 MB the planner's
+        # auto-broadcast gives up and both semi-joins flip to
+        # SortMergeJoin, shuffling+sorting the FULL edge list
+        # twice per round — measured as the r7 sf10 cliff (the
+        # 2M-node keep set = ~16 MB > threshold). Pinning the
+        # broadcast keeps every round's filter a narrow probe at
+        # any graph size whose node set fits an executor (the
+        # k-core regime).
+        return base.join(
+            F.broadcast(keep_nodes.select(F.col("__n").alias("__u"))),
+            "__u",
+            "left_semi",
+        ).join(
+            F.broadcast(keep_nodes.select(F.col("__n").alias("__v"))),
             "__v",
             "left_semi",
         )
 
     keep: DataFrame | None = None
     for _ in range(rounds):
-        deg = _filtered(keep).groupBy("__u").agg(F.count(F.lit(1)).alias("__d"))
-        # keep is referenced by BOTH semi-joins of the next round's
-        # filter; without materializing it the full-edge-list degree
-        # aggregate executes twice per round (Spark plans have no
-        # common-subtree reuse). The node set is small (nodes above
-        # the k threshold), so the eager checkpoint is cheap.
+        deg = (
+            _filtered(keep)
+            .select(F.explode(F.array("__u", "__v")).alias("__n"))
+            .groupBy("__n")
+            .agg(F.count(F.lit(1)).alias("__d"))
+        )
+        # keep is consumed by BOTH semi-joins of the next round's
+        # filter (and the round after reads it transitively), so
+        # materialize it — it is node-bounded and tiny next to
+        # the edges
         keep = (
             deg.filter(F.col("__d") >= k)
-            .select("__u")
+            .select("__n")
             .localCheckpoint(eager=True)
         )
-    return _filtered(keep).groupBy(F.col("__u").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
+    return (
+        _filtered(keep)
+        .select(F.explode(F.array("__u", "__v")).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
     )

@@ -21,10 +21,6 @@ from breweries_data_pipeline_spark.functions.text import (
 )
 
 
-def with_token_count(df: DataFrame, text_col: str = "text", out: str = "n_tokens") -> DataFrame:
-    return df.withColumn(out, token_count(text_col))
-
-
 def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> DataFrame:
     """Heuristic language ID: compare per-language stopword hit counts
     (n-gram-free variant of the classic stopword profile method).

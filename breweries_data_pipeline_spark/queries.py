@@ -3,7 +3,7 @@ driver testdata, each paired with a DuckDB oracle SQL string.
 
 Registry shape: ``REGISTRY[name] = (spark_fn, oracle_sql_or_None)``
 where ``spark_fn(spark, sf_dir) -> DataFrame``. ``__spark_entry__``
-re-exports this as ``queries()`` / ``oracle_sql()``.
+orders it into the ``queries()`` / ``oracle_sql()`` entry points.
 
 Cross-engine determinism rules used throughout (FIXTURES.md):
 - every computed column aliased identically in Spark and SQL
@@ -8307,163 +8307,6 @@ def q_debounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver-panel head (round 10: 10 pinned + 40 rotating). The driver's
-# CORRECTNESS gate oracles exactly the FIRST 50 entries of queries()
-# at sf0.01. Round 8 replaced registration order with an explicit head
-# so the LLM-pipeline flagships got driver-certified; with that panel
-# fully green, a STATIC head would re-certify the same 50 forever
-# while 200+ oracled queries stay parity-suite-only (self-certified).
-# Rounds 8-9 ran 30 pinned + 20 rotating; with 90 queries cumulatively
-# certified and 186 oracled queries still waiting, 20/round needed ~9
-# more rounds — so round 10 shrinks the permanent core to 10 flagships
-# (one per headline surface; certification is CUMULATIVE, so the 21
-# demoted family representatives keep their shipped green rows and
-# re-enter via refill once the fresh pool dries up) and widens the
-# ROTATING half to 40 slots filled, in name order, with oracled
-# queries that have never had a green row in any shipped
-# CORRECTNESS_r*.json — each driver round now certifies 40 fresh
-# queries (pool exhausted in ~5 rounds) and, because its own output
-# file is the rotation's state, automatically advances the window next
-# round (a red row re-enters the pool until it passes). When the
-# never-certified pool dries up the slots refill from the full oracled
-# registry in name order, oldest-certification-first being irrelevant
-# at that point (everything has a green row). Invariants — 50 unique
-# registered names, every one carrying a FULL oracle, pinned
-# flagships always present — are enforced by
-# tests/test_plans.py::test_panel_head_shape.
-PANEL_PINNED: list[str] = [
-    # permanent core: one flagship per headline surface. The family
-    # representatives demoted in round 10 (q_scan_corrupt,
-    # q_dedup_by_key, q_topk_per_group, q_dedup_lsh_buckets,
-    # q_semantic_dedup, q_bpe_learn, ...) stay certified by their
-    # shipped r8/r9 green rows and return through the refill pool.
-    "q_scan_parquet",          # S5 parquet scan (source family)
-    "q_gold_union",            # U1 + P2/P3 + A1-A3 (the gold contract)
-    "q_join_broadcast",        # X1 join family
-    "q_event_window",          # X10 event-time windows (batch)
-    "q_dedup_text",            # exact text dedup
-    "q_minhash_lsh",           # pair-verified MinHash-LSH (md5 twin)
-    "q_similarity_topk",       # exact cosine top-k (bit-exact doubles)
-    "q_corpus_funnel_buckets", # linear end-to-end corpus build
-    "q_png_decode",            # multimodal: stdlib zlib PNG decode
-    "q_streaming_late_drop",   # watermark late-drop (staged drain oracle)
-]
-
-_PANEL_SIZE = 50
-
-# r12 priority lane: fresh (never-certified) queries that should NOT
-# wait for the alphabetical rotation to reach them — typically queries
-# registered after a round's panel froze (q_winnowing / q_url_dedup
-# missed the r11 panel; the r12 alphabetical cohort ends around
-# q_rank_fusion, three rounds before u/w) and the current round's new
-# operators, which should carry a driver-green row in the round that
-# ships them. Names here are placed immediately after the pinned
-# flagships; once certified they drop out of the fresh pool naturally
-# (the lane only ever consumes fresh slots, never re-certifies).
-PANEL_PRIORITY: list[str] = [
-    "q_url_dedup",
-    "q_winnowing",
-    # round-12 additions (registered this round; certify in-round)
-    "q_winnow_dedup",
-    "q_lsh_recall_audit_sampled",
-    "q_cdc_chunk_dedup",
-    "q_winnow_dedup_star",
-    "q_cdc_containment",
-    "q_lang_segments",
-    "q_streaming_cdc_ingest",
-    "q_winnow_spans",
-]
-
-
-def _certified_green() -> set[str]:
-    """Query names with at least one GREEN row in any shipped
-    CORRECTNESS_r*.json (driver output at the repo root). Green =
-    no error and every match flag the driver recorded is true; a red
-    or errored row does NOT count, so a query that ever fails the
-    driver's gate automatically rotates back into the panel until it
-    passes. Missing/unparseable files contribute nothing — worst case
-    the rotation re-certifies queries it already covered."""
-    import glob as _glob
-    import json as _json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: set[str] = set()
-    for path in _glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                rows = _json.load(f)
-        except Exception:  # noqa: BLE001 — evidence file, never fatal
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err"):
-                continue
-            flags = [
-                v for k, v in row.items()
-                if k.endswith("_match") and v is not None
-            ]
-            if flags and all(flags):
-                out.add(name)
-    return out
-
-
-def _panel_head() -> list[str]:
-    """This round's 50-name driver panel: the pinned flagships, then
-    never-green-certified oracled queries in name order until the
-    panel is full (falling back to the whole oracled registry in name
-    order once everything has a green row). Deterministic given the
-    repo's shipped CORRECTNESS files, which is exactly the state the
-    rotation should key on."""
-    pinned = [n for n in PANEL_PINNED if n in REGISTRY]
-    taken = set(pinned)
-    certified = _certified_green()
-    priority = [
-        n for n in PANEL_PRIORITY
-        if n in REGISTRY and REGISTRY[n][1] is not None
-        and n not in taken and n not in certified
-    ]
-    taken |= set(priority)
-    oracled = sorted(
-        n for n in REGISTRY
-        if REGISTRY[n][1] is not None and n not in taken
-    )
-    fresh = [n for n in oracled if n not in certified]
-    refill = [n for n in oracled if n in certified]
-    return (pinned + priority + fresh + refill)[:_PANEL_SIZE]
-
-
-PANEL_HEAD: list[str] = []  # populated on first _panel_order() call
-
-
-def _panel_order() -> list[str]:
-    """Registry names, the computed panel head first, the rest in
-    registration order. queries() and oracle_sql() MUST share this
-    order — the driver zips them positionally by key set. The head is
-    computed once per process (registration is complete by the time
-    anyone asks for the order) and cached in PANEL_HEAD for tests."""
-    if not PANEL_HEAD:
-        PANEL_HEAD.extend(_panel_head())
-    head_set = set(PANEL_HEAD)
-    return PANEL_HEAD + [n for n in REGISTRY if n not in head_set]
-
-
-def queries() -> dict[str, QueryFn]:
-    return {name: REGISTRY[name][0] for name in _panel_order()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name][1].strip()
-        for name in _panel_order()
-        if REGISTRY[name][1] is not None
-    }
-
-
-# ---------------------------------------------------------------------------
 # round 6: semantic dedup, DSIR resampling, incremental agg maintenance,
 # k-anonymity, graph node similarity, count-min sketch
 # ---------------------------------------------------------------------------
@@ -9369,7 +9212,9 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ahead of the dot product, so mismatched pairs never reach the
     kernel); exact-fold cosine keeps the oracle bit-exact."""
     emb = read_table(spark, sf_dir, "embeddings")
-    dot = _exact_dot_udf_cached()
+    from breweries_data_pipeline_spark.operators.similarity import _exact_dot_udf
+
+    dot = _exact_dot_udf()
     c = emb.select(
         "vec_id",
         "label",
@@ -9403,12 +9248,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt=F.xxhash64(F.col("vec_id")),
         salt_buckets=64,
     ).withColumn("rank", F.col("rank").cast("long"))
-
-
-def _exact_dot_udf_cached():
-    from breweries_data_pipeline_spark.operators.similarity import _exact_dot_udf
-
-    return _exact_dot_udf()
 
 
 @register(
@@ -13038,7 +12877,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = li.select("l_orderkey", F.col("l_partkey").alias("src"))
     b = li.select("l_orderkey", F.col("l_partkey").alias("dst"))
     # `<` (not `!=`): emit each undirected edge ONCE — the trailing
-    # distinct shuffles half the rows, and the canonical peel carries
+    # distinct shuffles half the rows, and the peel carries
     # |E| instead of 2|E| through every checkpoint and semi-join
     # (degrees via endpoint explode). Measured 2x faster cold at
     # sf0.1 than the symmetric both-directions form, same output.
@@ -13048,7 +12887,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .distinct()
     )
-    return kcore_peel(edges, 60, rounds=3, canonical=True).orderBy("node")
+    return kcore_peel(edges, 60, rounds=3).orderBy("node")
 
 
 # ---------------------------------------------------------------------------
@@ -16149,12 +15988,3 @@ def q_bitext_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("mined")
     )
-
-
-# ---------------------------------------------------------------------------
-# Registration is complete: materialize this round's driver panel so
-# `from ... import PANEL_HEAD` sees the populated list without having
-# to call queries() first. Must stay the LAST statement that touches
-# the registry — a @register below this line would silently miss the
-# panel computation.
-_panel_order()

@@ -6,10 +6,8 @@ from breweries_data_pipeline_spark.sources.readers import (  # noqa: F401
     read_csv,
     read_json,
     read_orc,
-    read_parquet,
     read_parquet_evolved,
     read_table,
-    read_tables,
     read_text_lines,
     read_xml,
     xml_fixture_from_orders,
@@ -17,7 +15,6 @@ from breweries_data_pipeline_spark.sources.readers import (  # noqa: F401
 from breweries_data_pipeline_spark.sources.writers import (  # noqa: F401
     AuditFailure,
     write_audit_publish,
-    write_json,
     write_parquet,
     write_quality_report,
     write_zordered,

@@ -14,19 +14,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def read_json(
     spark: SparkSession,
@@ -66,12 +53,6 @@ def read_csv(
     elif infer:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan with hive partition-column recovery (reference
-    breweries_aggregate_gold_notebook.py:25-30)."""
-    return spark.read.parquet(path)
 
 
 def read_parquet_evolved(spark: SparkSession, *paths: str) -> DataFrame:
@@ -285,12 +266,6 @@ def csv_fixture_from_orders(spark: SparkSession, sf_dir: str) -> str:
 
             shutil.rmtree(tmp, ignore_errors=True)
     return out
-
-
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    if not names:
-        names = TESTDATA_TABLES
-    return {n: read_table(spark, sf_dir, n) for n in names}
 
 
 def orc_fixture_from_orders(spark: SparkSession, sf_dir: str) -> str:

@@ -62,11 +62,6 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table_name)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSONL sink (reference breweries_fetch_bronze_notebook.py:103-106)."""
-    df.write.mode(mode).json(path)
-
-
 def compact_parquet(
     spark,
     path: str,

@@ -352,70 +352,47 @@ def test_shingle_index_bucketed_roundtrip_exchange_free_corpus_side(spark, sf_di
             spark.sql(f"DROP TABLE IF EXISTS t_shidx_test_{t}")
 
 
-def test_shingle_index_path_roundtrip_and_format_guard(spark, tmp_path):
-    """write_shingle_index -> read_shingle_index reproduces the daily
-    candidate join bit-for-bit, and a pre-v2 layout (flat meta.json,
-    prefix without 'pos') is rejected with an actionable error instead
-    of failing later with PATH_NOT_FOUND / UNRESOLVED_COLUMN."""
+def test_shingle_index_catalog_format_version_guard(spark):
+    """The catalog index records its on-disk format both ways: a
+    fingerprinted index writes format_version 3 (its shingle column is
+    bigint, not string) and reads back as fingerprinted; a meta table
+    with an UNKNOWN future version is rejected loudly instead of
+    silently mis-joining a layout this reader does not understand."""
     import pytest as _pytest
 
     from breweries_data_pipeline_spark.operators.dedup import (
+        _drop_table_and_stale_location,
         build_shingle_index,
-        near_dedup_against_index,
-        read_shingle_index,
-        write_shingle_index,
+        read_shingle_index_bucketed,
+        write_shingle_index_bucketed,
     )
 
     history = spark.createDataFrame(
         [(1, BASE), (2, BASE + " tail tokens here"), (3, "completely different words")],
         ["doc_id", "text"],
     )
-    batch = spark.createDataFrame([(100, BASE)], ["doc_id", "text"])
-    idx_mem = build_shingle_index(history, threshold=0.5)
-    path = str(tmp_path / "shidx")
-    write_shingle_index(idx_mem, path)
-    idx = read_shingle_index(spark, path)
-    assert idx.threshold == 0.5 and idx.shingle_size == 3
-    out = sorted(map(tuple, near_dedup_against_index(batch, idx, threshold=0.5).collect()))
-    mem = sorted(map(tuple, near_dedup_against_index(batch, idx_mem, threshold=0.5).collect()))
-    assert out == mem
+    try:
+        write_shingle_index_bucketed(
+            build_shingle_index(history, threshold=0.5, fingerprint=True),
+            "t_shidx_fmt",
+            n_buckets=2,
+        )
+        meta = spark.table("t_shidx_fmt_meta").first()
+        assert int(meta["format_version"]) == 3 and bool(meta["fingerprint"])
+        assert read_shingle_index_bucketed(spark, "t_shidx_fmt").fingerprint is True
 
-    # pre-v2 layout #1: meta.json flat file instead of a meta dataset
-    old = tmp_path / "oldidx"
-    old.mkdir()
-    (old / "meta.json").write_text('{"threshold": 0.5, "shingle_size": 3}')
-    with _pytest.raises(ValueError, match="[Rr]ebuild"):
-        read_shingle_index(spark, str(old))
-
-    # pre-v2 layout #2: meta dataset present but prefix lacks 'pos'
-    legacy = tmp_path / "legacyidx"
-    spark.createDataFrame(
-        [(0, 1, 2)], "threshold_ppm bigint, shingle_size int, format_version int"
-    ).coalesce(1).write.mode("overwrite").json(str(legacy / "meta"))
-    idx.prefix.drop("pos").write.mode("overwrite").parquet(str(legacy / "prefix"))
-    with _pytest.raises(ValueError, match="pos"):
-        read_shingle_index(spark, str(legacy))
-
-    # version enforcement both ways: a fingerprinted index writes
-    # format_version 3 (different on-disk shingle type) and reads
-    # back; an UNKNOWN future version is rejected loudly instead of
-    # silently mis-joining a layout this reader does not understand
-    fp_path = str(tmp_path / "fpidx")
-    write_shingle_index(
-        build_shingle_index(history, threshold=0.5, fingerprint=True), fp_path
-    )
-    meta = spark.read.json(fp_path + "/meta").first()
-    assert int(meta["format_version"]) == 3 and bool(meta["fingerprint"])
-    assert read_shingle_index(spark, fp_path).fingerprint is True
-    future = tmp_path / "futureidx"
-    spark.createDataFrame(
-        [(500000, 3, 4, False)],
-        "threshold_ppm bigint, shingle_size int, format_version int, "
-        "fingerprint boolean",
-    ).coalesce(1).write.mode("overwrite").json(str(future / "meta"))
-    idx.prefix.write.mode("overwrite").parquet(str(future / "prefix"))
-    with _pytest.raises(ValueError, match="format_version=4"):
-        read_shingle_index(spark, str(future))
+        _drop_table_and_stale_location(spark, "t_shidx_future_meta")
+        spark.createDataFrame(
+            [(500000, 3, 4, False)],
+            "threshold_ppm bigint, shingle_size int, format_version int, "
+            "fingerprint boolean",
+        ).write.mode("overwrite").format("parquet").saveAsTable("t_shidx_future_meta")
+        with _pytest.raises(ValueError, match="format_version=4"):
+            read_shingle_index_bucketed(spark, "t_shidx_future")
+    finally:
+        for t in ("prefix", "sets", "freq", "meta"):
+            spark.sql(f"DROP TABLE IF EXISTS t_shidx_fmt_{t}")
+        spark.sql("DROP TABLE IF EXISTS t_shidx_future_meta")
 
 
 def test_bucket_star_survivors_equal_clique_survivors(spark, sf_dir):

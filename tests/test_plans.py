@@ -334,36 +334,38 @@ def test_bucketed_rank_offsets_join_is_broadcast(spark, sf_dir):
 
 def test_panel_head_shape():
     """The driver's CORRECTNESS gate oracles exactly the first 50
-    entries of queries(). PANEL_HEAD (10 pinned flagships + 40
-    rotating slots, r10) must therefore be: exactly 50 unique names,
-    every one registered, every one carrying a FULL DuckDB oracle (no
-    rows-only in the head), actually emitted first by
-    queries()/oracle_sql(), with every pinned flagship present and
+    entries of __spark_entry__.queries(). The panel head (10 pinned
+    flagships + 40 rotating slots) must therefore be: exactly 50
+    unique names, every one registered, every one carrying a FULL
+    DuckDB oracle (no rows-only in the head), actually emitted first
+    by queries()/oracle_sql(), with every pinned flagship present and
     every rotating slot drawn from queries with no green row in any
     shipped CORRECTNESS file (until that pool dries up)."""
-    from breweries_data_pipeline_spark.queries import (
-        PANEL_HEAD,
+    from __spark_entry__ import (
         PANEL_PINNED,
         PANEL_PRIORITY,
         _certified_green,
+        _panel_head,
         oracle_sql,
         queries,
     )
 
-    assert len(PANEL_HEAD) == 50
-    assert len(set(PANEL_HEAD)) == 50
-    assert all(n in REGISTRY for n in PANEL_HEAD)
+    head = list(_panel_head())
+
+    assert len(head) == 50
+    assert len(set(head)) == 50
+    assert all(n in REGISTRY for n in head)
     # full oracle for every head entry — the panel must be 50/50 oracled
-    assert all(REGISTRY[n][1] is not None for n in PANEL_HEAD)
+    assert all(REGISTRY[n][1] is not None for n in head)
     q = list(queries())
-    assert q[:50] == PANEL_HEAD
+    assert q[:50] == head
     # nothing lost or duplicated by the reorder
     assert len(q) == len(REGISTRY) and set(q) == set(REGISTRY)
     # oracle_sql preserves the same relative order (driver zips by key)
     o = list(oracle_sql())
     assert o == [n for n in q if REGISTRY[n][1] is not None]
     # the pinned flagships lead the panel, in order
-    assert PANEL_HEAD[: len(PANEL_PINNED)] == PANEL_PINNED
+    assert head[: len(PANEL_PINNED)] == PANEL_PINNED
     flagships = {
         "q_dedup_text", "q_minhash_lsh", "q_similarity_topk",
         "q_png_decode", "q_corpus_funnel_buckets",
@@ -389,7 +391,7 @@ def test_panel_head_shape():
     # names jumping the alphabetical queue) first, then
     # never-green-certified in name order
     certified = _certified_green()
-    rotating = PANEL_HEAD[len(PANEL_PINNED):]
+    rotating = head[len(PANEL_PINNED):]
     priority = [
         n for n in PANEL_PRIORITY
         if n in REGISTRY and REGISTRY[n][1] is not None
