@@ -17,6 +17,10 @@ arrays, LSH band tables in ``operators/dedup.py`` /
 scoped to the query registry would miss exactly those when the
 operators are used directly as a library.
 
+Scratch catalog tables go through the same release: a query that
+writes tables and returns a plan reading them registers them with
+:func:`track_table`.
+
 Operators that fully consume a cache within their own function body
 (persist -> iterate -> unpersist, e.g. the BFS/PageRank frontier
 loops) manage their own lifecycle and do NOT go through the tracker.
@@ -27,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _TRACKED_CACHES: list[DataFrame] = []
+_TRACKED_TABLES: list[tuple[object, str]] = []
 
 
 def track_persist(df: DataFrame) -> DataFrame:
@@ -35,11 +40,18 @@ def track_persist(df: DataFrame) -> DataFrame:
     return df.persist()
 
 
+def track_table(spark, name: str) -> None:
+    """Register a scratch catalog table that a RETURNED (lazy) plan
+    reads, so :func:`release_caches` drops it — table and warehouse
+    directory — once the caller has materialised the result."""
+    _TRACKED_TABLES.append((spark, name))
+
+
 def release_caches() -> int:
-    """Unpersist every tracked intermediate so far. Returns the number
-    released. Idempotent; safe to call anytime after the consumers have
-    collected/written their results (the caches only pay off through
-    materialization)."""
+    """Unpersist every tracked intermediate and drop every tracked
+    table so far. Returns the number released. Idempotent; safe to
+    call anytime after the consumers have collected/written their
+    results (the caches only pay off through materialization)."""
     n = 0
     while _TRACKED_CACHES:
         df = _TRACKED_CACHES.pop()
@@ -48,4 +60,31 @@ def release_caches() -> int:
             n += 1
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
+    while _TRACKED_TABLES:
+        spark, name = _TRACKED_TABLES.pop()
+        try:
+            _drop_table_and_stale_location(spark, name)
+            n += 1
+        except Exception:  # noqa: BLE001 — session may already be gone
+            pass
     return n
+
+
+def _drop_table_and_stale_location(spark, name: str) -> None:
+    """DROP TABLE IF EXISTS, then clear any orphaned managed-table
+    directory: a previous session with an in-memory metastore may have
+    left the warehouse location behind, and saveAsTable refuses to
+    reuse a location it has no catalog entry for
+    (LOCATION_ALREADY_EXISTS). Uses the Hadoop FileSystem API so
+    remote warehouses behave the same as local ones."""
+    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+    try:
+        jvm = spark.sparkContext._jvm
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        path = jvm.org.apache.hadoop.fs.Path(wh.rstrip("/") + "/" + name.lower())
+        fs = path.getFileSystem(conf)
+        if fs.exists(path):
+            fs.delete(path, True)
+    except Exception:  # noqa: BLE001 — best-effort; saveAsTable will
+        pass           # surface a real problem if one remains

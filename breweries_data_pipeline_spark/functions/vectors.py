@@ -1,8 +1,8 @@
 """Vector column expressions over array<float|double> embeddings
 (SURVEY.md §2.6 X8).
 
-Pure JVM-side higher-order functions (zip_with + aggregate) — no UDF,
-no serialization. Elements are cast to double before accumulating so
+Pure JVM-side higher-order functions (aggregate) — no UDF, no
+serialization. Elements are cast to double before accumulating so
 results are precision-stable regardless of the stored element type.
 """
 
@@ -10,11 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def dot_product(a: Column, b: Column) -> Column:
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
 def l2_norm(a: Column) -> Column:

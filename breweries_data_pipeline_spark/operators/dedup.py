@@ -50,7 +50,10 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from breweries_data_pipeline_spark.cache import track_persist
+from breweries_data_pipeline_spark.cache import (
+    _drop_table_and_stale_location,
+    track_persist,
+)
 from breweries_data_pipeline_spark.functions.text import ngram_jaccard
 from breweries_data_pipeline_spark.operators.clean import deduplicate
 from breweries_data_pipeline_spark.operators.text import with_fingerprint
@@ -1181,29 +1184,9 @@ def _meta_format_version(meta, where: str) -> int:
     return ver
 
 
-def _drop_table_and_stale_location(spark, name: str) -> None:
-    """DROP TABLE IF EXISTS, then clear any orphaned managed-table
-    directory: a previous session with an in-memory metastore may have
-    left the warehouse location behind, and saveAsTable refuses to
-    reuse a location it has no catalog entry for
-    (LOCATION_ALREADY_EXISTS). Uses the Hadoop FileSystem API so
-    remote warehouses behave the same as local ones."""
-    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-    try:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        wh = spark.conf.get("spark.sql.warehouse.dir")
-        path = jvm.org.apache.hadoop.fs.Path(wh.rstrip("/") + "/" + name.lower())
-        fs = path.getFileSystem(conf)
-        if fs.exists(path):
-            fs.delete(path, True)
-    except Exception:  # noqa: BLE001 — best-effort; saveAsTable will
-        pass           # surface a real problem if one remains
-
-
 def write_shingle_index_bucketed(
     index: ShingleIndex, table_prefix: str, *, n_buckets: int = 32
-) -> None:
+) -> list[str]:
     """Persist the index as CATALOG tables with ``prefix`` bucketed
     (and sorted) by shingle — the production layout: the daily
     candidate join reads the corpus prefix with NO exchange and NO
@@ -1214,11 +1197,16 @@ def write_shingle_index_bucketed(
 
     ``sets`` and ``freq`` are bucketed by their own join keys too:
     ``sets`` by id (the verify join), ``freq`` by shingle (the batch
-    prefix-cut join ranks against it)."""
+    prefix-cut join ranks against it).
+
+    Returns the names of the tables written. They outlive the session
+    (an index is re-read by later runs); a caller that uses them as
+    scratch registers them with ``cache.track_table``."""
     p = index.prefix
     spark = p.sparkSession
-    for t in ("prefix", "sets", "freq", "meta"):
-        _drop_table_and_stale_location(spark, f"{table_prefix}_{t}")
+    tables = [f"{table_prefix}_{t}" for t in ("prefix", "sets", "freq", "meta")]
+    for t in tables:
+        _drop_table_and_stale_location(spark, t)
     # repartition on the bucket key first: a bucketBy write emits one
     # file per (task, bucket) pair, so writing from arbitrary upstream
     # partitioning fans out to tasks x buckets small files; hash-
@@ -1248,6 +1236,7 @@ def write_shingle_index_bucketed(
         "threshold_ppm bigint, shingle_size int, format_version int, "
         "fingerprint boolean",
     ).write.mode("overwrite").format("parquet").saveAsTable(f"{table_prefix}_meta")
+    return tables
 
 
 def read_shingle_index_bucketed(spark, table_prefix: str) -> ShingleIndex:

@@ -1,7 +1,8 @@
 """Embedding similarity search (SURVEY.md §2.6 X8; BASELINE.json:
 brute-force cosine top-k baseline + LSH-bucketed ANN scale path).
 
-Two plans, one contract (probe_id, vec_id, cosine, rank):
+Top-k search plans share one contract (probe_id, vec_id, cosine,
+rank):
 
 - ``cosine_topk`` (exact baseline): broadcast the (small) probe set
   against the corpus — a BroadcastNestedLoopJoin that scans the corpus
@@ -19,6 +20,30 @@ Two plans, one contract (probe_id, vec_id, cosine, rank):
   cosine. Recall tunes with bands/bits (more bands = more recall, more
   candidates). At 100 TB the signature pass is a narrow scan-bound
   map and the join touches only colliding buckets.
+
+- ``ivf_topk`` and ``pq_topk``: centroid-partitioned search (inverted
+  lists; product-quantization codes), each with an exact rerank.
+
+The clustering family (IVF, PQ, ``semantic_dedup``, the registry's
+k-means and bitext queries) shares ONE nearest-centroid assignment
+step, in two lanes with one contract (nearest by cosine or squared
+L2, ties to the lowest centroid id):
+
+- ``nearest_centroids``: the numpy kernel, one matmul per Arrow batch
+  for all k centroids. ``nearest_centroid_udf`` is the one pandas-UDF
+  factory around it; ``pq_topk``'s encoder calls it per subspace.
+- ``nearest_centroid_fold``: the exact-fold JVM lane, a zero-shuffle
+  ``array_min`` over (distance, id) structs against the broadcast
+  centroid literal, each distance a pinned-order ``aggregate`` fold —
+  the IEEE sequence a DuckDB CROSS JOIN + row_number replay
+  reproduces bit-for-bit. Its codegen cost grows with k, so callers
+  that pick a lane by k switch to the numpy lane above k = 16:
+  ``ivf_l2_cell_column`` (squared L2) and ``semantic_dedup``, whose
+  oracle lane is the cosine form of the fold (exact-fold dots,
+  ``array_max`` over (cosine, -id)).
+
+Every Lloyd iteration is ``kmeans_centroids`` (E-step through the
+numpy lane, M-step as one per-cluster hash aggregate).
 
 Hyperplanes are module-level constants from a seeded PRNG — identical
 across sessions/executors, no numpy, no driver->executor closure
@@ -142,27 +167,6 @@ def _exact_dot_udf() -> "object":
         for j in range(A.shape[1]):
             acc = acc + A[:, j] * B[:, j]
         return pd.Series(acc)
-
-    _dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf("double")(_dot)
-
-
-def _pairwise_dot_udf() -> "object":
-    """Vectorized dot product of two array columns (one numpy einsum
-    per Arrow batch) — the bulk-pair scoring kernel. The HOF cosine
-    stays in the oracle-checked exact paths; this is for candidate
-    sets too large for interpreted per-row folds."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _dot(a, b):
-        import numpy as np
-
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.vstack(a.to_numpy()).astype(np.float64)
-        B = np.vstack(b.to_numpy()).astype(np.float64)
-        return pd.Series(np.einsum("ij,ij->i", A, B))
 
     _dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
     return pandas_udf("double")(_dot)
@@ -339,28 +343,125 @@ def dedup_embeddings(
     return corpus.join(dup_ids, id_col, "left_anti")
 
 
-def _nearest_centroids_udf(centroids: list[list[float]], n_probe: int) -> Column:
-    """array<int> of the ``n_probe`` nearest centroid ids by cosine —
-    one numpy matmul per Arrow batch. The centroid matrix travels in
-    the closure (k x d floats — trivially small)."""
+def nearest_centroids(V, C, metric: str = "cosine", n: int = 1):
+    """The one nearest-centroid kernel. For each row of ``V``
+    (rows x d), the positions of its ``n`` nearest rows of ``C``
+    (k x d), nearest first, ties to the LOWEST position; returned with
+    the (rows x k) score matrix they were ranked by (higher = nearer):
+
+    - ``cosine``: both sides unit-normalised (zero norms guarded); the
+      score is the cosine similarity.
+    - ``l2``: the score is ``2 v.c - ||c||^2`` = ``||v||^2 - ||v-c||^2``;
+      ``||v||^2`` is constant per row, so ranking by it is ranking by
+      squared-L2 distance, without computing that term.
+
+    One matmul for the whole batch, so it is not an IEEE-order replay
+    of a SQL fold: ``nearest_centroid_fold`` is the oracle-exact lane,
+    and tests/test_similarity.py pins the two lanes to the same
+    assignments (separated or exactly tied fixtures: near-ties within
+    rounding may split differently)."""
+    import numpy as np
+
+    V = np.asarray(V, dtype=np.float64)
+    C = np.asarray(C, dtype=np.float64)
+    if metric == "cosine":
+        C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
+        V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
+        score = V @ C.T
+    elif metric == "l2":
+        score = 2.0 * (V @ C.T) - (C * C).sum(axis=1)[None, :]
+    else:
+        raise ValueError(f"metric must be 'cosine' or 'l2', got {metric!r}")
+    if n == 1:
+        # argmax takes the FIRST maximum: the lowest position
+        return score.argmax(axis=1)[:, None], score
+    return np.argsort(-score, axis=1, kind="stable")[:, :n], score
+
+
+def nearest_centroid_udf(
+    cells: list[tuple[int, list[float]]],
+    metric: str = "cosine",
+    n: int | None = None,
+):
+    """Pandas UDF over a vector column around ``nearest_centroids``,
+    with the centroids given as (id, vector) pairs — bounded model
+    state (k x d floats) that travels in the closure. Ties go to the
+    LOWEST id whatever the list order (the pairs are sorted by id on
+    entry). Returns ``struct<cluster: long, score: double>`` for the
+    nearest centroid, or with ``n`` the ``array<long>`` of the ``n``
+    nearest ids, nearest first."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    def _nc(vs):
+    cells = sorted(cells, key=lambda sc: int(sc[0]))
+    ids = [int(cid) for cid, _ in cells]
+    cents = [[float(x) for x in c] for _, c in cells]
+
+    def _nearest(vs):
         import numpy as np
 
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        C = np.asarray(centroids, dtype=np.float64)
-        C = C / np.linalg.norm(C, axis=1, keepdims=True)
-        V = np.vstack(vs.to_numpy()).astype(np.float64)
-        V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-        sims = V @ C.T  # (n, k)
-        top = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(top))
+        cid = np.asarray(ids, dtype=np.int64)
+        V = np.vstack(vs.to_numpy()) if len(vs) else np.empty((0, len(cents[0])))
+        idx, score = nearest_centroids(V, cents, metric, 1 if n is None else n)
+        if n is not None:
+            return pd.Series(list(cid[idx]), dtype=object)
+        best = idx[:, 0]
+        return pd.DataFrame(
+            {"cluster": cid[best], "score": score[np.arange(len(best)), best]}
+        )
 
-    _nc.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf("array<int>")(_nc)
+    if n is None:
+        _nearest.__annotations__ = {"vs": pd.Series, "return": pd.DataFrame}
+        return pandas_udf("cluster long, score double")(_nearest)
+    _nearest.__annotations__ = {"vs": pd.Series, "return": pd.Series}
+    return pandas_udf("array<long>")(_nearest)
+
+
+def nearest_centroid_fold(
+    cells: list[tuple[int, list[float]]], vec_col: str | Column = "v"
+) -> Column:
+    """long Column: the id of the nearest (id, centroid) pair by
+    squared L2, ties to the LOWEST id — the exact-fold lane of the
+    nearest-centroid step. One zero-shuffle ``array_min`` over
+    (dist, id) structs against the broadcast centroid literal, each
+    distance a pinned-order ``aggregate`` fold: the IEEE sequence a
+    DuckDB CROSS JOIN + row_number replay reproduces bit-for-bit.
+    Integer centroids (python ints, over a BIGINT vector column) fold
+    in BIGINT — exact at any magnitude that fits — and others in
+    DOUBLE. Codegen cost grows with k; ``nearest_centroid_udf`` is
+    the large-k lane."""
+    if not cells:
+        # F.array() of nothing is an AnalysisException, not the empty
+        # result a SQL replay would give — name the contract instead
+        raise ValueError("nearest-centroid assignment needs >= 1 centroid")
+    col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
+    integral = all(isinstance(x, int) for _, c in cells for x in c)
+
+    def lit(x):
+        return F.lit(int(x)).cast("long") if integral else F.lit(float(x))
+
+    cands = F.array(
+        *[
+            F.struct(
+                F.lit(int(cid)).cast("long").alias("cell"),
+                F.array(*[lit(x) for x in c]).alias("c"),
+            )
+            for cid, c in cells
+        ]
+    )
+    return F.array_min(
+        F.transform(
+            cands,
+            lambda s: F.struct(
+                F.aggregate(
+                    F.zip_with(col, s["c"], lambda xx, c: (xx - c) * (xx - c)),
+                    lit(0),
+                    lambda acc, val: acc + val,
+                ).alias("dist"),
+                s["cell"].alias("cell"),
+            ),
+        )
+    )["cell"]
 
 
 def kmeans_centroids(
@@ -369,28 +470,33 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     k: int = 16,
     n_iter: int = 3,
+    metric: str = "cosine",
 ) -> list[list[float]]:
-    """Distributed Lloyd k-means over an embedding column.
+    """Distributed Lloyd k-means over an embedding column — the one
+    Lloyd loop of the similarity family (cosine for IVF and SemDeDup,
+    ``metric="l2"`` for PQ's subspace codebooks, where cosine would
+    ignore the subvector norms that carry signal once a vector is
+    split).
 
-    Deterministic init (the k lowest-id vectors); each iteration is
-    one corpus scan: a vectorized nearest-centroid assignment
-    (cosine), then the per-cluster mean as ONE hash aggregate with a
-    per-dimension avg column for each of the d dims — the shuffle
-    carries one row per cluster per map task (k rows x d partial
-    (sum, count) columns), NOT one row per (vector, dim): the earlier
-    posexplode + groupBy(cluster, dim) form amplified the pre-shuffle
-    row count d-fold (64x at 64 dims — r5 advice). Only the k x d
-    centroid matrix (model state, a few KB) is collected to the
-    driver per iteration. Empty clusters keep their previous
-    centroid."""
+    Deterministic init (the k lowest-id vectors; ``n_iter=0`` returns
+    them); each iteration is one corpus scan: the nearest-centroid
+    step (``nearest_centroid_udf``), then the per-cluster mean as ONE
+    hash aggregate with a per-dimension avg column for each of the d
+    dims — the shuffle carries one row per cluster per map task (k
+    rows x d partial (sum, count) columns), NOT one row per (vector,
+    dim): the earlier posexplode + groupBy(cluster, dim) form
+    amplified the pre-shuffle row count d-fold (64x at 64 dims — r5
+    advice). Only the k x d centroid matrix (model state, a few KB)
+    is collected to the driver per iteration. Empty clusters keep
+    their previous centroid."""
     cents = [
         list(r[0]) for r in df.orderBy(id_col).limit(k).select(vec_col).collect()
     ]
     d = len(cents[0])
     for _ in range(n_iter):
-        assign1 = _nearest_centroids_udf(cents, 1)
+        assign = nearest_centroid_udf(list(enumerate(cents)), metric)
         assigned = df.select(
-            F.element_at(assign1(F.col(vec_col)), 1).alias("__cluster"),
+            assign(F.col(vec_col))["cluster"].alias("__cluster"),
             F.col(vec_col).alias("__v"),
         )
         rows = (
@@ -424,33 +530,28 @@ def ivf_topk(
     contract as cosine_topk; recall ~ n_probe/n_clusters coverage of
     the S-curve.
 
-    With ``kmeans_iter=0`` centroids are a deterministic sample (the
-    ``n_clusters`` lowest-id vectors); ``kmeans_iter>0`` runs that many
-    distributed Lloyd iterations first (kmeans_centroids). At 100 TB:
-    assignment is a narrow scan-bound map; the probe join shuffles on
-    cluster id, i.e. each probe's work touches n_probe/n_clusters of
-    the corpus instead of all of it."""
-    if kmeans_iter > 0:
-        cents = kmeans_centroids(corpus, vec_col, id_col, n_clusters, kmeans_iter)
-    else:
-        cents = [
-            list(r[0])
-            for r in corpus.orderBy(id_col).limit(n_clusters).select(vec_col).collect()
-        ]
+    Centroids come from ``kmeans_centroids`` with ``kmeans_iter``
+    Lloyd iterations (0: the ``n_clusters`` lowest-id vectors), and
+    both sides are assigned by ``nearest_centroid_udf`` (cosine). At
+    100 TB: assignment is a narrow scan-bound map; the probe join
+    shuffles on cluster id, i.e. each probe's work touches
+    n_probe/n_clusters of the corpus instead of all of it."""
+    cents = kmeans_centroids(corpus, vec_col, id_col, n_clusters, kmeans_iter)
+    cells = list(enumerate(cents))
     dot = _exact_dot_udf()
-    assign1 = _nearest_centroids_udf(cents, 1)
     c = corpus.select(
         id_col,
         vec_col,
         F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__cnorm"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("__cluster"),
+        nearest_centroid_udf(cells)(F.col(vec_col))["cluster"].alias("__cluster"),
     )
-    assign_probe = _nearest_centroids_udf(cents, n_probe)
     p = probes.select(
         F.col(id_col).alias("probe_id"),
         F.col(vec_col).alias("__probe_vec"),
         F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__pnorm"),
-        F.explode(assign_probe(F.col(vec_col))).alias("__cluster"),
+        F.explode(nearest_centroid_udf(cells, n=n_probe)(F.col(vec_col))).alias(
+            "__cluster"
+        ),
     )
     scored = (
         c.join(
@@ -643,68 +744,6 @@ def quantize_embeddings(
 # ---------------------------------------------------------------------------
 
 
-def _l2_subspace_kmeans(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    lo: int,
-    width: int,
-    k: int,
-    n_iter: int,
-) -> list[list[float]]:
-    """L2 Lloyd k-means over one contiguous subspace slice
-    [lo, lo+width) of the embedding column. Same distributed shape as
-    ``kmeans_centroids`` (one scan per iteration, per-cluster mean as
-    ONE hash aggregate with d' avg columns, only the k x d' model
-    collected) but with the EUCLIDEAN metric PQ requires — cosine
-    assignment would ignore subvector norms, which carry real signal
-    once the full vector is split. Deterministic init: subvectors of
-    the k lowest ids."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    sub = df.select(
-        F.col(id_col).alias("__id"),
-        F.slice(F.col(vec_col), lo + 1, width).alias("__sv"),
-    )
-    cents = [
-        list(r[0]) for r in sub.orderBy("__id").limit(k).select("__sv").collect()
-    ]
-
-    for _ in range(n_iter):
-        frozen = [list(c) for c in cents]
-
-        def _assign(vs):
-            import numpy as np
-
-            if len(vs) == 0:
-                return pd.Series([], dtype="int32")
-            C = np.asarray(frozen, dtype=np.float64)  # (k, d')
-            V = np.vstack(vs.to_numpy()).astype(np.float64)  # (n, d')
-            # ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2; argmin drops ||v||^2
-            d2 = -2.0 * (V @ C.T) + (C * C).sum(axis=1)[None, :]
-            return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
-        _assign.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-        assigned = sub.select(
-            pandas_udf("int")(_assign)(F.col("__sv")).alias("__cluster"),
-            F.col("__sv"),
-        )
-        rows = (
-            assigned.groupBy("__cluster")
-            .agg(
-                *[
-                    F.avg(F.element_at("__sv", i + 1)).alias(f"__m{i}")
-                    for i in range(width)
-                ]
-            )
-            .collect()
-        )
-        new = {r["__cluster"]: [r[f"__m{i}"] for i in range(width)] for r in rows}
-        cents = [new.get(c, cents[c]) for c in range(len(cents))]
-    return cents
-
-
 def pq_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -722,13 +761,15 @@ def pq_topk(
 
     Pipeline:
     1. TRAIN — split the d dims into ``m`` contiguous subspaces and run
-       L2 k-means (``ksub`` centroids each) per subspace; model size is
-       m * ksub * (d/m) floats, collected to the driver (a few KB).
+       L2 ``kmeans_centroids`` (``ksub`` centroids each) on each sliced
+       column; model size is m * ksub * (d/m) floats, collected to the
+       driver (a few KB).
     2. ENCODE — one Arrow-batched corpus scan maps every vector to an
-       m-byte code (argmin L2 per subspace): the index the scoring pass
-       reads is m ints per vector instead of d floats — a 16-64x
-       footprint cut, which at 100 TB is the difference between an
-       in-memory index and re-scanning raw vectors.
+       m-byte code (``nearest_centroids`` by L2 per subspace): the
+       index the scoring pass reads is m ints per vector instead of d
+       floats — a 16-64x footprint cut, which at 100 TB is the
+       difference between an in-memory index and re-scanning raw
+       vectors.
     3. SCORE (ADC) — each probe precomputes an m x ksub lookup table of
        subspace inner products (probes are collected: the SMALL-probe-
        set contract shared with cosine_topk); scoring a corpus code is
@@ -757,15 +798,23 @@ def pq_topk(
         raise ValueError(f"dim {d} not divisible by m={m} subspaces")
     width = d // m
     books = [
-        _l2_subspace_kmeans(corpus, vec_col, id_col, j * width, width, ksub,
-                            kmeans_iter)
+        kmeans_centroids(
+            corpus.select(
+                F.col(id_col).alias("__id"),
+                F.slice(F.col(vec_col), j * width + 1, width).alias("__sv"),
+            ),
+            "__sv",
+            "__id",
+            ksub,
+            kmeans_iter,
+            metric="l2",
+        )
         for j in range(m)
     ]
 
     def _encode(batches):
         import numpy as np
 
-        B = [np.asarray(b, dtype=np.float64) for b in books]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -773,8 +822,7 @@ def pq_topk(
             codes = np.empty((len(V), m), dtype=np.int32)
             for j in range(m):
                 S = V[:, j * width:(j + 1) * width]
-                d2 = -2.0 * (S @ B[j].T) + (B[j] * B[j]).sum(axis=1)[None, :]
-                codes[:, j] = np.argmin(d2, axis=1)
+                codes[:, j] = nearest_centroids(S, books[j], "l2")[0][:, 0]
             yield pd.DataFrame({"__id": pdf["__id"], "__code": list(codes)})
 
     coded = corpus.select(
@@ -854,113 +902,22 @@ def pq_topk(
 def ivf_l2_cell_column(
     seed_cells: list[tuple[int, list[float]]],
     vec_col: str | Column = "v",
-    use_matmul: bool = False,
 ) -> Column:
-    """long Column: nearest seed by L2 (IVF cell assignment), ties to
-    the LOWEST cell id. Two kernels, one contract:
-
-    - exact-fold lane (default): one zero-shuffle ``array_min`` over
-      (dist, cell) structs against the broadcast seed literal, each
-      distance a pinned-order ``aggregate`` fold — the IEEE sequence a
-      DuckDB CROSS JOIN + row_number replay reproduces bit-for-bit.
-      Codegen cost grows with k, so callers switch lanes around k~16.
-    - matmul lane (``use_matmul``): one numpy matmul per Arrow batch
-      (``-2 V@C.T + ||c||^2``; the ``||v||^2`` term is argmin-
-      invariant and dropped), argmin ties to the FIRST seed — which is
-      the lowest cell id only because this function sorts
-      ``seed_cells`` by cell id on entry (callers need not pre-sort).
-      One pass for ALL seeds; not an IEEE-order oracle replay —
-      equivalence to the exact lane is pinned by
-      tests/test_similarity.py's cross-lane fixtures. FP caveat: the
-      two lanes compute distance with different formulas (pinned fold
-      of (x-c)^2 vs -2 V@C.T + ||c||^2), so NEAR-ties — distances
-      equal to within rounding, not exactly — can assign differently
-      across lanes; the cross-lane tests use separated/exact-tie
-      fixtures for exactly this reason.
+    """long Column: nearest seed by squared L2 (IVF cell assignment),
+    ties to the LOWEST cell id whatever the list order. The lane
+    follows from the seed count, as in ``semantic_dedup``: up to 16
+    seeds the exact-fold ``nearest_centroid_fold`` (the oracle
+    regime), above that the numpy ``nearest_centroid_udf`` (one pass
+    for ALL seeds; not an IEEE-order replay — the two lanes are pinned
+    to the same cells by tests/test_similarity.py's cross-lane
+    fixtures).
 
     ``seed_cells`` is bounded model state (k x d floats) — the
     documented bounded-collect class."""
-    # lowest-cell-id tie contract: argmin ties to list position, so
-    # pin list position = cell-id order here rather than as an
-    # undocumented caller precondition
-    seed_cells = sorted(seed_cells, key=lambda sc: int(sc[0]))
+    if len(seed_cells) <= 16:
+        return nearest_centroid_fold(seed_cells, vec_col)
     col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if not use_matmul:
-        cands = F.array(
-            *[
-                F.struct(
-                    F.lit(int(cid)).cast("long").alias("cell"),
-                    F.array(*[F.lit(float(x)) for x in c]).alias("c"),
-                )
-                for cid, c in seed_cells
-            ]
-        )
-        return F.array_min(
-            F.transform(
-                cands,
-                lambda s: F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            col, s["c"], lambda xx, c: (xx - c) * (xx - c)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, val: acc + val,
-                    ).alias("dist"),
-                    s["cell"].alias("cell"),
-                ),
-            )
-        )["cell"]
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    frozen = [[float(x) for x in c] for _, c in seed_cells]
-    ids = [int(cid) for cid, _ in seed_cells]
-
-    def _cell(vs):
-        import numpy as np
-
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        C = np.asarray(frozen, dtype=np.float64)
-        cid = np.asarray(ids, dtype=np.int64)
-        V = np.vstack(vs.to_numpy()).astype(np.float64)
-        d2 = -2.0 * (V @ C.T) + (C * C).sum(axis=1)[None, :]
-        return pd.Series(cid[np.argmin(d2, axis=1)])
-
-    _cell.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return pandas_udf("long")(_cell)(col)
-
-
-def _assign_with_cos_udf(centroids: list[list[float]]) -> Column:
-    """struct<cluster:int, cos:double>: nearest centroid by cosine via
-    one numpy matmul per Arrow batch — the large-k assignment kernel
-    (one pass for ALL centroids, vs one exact-fold column per centroid
-    on the small-k oracle path). Ties broken toward the lowest
-    centroid id via argmax over (cos, -id) lexicographic order."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _nc(vs):
-        import numpy as np
-
-        if len(vs) == 0:
-            return pd.DataFrame({"cluster": [], "cos": []})
-        C = np.asarray(centroids, dtype=np.float64)
-        C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-        V = np.vstack(vs.to_numpy()).astype(np.float64)
-        V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-30)
-        sims = V @ C.T  # (n, k)
-        best = sims.argmax(axis=1)  # numpy argmax takes FIRST max = lowest id
-        return pd.DataFrame(
-            {
-                "cluster": best.astype("int32"),
-                "cos": sims[np.arange(len(V)), best],
-            }
-        )
-
-    _nc.__annotations__ = {"vs": pd.Series, "return": pd.DataFrame}
-    return pandas_udf("cluster int, cos double")(_nc)
+    return nearest_centroid_udf(seed_cells, "l2")(col)["cluster"]
 
 
 def semantic_dedup(
@@ -993,14 +950,16 @@ def semantic_dedup(
     1. centroids: ``kmeans_centroids`` (deterministic lowest-id seeds;
        ``n_iter`` Lloyd rounds — 0 keeps the whole operator
        SQL-oracle-reproducible, >0 is the production setting).
-    2. assignment — two kernels, same contract:
+    2. assignment — the family's nearest-centroid step (cosine, ties
+       to the lowest centroid id) in two lanes picked by k:
        - k <= 16 (oracle regime): k exact-fold dots per row against
          literal centroid arrays, argmax via array_max over (cos, -id)
-         structs — bit-identical to the DuckDB replay.
-       - k > 16 (scale regime): ONE numpy matmul per Arrow batch over
-         the k x d centroid matrix (_assign_with_cos_udf); k scales
-         with N (the paper uses ~10k-100k clusters) so per-centroid
-         fold columns would explode codegen.
+         structs — the cosine form of ``nearest_centroid_fold``,
+         bit-identical to the DuckDB replay.
+       - k > 16 (scale regime): ``nearest_centroid_udf``, ONE numpy
+         matmul per Arrow batch over the k x d centroid matrix; k
+         scales with N (the paper uses ~10k-100k clusters) so
+         per-centroid fold columns would explode codegen.
     3. within-cluster ranking: SemDeDup's keep-order. Rank ASCENDING
        by cosine-to-centroid (lowest-similarity first) so survivors
        are the DIVERSE members — the paper's choice — id tie-break;
@@ -1011,13 +970,11 @@ def semantic_dedup(
        target_cluster_size to bound cluster sizes; a hub cluster that
        still blows up gets sub-sharded by a secondary LSH band over
        its members (compose with ann_topk's banding) before pairing.
-       Pair scoring: exact-fold kernel on the oracle path, einsum
-       kernel (order-free) on the scale path.
+       Pair scoring: the exact-fold kernel on the oracle path; the
+       scale path scores each cluster in one matmul (below).
     5. drops: pair qualifies when cosine >= tau; survivors via
        anti-join.
     """
-    import math
-
     work = df
     if collapse_exact and tau <= 1.0:
         _, work = collapse_exact_vector_duplicates(df, id_col, vec_col)
@@ -1029,10 +986,13 @@ def semantic_dedup(
     # (run the fold lane at k > 16 against the matmul lane) — the
     # k-fold-columns codegen cost makes it a test-only setting
     exact_path = force_exact_path or (k <= 16 and not force_scale_path)
-    dot = _exact_dot_udf()
-    pair_dot = dot if exact_path else _pairwise_dot_udf()
 
     if exact_path:
+        # oracle path: fold assignment, explicit pair join + exact-fold
+        # scoring — every intermediate reproducible in SQL
+        from pyspark.sql import Window
+
+        dot = _exact_dot_udf()
         base = work.select(id_col, vec_col).withColumn(
             "__n", F.sqrt(dot(F.col(vec_col), F.col(vec_col)))
         )
@@ -1057,26 +1017,6 @@ def semantic_dedup(
             (-best["ni"]).alias("cluster_id"),
             best["c"].alias("cos_centroid"),
         )
-    else:
-        assign = _assign_with_cos_udf(cents)
-        norm = _pairwise_dot_udf()
-        assigned = (
-            work.select(id_col, vec_col)
-            .withColumn("__a", assign(F.col(vec_col)))
-            .select(
-                id_col,
-                vec_col,
-                F.sqrt(norm(F.col(vec_col), F.col(vec_col))).alias("__n"),
-                F.col("__a.cluster").alias("cluster_id"),
-                F.col("__a.cos").alias("cos_centroid"),
-            )
-        )
-
-    if exact_path:
-        # oracle path: explicit pair join + exact-fold scoring — every
-        # intermediate reproducible in SQL
-        from pyspark.sql import Window
-
         w = Window.partitionBy("cluster_id").orderBy(
             F.col("cos_centroid").asc(), F.col(id_col).asc()
         )
@@ -1101,7 +1041,7 @@ def semantic_dedup(
             a.join(b, "cluster_id")
             .filter(F.col("__a_rnk") < F.col("__b_rnk"))
             .filter(
-                pair_dot(F.col("__a_vec"), F.col("__b_vec"))
+                dot(F.col("__a_vec"), F.col("__b_vec"))
                 / (F.col("__a_n") * F.col("__b_n"))
                 >= F.lit(tau)
             )
@@ -1140,9 +1080,15 @@ def semantic_dedup(
         )
         return kept_pdf
 
+    assign = nearest_centroid_udf(list(enumerate(cents)))
     return (
-        assigned.select(
-            id_col, "cluster_id", "cos_centroid", F.col(vec_col).alias("__v")
+        work.select(id_col, vec_col)
+        .withColumn("__a", assign(F.col(vec_col)))
+        .select(
+            id_col,
+            F.col("__a.cluster").alias("cluster_id"),
+            F.col("__a.score").alias("cos_centroid"),
+            F.col(vec_col).alias("__v"),
         )
         .groupBy("cluster_id")
         .applyInPandas(_prune, out_schema)

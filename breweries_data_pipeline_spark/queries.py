@@ -99,10 +99,12 @@ def register(name: str, oracle: str | None):
 # package-wide tracker in breweries_data_pipeline_spark.cache — shared
 # with the operator modules (dedup/similarity/graph), whose signature
 # and shingle tables are the heaviest caches — so one release_caches()
-# call drops everything a long library session accumulated.
+# call drops everything a long library session accumulated; scratch
+# catalog tables that a returned plan reads register the same way.
 from breweries_data_pipeline_spark.cache import (  # noqa: E402,F401
     release_caches,
     track_persist as _persist,
+    track_table as _track_table,
 )
 
 # drain-scratch hygiene: streaming queries drop their checkpoint dirs
@@ -12410,7 +12412,9 @@ def q_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     paid once at index-build, amortized over every daily run
     (tests/test_dedup.py plan-asserts the exchange-free corpus side).
     Timing this query therefore measures build + bucketed write +
-    read-back + join: the true daily-ingest cost, not just the join."""
+    read-back + join: the true daily-ingest cost, not just the join.
+    The index tables are scratch: release_caches() drops them once
+    the result is materialised."""
     from breweries_data_pipeline_spark.operators.dedup import (
         build_shingle_index,
         near_dedup_against_index,
@@ -12422,9 +12426,10 @@ def q_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.where(F.col("doc_id") % 5 == 0)
     history = docs.where(F.col("doc_id") % 5 != 0)
     tbl = "t_q_neardup_index"
-    write_shingle_index_bucketed(
+    for t in write_shingle_index_bucketed(
         build_shingle_index(history, threshold=0.5), tbl
-    )
+    ):
+        _track_table(spark, t)
     return near_dedup_against_index(
         batch, read_shingle_index_bucketed(spark, tbl), threshold=0.5
     )
@@ -13237,11 +13242,18 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the k centroids are bounded driver state (k x d floats —
     the same documented bounded-collect class as the k-means seeds
     inside semantic_dedup); they ship to executors as a broadcast
-    literal, assignment is a zero-shuffle map pass (explode x k, fold,
-    min-struct argmin), and the only exchange is the k-row partial
-    aggregate. At 100 TB this is the canonical one-shuffle-per-
-    iteration Lloyd plan; for large k x d the explode fold swaps for
-    the Arrow matmul kernel similarity.py already ships."""
+    literal, and the assignment is the similarity family's
+    nearest-centroid step in its exact-fold lane
+    (similarity.nearest_centroid_fold): one zero-shuffle array_min
+    over (dist, cluster) structs per row. The only exchanges are the
+    k-row partial aggregate and the final k-row sort. At 100 TB this
+    is the canonical one-shuffle-per-iteration Lloyd plan; for large
+    k x d the step's numpy lane (nearest_centroid_udf) is the form to
+    use."""
+    from breweries_data_pipeline_spark.operators.similarity import (
+        nearest_centroid_fold,
+    )
+
     emb = read_table(spark, sf_dir, "embeddings")
     # bounded collect: k=8 seed vectors (k x 64 floats) — model state
     seeds = (
@@ -13250,47 +13262,18 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     )
-    cands = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["vec_id"])).cast("long").alias("cluster"),
-                F.array(*[F.lit(float(x)) for x in r["embedding"]]).alias("c"),
-            )
-            for r in seeds
-        ]
-    )
-    d = emb.select(
-        "vec_id",
-        F.round(F.col("embedding")[0].cast("double") * 1000000.0)
-        .cast("long")
-        .alias("x0u"),
-        F.explode(cands).alias("s"),
-        "embedding",
-    ).withColumn(
-        "dist",
-        F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.col("s.c"),
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-    )
-    assigned = (
-        d.select(
-            "vec_id",
-            "x0u",
-            F.struct(F.col("dist"), F.col("s.cluster").alias("cluster")).alias(
-                "dc"
-            ),
-        )
-        .groupBy("vec_id", "x0u")
-        .agg(F.min("dc").alias("m"))
+    cluster = nearest_centroid_fold(
+        [(int(r["vec_id"]), list(r["embedding"])) for r in seeds],
+        F.col("embedding"),
     )
     return (
-        assigned.groupBy(F.col("m.cluster").alias("cluster_id"))
+        emb.select(
+            cluster.alias("cluster_id"),
+            F.round(F.col("embedding")[0].cast("double") * 1000000.0)
+            .cast("long")
+            .alias("x0u"),
+        )
+        .groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.sum("x0u").alias("sum_d0_micro"),
@@ -13370,13 +13353,19 @@ def q_kmeans_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (the spark.ml KMeans plan, re-derived): centroids are
     bounded driver state (k x d longs, the documented bounded-collect
-    model-state class). Each E-step is a zero-shuffle map pass
-    (explode x k + integer fold + min-struct argmin); the M-step is
-    ONE exchange of (cluster, dim) partial sums — k x d cells, map-side
+    model-state class). Each E-step is the similarity family's
+    nearest-centroid step in its exact-fold lane
+    (similarity.nearest_centroid_fold: a zero-shuffle array_min over
+    (integer dist, cluster) structs per row); the M-step is ONE
+    exchange of (cluster, dim) partial sums — k x d cells, map-side
     combined — reassembled into arrays by a sort of k x d rows. Two
     iterations = two bounded collects + two k*d-cell aggregates; at
     100 TB per-iteration cost is one corpus scan + one k*d-row
     shuffle, exactly Lloyd's lower bound."""
+    from breweries_data_pipeline_spark.operators.similarity import (
+        nearest_centroid_fold,
+    )
+
     emb = read_table(spark, sf_dir, "embeddings")
     ev = emb.select(
         "vec_id",
@@ -13387,46 +13376,9 @@ def q_kmeans_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _assign(cents: list[tuple[int, list[int]]]) -> DataFrame:
-        # F.array() with zero args raises AnalysisException rather than
-        # producing the empty result the SQL oracle would — fail with a
-        # clear contract error instead (the shipped embeddings table
-        # always has vec_ids 0..7, but the guard keeps reuse safe)
-        if not cents:
-            raise ValueError(
-                "k-means E-step needs >= 1 centroid; got none (seed "
-                "filter or M-step returned an empty cluster set)"
-            )
-        cands = F.array(
-            *[
-                F.struct(
-                    F.lit(int(c)).cast("long").alias("cluster"),
-                    F.array(
-                        *[F.lit(int(v)).cast("long") for v in vec]
-                    ).alias("c"),
-                )
-                for c, vec in cents
-            ]
-        )
-        d = ev.select("vec_id", "xu", F.explode(cands).alias("s")).withColumn(
-            "dist",
-            F.aggregate(
-                F.zip_with("xu", "s.c", lambda x, c: (x - c) * (x - c)),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
-        best = d.groupBy("vec_id").agg(
-            F.min(
-                F.struct(
-                    F.col("dist"),
-                    F.col("s.cluster").alias("cluster"),
-                    F.col("xu").alias("xu"),
-                )
-            ).alias("b")
-        )
-        return best.select(
-            "vec_id", F.col("b.cluster").alias("cluster"), F.col("b.xu").alias("xu")
-        )
+        # integer centroids: the fold runs in exact BIGINT arithmetic
+        cluster = nearest_centroid_fold(cents, F.col("xu"))
+        return ev.select("vec_id", "xu", cluster.alias("cluster"))
 
     # bounded collect #1: the k=8 seed vectors (k x 64 longs)
     seeds = ev.filter(F.col("vec_id") < 8).orderBy("vec_id").collect()
@@ -14433,7 +14385,8 @@ def q_neardup_index_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus in tests/test_dedup.py), fingerprints up to 64-bit
     collisions (~2^-64/pair; collision accounting in the same test
     file). Timing it measures the whole collapsed fingerprinted
-    build + bucketed write + read-back + join cycle."""
+    build + bucketed write + read-back + join cycle. The index tables
+    are scratch, dropped by release_caches() like q_neardup_index's."""
     from breweries_data_pipeline_spark.operators.dedup import (
         build_shingle_index,
         near_dedup_against_index,
@@ -14445,12 +14398,13 @@ def q_neardup_index_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = docs.where(F.col("doc_id") % 5 == 0)
     history = docs.where(F.col("doc_id") % 5 != 0)
     tbl = "t_q_neardup_index_fp"
-    write_shingle_index_bucketed(
+    for t in write_shingle_index_bucketed(
         build_shingle_index(
             history, threshold=0.5, fingerprint=True, collapse_exact=True
         ),
         tbl,
-    )
+    ):
+        _track_table(spark, t)
     return near_dedup_against_index(
         batch,
         read_shingle_index_bucketed(spark, tbl),
@@ -15801,22 +15755,19 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, v: acc + v,
         )
 
-    # Two assignment lanes, one contract (ivf_l2_cell_column): the
-    # exact-fold array_min lane (k <= 16 — the oracle regime, same
-    # doubles DuckDB's CROSS JOIN + row_number replays; the SQL
-    # computes k with the SAME max(8, N//250) formula, so the 9-16
-    # window is oracle-true too) and the numpy-matmul lane (k > 16 —
-    # one pass for all centroids; argmin ties to the lowest cell id;
-    # not an IEEE-order replay — cross-lane equivalence pinned by
-    # tests/test_similarity.py).
+    # ivf_l2_cell_column picks the nearest-centroid lane from k: the
+    # exact-fold lane up to k = 16 (the oracle regime, same doubles
+    # DuckDB's CROSS JOIN + row_number replays; the SQL computes k
+    # with the SAME max(8, N//250) formula, so the 9-16 window is
+    # oracle-true too), the numpy lane above (one pass for all
+    # centroids, ties to the lowest cell id; not an IEEE-order replay
+    # — cross-lane equivalence pinned by tests/test_similarity.py).
     from breweries_data_pipeline_spark.operators.similarity import (
         ivf_l2_cell_column,
     )
 
     seed_cells = [(int(r["vec_id"]), list(r["v"])) for r in seeds]
-    cell = ivf_l2_cell_column(
-        seed_cells, F.col("v"), use_matmul=k > 16
-    ).alias("cell")
+    cell = ivf_l2_cell_column(seed_cells, F.col("v")).alias("cell")
 
     assigned = e.select("vec_id", "v", cell).withColumn(
         "nrm", F.sqrt(_fold_dot(F.col("v"), F.col("v")))

@@ -30,11 +30,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard conf.
 
-    In local/test mode ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``;
-    on a cluster pass ``master=None`` with a pre-set spark.master, or let
-    spark-submit own it.
+    In local/test mode ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``,
+    or to the host's core count when that is unset; on a cluster pass
+    ``master=None`` with a pre-set spark.master, or let spark-submit
+    own it.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if master is None and "SPARK_MASTER" not in os.environ:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

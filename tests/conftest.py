@@ -16,6 +16,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
+    # drop the caches and scratch catalog tables the queries left
+    from breweries_data_pipeline_spark.cache import release_caches
+
+    release_caches()
 
 
 @pytest.fixture(scope="session")

@@ -557,3 +557,22 @@ def test_collapse_exact_index_matches_uncollapsed(spark, sf_dir):
     assert sorted(map(tuple, coll.collect())) == sorted(
         map(tuple, plain.collect())
     )
+
+
+@pytest.mark.parametrize("name", ["q_neardup_index", "q_neardup_index_fp"])
+def test_neardup_index_tables_dropped_on_release(spark, sf_dir, name):
+    """The index tables these queries write are scratch: once the
+    result is materialised, release_caches() drops every one of them,
+    catalog entry and warehouse directory."""
+    import os
+    from urllib.parse import urlparse
+
+    from breweries_data_pipeline_spark.queries import REGISTRY, release_caches
+
+    REGISTRY[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    tables = [f"t_{name}_{t}" for t in ("prefix", "sets", "freq", "meta")]
+    assert all(spark.catalog.tableExists(t) for t in tables)
+    release_caches()
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    assert not [t for t in tables if spark.catalog.tableExists(t)]
+    assert not [t for t in tables if os.path.exists(os.path.join(warehouse, t))]

@@ -45,9 +45,10 @@ LSH_TWINS = [
 @pytest.fixture
 def no_broadcast(spark):
     """Drop the dedup frequency-table broadcast hint and size-based
-    broadcasts, so the shared LSH steps run their sort-merge join
-    paths (the ones used at scale) on the small test tables; the
-    Spark session's settings are restored afterwards."""
+    broadcasts, so the shared LSH, prefix-filter and similarity steps
+    run their sort-merge join paths (the ones used at scale) on the
+    small test tables; the Spark session's settings are restored
+    afterwards."""
     overrides = {
         "spark.breweries.dedup.broadcastFreq": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -65,6 +66,28 @@ def no_broadcast(spark):
 
 @pytest.mark.parametrize("name", LSH_TWINS)
 def test_lsh_twin_parity_without_broadcast(spark, sf_dir, no_broadcast, name):
+    fn, sql = REGISTRY[name]
+    result = compare(fn(spark, sf_dir), sql, sf_dir)
+    assert result["match"], f"{name}: {result['detail']}"
+
+
+# the prefix-filter similarity join family (operators/dedup.py
+# _verified_prefix_pairs) and the oracled users of the nearest-centroid
+# step (operators/similarity.py)
+SIMILARITY_FAMILY = [
+    "q_bitext_mine",
+    "q_kmeans_assign",
+    "q_kmeans_lloyd2",
+    "q_neardup_incremental",
+    "q_neardup_index",
+    "q_neardup_index_fp",
+    "q_semantic_dedup",
+    "q_similarity_join_exact",
+]
+
+
+@pytest.mark.parametrize("name", SIMILARITY_FAMILY)
+def test_similarity_parity_without_broadcast(spark, sf_dir, no_broadcast, name):
     fn, sql = REGISTRY[name]
     result = compare(fn(spark, sf_dir), sql, sf_dir)
     assert result["match"], f"{name}: {result['detail']}"

@@ -609,9 +609,43 @@ _LSH_PLAN_BUDGET = {
     },
 }
 
+# The same budget for the users of the nearest-centroid step
+# (operators/similarity.py), counted the same way. The k-means E-steps
+# run the exact-fold lane, a per-row map with no Exchange:
+# q_kmeans_assign's 3 are the seed sort, the cluster aggregate and the
+# final sort; q_kmeans_lloyd2's 6 are the seed sort, the M-step's two
+# aggregates and centroid sort, and the final aggregate and sort.
+_SIMILARITY_PLAN_BUDGET = {
+    "q_kmeans_assign": {
+        "Exchange": 3, "BroadcastExchange": 0, "BroadcastHashJoin": 0,
+        "SortMergeJoin": 0, "ArrowEvalPython": 0, "InMemoryTableScan": 0,
+    },
+    "q_kmeans_lloyd2": {
+        "Exchange": 6, "BroadcastExchange": 0, "BroadcastHashJoin": 0,
+        "SortMergeJoin": 0, "ArrowEvalPython": 0, "InMemoryTableScan": 0,
+    },
+    "q_semantic_dedup": {
+        "Exchange": 7, "BroadcastExchange": 3, "BroadcastHashJoin": 4,
+        "SortMergeJoin": 1, "ArrowEvalPython": 4, "InMemoryTableScan": 0,
+    },
+    "q_similarity_ivf": {
+        "Exchange": 3, "BroadcastExchange": 1, "BroadcastHashJoin": 1,
+        "SortMergeJoin": 0, "ArrowEvalPython": 5, "InMemoryTableScan": 0,
+    },
+    "q_similarity_pq": {
+        "Exchange": 10, "BroadcastExchange": 2, "BroadcastHashJoin": 2,
+        "SortMergeJoin": 0, "ArrowEvalPython": 10, "InMemoryTableScan": 15,
+    },
+    "q_bitext_mine": {
+        "Exchange": 7, "BroadcastExchange": 3, "BroadcastHashJoin": 3,
+        "SortMergeJoin": 2, "ArrowEvalPython": 3, "InMemoryTableScan": 3,
+    },
+}
 
-@pytest.mark.parametrize("name", sorted(_LSH_PLAN_BUDGET))
-def test_lsh_dedup_plan_budget(spark, sf_dir, name):
+
+def _plan_node_counts(spark, sf_dir, name, nodes):
+    """Count the named plan nodes over every SQL execution that running
+    the registry query ``name`` triggers, planned with AQE off."""
     from breweries_data_pipeline_spark.queries import release_caches
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -622,7 +656,6 @@ def test_lsh_dedup_plan_budget(spark, sf_dir, name):
         lst = store.executionsList()
         return {lst.apply(i).executionId() for i in range(lst.size())}
 
-    budget = _LSH_PLAN_BUDGET[name]
     release_caches()
     spark.catalog.clearCache()
     before = execution_ids()
@@ -632,12 +665,24 @@ def test_lsh_dedup_plan_budget(spark, sf_dir, name):
         REGISTRY[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    counts = dict.fromkeys(budget, 0)
+    counts = dict.fromkeys(nodes, 0)
     for eid in sorted(execution_ids() - before):
-        nodes = store.planGraph(eid).allNodes()
-        for i in range(nodes.size()):
-            node = nodes.apply(i).name()
+        graph_nodes = store.planGraph(eid).allNodes()
+        for i in range(graph_nodes.size()):
+            node = graph_nodes.apply(i).name()
             if node in counts:
                 counts[node] += 1
     release_caches()
-    assert counts == budget
+    return counts
+
+
+@pytest.mark.parametrize("name", sorted(_LSH_PLAN_BUDGET))
+def test_lsh_dedup_plan_budget(spark, sf_dir, name):
+    budget = _LSH_PLAN_BUDGET[name]
+    assert _plan_node_counts(spark, sf_dir, name, budget) == budget
+
+
+@pytest.mark.parametrize("name", sorted(_SIMILARITY_PLAN_BUDGET))
+def test_similarity_plan_budget(spark, sf_dir, name):
+    budget = _SIMILARITY_PLAN_BUDGET[name]
+    assert _plan_node_counts(spark, sf_dir, name, budget) == budget

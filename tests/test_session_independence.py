@@ -51,7 +51,7 @@ spark = (
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
-from breweries_data_pipeline_spark.queries import REGISTRY
+from breweries_data_pipeline_spark.queries import REGISTRY, release_caches
 
 failures = {{}}
 for name, (fn, _sql) in sorted(REGISTRY.items()):
@@ -60,6 +60,8 @@ for name, (fn, _sql) in sorted(REGISTRY.items()):
         assert n >= 0
     except Exception as exc:  # noqa: BLE001
         failures[name] = f"{{type(exc).__name__}}: {{exc}}"[:300]
+# drop the caches and scratch catalog tables the queries left
+release_caches()
 print("RESULT:" + json.dumps(failures))
 """
 

@@ -180,7 +180,7 @@ def test_ann_recall_matches_analytic_s_curve(spark, sf_dir):
 def test_ivf_recall_equals_cluster_coverage_prediction(spark, sf_dir):
     """IVF recall is fully deterministic given the centroid init, so
     the calibrated bound is EQUALITY: replicate the assignment in
-    numpy (same normalize + argsort ops as _nearest_centroids_udf)
+    numpy (same normalize + rank ops as similarity.nearest_centroids)
     and predict exactly which exact-top-k pairs live in a probed
     cluster — every such pair must be returned (an exact-top-k pair
     in the candidate set always outranks non-top-k candidates), and
@@ -254,6 +254,20 @@ def test_pq_recall_and_exact_rerank_scores(spark, sf_dir):
 # across the boundary, including the ties-to-lowest-cell-id contract.
 
 
+def _l2_lanes():
+    """The two lanes of the nearest-centroid step, each as
+    (seed_cells, vector column) -> cell-id column."""
+    from breweries_data_pipeline_spark.operators.similarity import (
+        nearest_centroid_fold,
+        nearest_centroid_udf,
+    )
+
+    return {
+        "fold": nearest_centroid_fold,
+        "numpy": lambda seeds, v: nearest_centroid_udf(seeds, "l2")(v)["cluster"],
+    }
+
+
 def _doubled(emb):
     return emb.select(
         "vec_id",
@@ -268,6 +282,7 @@ def test_ivf_cell_lanes_agree_across_k16_boundary(spark, sf_dir):
         ivf_l2_cell_column,
     )
 
+    lanes = _l2_lanes()
     e = _doubled(read_table(spark, sf_dir, "embeddings"))
     for k in (8, 16, 20, 33):  # both sides of the lane switch
         seeds = [
@@ -278,72 +293,66 @@ def test_ivf_cell_lanes_agree_across_k16_boundary(spark, sf_dir):
             r["vec_id"]: r["cell"]
             for r in e.select(
                 "vec_id",
-                ivf_l2_cell_column(seeds, F.col("v")).alias("cell"),
+                lanes["fold"](seeds, F.col("v")).alias("cell"),
             ).collect()
         }
         matmul = {
             r["vec_id"]: r["cell"]
             for r in e.select(
                 "vec_id",
-                ivf_l2_cell_column(
-                    seeds, F.col("v"), use_matmul=True
-                ).alias("cell"),
+                lanes["numpy"](seeds, F.col("v")).alias("cell"),
             ).collect()
         }
         assert fold == matmul, f"lane mismatch at k={k}"
+        # the k-picked lane gives the same cells on either side of 16
+        picked = {
+            r["vec_id"]: r["cell"]
+            for r in e.select(
+                "vec_id", ivf_l2_cell_column(seeds, F.col("v")).alias("cell")
+            ).collect()
+        }
+        assert picked == fold, f"ivf_l2_cell_column mismatch at k={k}"
 
 
 def test_ivf_cell_both_lanes_tie_to_lowest_cell_id(spark):
-    from breweries_data_pipeline_spark.operators.similarity import (
-        ivf_l2_cell_column,
-    )
-
     # seeds 3 and 7 are IDENTICAL: every vector equidistant to both
     # must land in cell 3 on BOTH lanes (array_min orders by (dist,
-    # cell); numpy argmin takes the first minimum in seed order)
+    # cell); numpy argmax takes the first maximum in cell-id order)
     dup = [1.0, 2.0]
     seeds = [(3, dup), (7, dup), (9, [100.0, 100.0])]
     rows = [(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [100.0, 99.0])]
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    for use_matmul in (False, True):
+    for lane, cell_of in _l2_lanes().items():
         got = {
             r["vec_id"]: r["cell"]
             for r in e.select(
                 "vec_id",
-                ivf_l2_cell_column(
-                    seeds, F.col("v"), use_matmul=use_matmul
-                ).alias("cell"),
+                cell_of(seeds, F.col("v")).alias("cell"),
             ).collect()
         }
-        assert got == {0: 3, 1: 3, 2: 9}, f"use_matmul={use_matmul}: {got}"
+        assert got == {0: 3, 1: 3, 2: 9}, f"{lane} lane: {got}"
 
 
 def test_ivf_cell_tie_contract_survives_unsorted_seeds(spark):
-    """r10 ADVICE: the matmul lane's argmin ties to the FIRST seed in
+    """r10 ADVICE: the numpy lane's argmax ties to the FIRST seed in
     LIST order, so the lowest-cell-id contract used to hold only when
-    callers pre-sorted seed_cells. The function now sorts on entry —
-    an UNSORTED seed list with an exact tie must still land in the
+    callers pre-sorted seed_cells. nearest_centroid_udf sorts on entry
+    — an UNSORTED seed list with an exact tie must still land in the
     lowest cell id on both lanes."""
-    from breweries_data_pipeline_spark.operators.similarity import (
-        ivf_l2_cell_column,
-    )
-
     dup = [1.0, 2.0]
     # deliberately unsorted: higher cell id first in list order
     seeds = [(7, dup), (9, [100.0, 100.0]), (3, dup)]
     rows = [(0, [1.0, 2.0]), (1, [0.0, 0.0]), (2, [100.0, 99.0])]
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    for use_matmul in (False, True):
+    for lane, cell_of in _l2_lanes().items():
         got = {
             r["vec_id"]: r["cell"]
             for r in e.select(
                 "vec_id",
-                ivf_l2_cell_column(
-                    seeds, F.col("v"), use_matmul=use_matmul
-                ).alias("cell"),
+                cell_of(seeds, F.col("v")).alias("cell"),
             ).collect()
         }
-        assert got == {0: 3, 1: 3, 2: 9}, f"use_matmul={use_matmul}: {got}"
+        assert got == {0: 3, 1: 3, 2: 9}, f"{lane} lane: {got}"
 
 
 def test_semantic_dedup_lanes_agree_above_k16(spark, sf_dir):

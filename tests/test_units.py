@@ -96,6 +96,54 @@ def test_fetch_distributed_pulls_all_pages(spark):
     assert parsed == {f"p{p}r{i}" for p in range(1, 5) for i in range(3)}
 
 
+# ---------------------------------------------------------------- session
+
+
+def test_get_spark_sizes_local_session_from_host_cores(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the local master and the shuffle
+    partition count follow the host's core count. The builder is a
+    recording fake, so no JVM starts."""
+    import types
+
+    from breweries_data_pipeline_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf, self.master_ = {}, None
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def master(self, master):
+            self.master_ = master
+            return self
+
+        def getOrCreate(self):
+            return self
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_MASTER", raising=False)
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 3)
+    monkeypatch.setattr(
+        session, "SparkSession", types.SimpleNamespace(builder=Builder())
+    )
+    built = session.get_spark("t")
+    assert built.master_ == "local[3]"
+    assert built.conf["spark.sql.shuffle.partitions"] == "3"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.setattr(
+        session, "SparkSession", types.SimpleNamespace(builder=Builder())
+    )
+    built = session.get_spark("t")
+    assert built.master_ == "local[5]"
+    assert built.conf["spark.sql.shuffle.partitions"] == "5"
+
+
 # ---------------------------------------------------------------- schema
 
 
