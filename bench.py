@@ -894,6 +894,14 @@ def _recheck_outliers(sf_dir: str, worst: dict, budget: float = 300.0) -> dict:
 SCALING_EVIDENCE_QUERIES = ["q_neardup_buckets_minhash", "q_simhash_md5"]
 
 
+def _mem_bytes(size: str) -> int:
+    """Bytes in a JVM memory size such as ``12g``, ``512m`` or
+    ``1048576`` (k, m, g and t suffixes, either case)."""
+    size = size.strip().lower()
+    scale = {"k": 1, "m": 2, "g": 3, "t": 4}.get(size[-1:], 0)
+    return int(size[:-1] if scale else size) * 1024**scale
+
+
 def _scaling_evidence(sf_dir: str, budget: float = 300.0) -> dict | None:
     """Self-measured demonstration that the bench honors
     $SPARK_GRAFT_CPUS (r12 verdict #3: the ground-truth record kept
@@ -914,18 +922,26 @@ def _scaling_evidence(sf_dir: str, budget: float = 300.0) -> dict | None:
     tool = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                         "tools", "time_iso.py")
     walls: dict[str, dict] = {}
+    # sf0.1 compute queries need nothing like the suite's 24g; a child
+    # heap of at most 12g, and never more than the caller's, keeps peak
+    # host memory bounded while the parent JVM is still alive
+    heap = os.environ.get("SPARK_DRIVER_MEMORY", "12g")
+    if _mem_bytes(heap) > _mem_bytes("12g"):
+        heap = "12g"
+    deadline = time.monotonic() + budget
     for tag, cpus in (("hi", hi), ("lo", lo)):
         env = dict(os.environ)
         env["SPARK_GRAFT_CPUS"] = str(cpus)
-        # sf0.1 compute queries need nothing like the suite's 24g; a
-        # smaller child heap keeps peak host memory bounded while the
-        # parent JVM is still alive
-        env["SPARK_DRIVER_MEMORY"] = "12g"
+        env["SPARK_DRIVER_MEMORY"] = heap
+        # both children share the one budget: the second gets what the
+        # first left
+        left = deadline - time.monotonic()
+        if left <= 0:
+            return None
         r = subprocess.run(
             [sys.executable, tool, *SCALING_EVIDENCE_QUERIES,
              "--reps", "2", "--sf-dir", sf_dir],
-            capture_output=True, text=True, env=env,
-            timeout=max(budget / 2, 120),
+            capture_output=True, text=True, env=env, timeout=left,
         )
         for ln in reversed(r.stdout.strip().splitlines()):
             if ln.startswith("{"):

@@ -466,8 +466,9 @@ def near_dedup_lsh_buckets(
     sigs = minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_size
     ).select(id_col, "minhash")
-    # persisted: the star-edge stream feeds the node projection AND
-    # the CC's symmetric union (two longs per edge, tracked)
+    # persisted: the star-edge stream feeds the CC's size probe, and
+    # above the driver threshold its endpoint distinct AND symmetric
+    # union (two longs per edge, tracked)
     edges = track_persist(
         lsh_bucket_star_edges(sigs, id_col, bands, num_hashes // bands)
     )
@@ -479,19 +480,18 @@ def keep_component_min(df: DataFrame, edges: DataFrame, id_col: str = "doc_id") 
     connected component in the undirected (id_a, id_b) ``edges``. The
     CC label table holds only docs that appear in some edge
     (duplicates are a small fraction of a real corpus), and the drop
-    is one anti-join. ``connected_components`` is looked up on the
-    graph module at call time."""
+    is one anti-join. An edge list of at most ``graph._DRIVER_EDGES``
+    (2^20) edges is labeled on the driver: the labels come back as a
+    local table and the drop set is exactly its non-root rows, so no
+    distinct over the endpoints runs. Longer lists run the distributed
+    loop over the distinct endpoints. ``connected_components`` is
+    looked up on the graph module at call time."""
     from breweries_data_pipeline_spark.operators.graph import (
         connected_components,
     )
 
-    paired = (
-        edges.select(F.col("id_a").alias(id_col))
-        .unionByName(edges.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
     comp = connected_components(
-        edges, paired, src="id_a", dst="id_b", id_col=id_col
+        edges, None, src="id_a", dst="id_b", id_col=id_col
     )
     drop = comp.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
     return df.join(drop, id_col, "left_anti")

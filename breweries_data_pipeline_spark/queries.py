@@ -1636,13 +1636,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster assignment: connected components (iterative
     min-label propagation + pointer jumping, operators/graph.py) over
     a deterministic edge set — consecutive-doc pairs with 3-gram
-    Jaccard >= 0.5. The Spark side runs the GENERAL distributed CC
-    algorithm; the oracle exploits the chain structure of this edge
-    set to compute the same labels with a gaps-and-islands window
-    (component min-id = last edge-less doc at or before it). Both
-    sides share the exact integer-ratio Jaccard, so the edge sets are
-    identical and the hash check proves transitive closure, not just
-    pairing."""
+    Jaccard >= 0.5. The Spark side runs the GENERAL CC algorithm (on
+    the driver for an edge list this small, distributed above
+    graph._DRIVER_EDGES); the oracle exploits the chain structure of
+    this edge set to compute the same labels with a gaps-and-islands
+    window (component min-id = last edge-less doc at or before it).
+    Both sides share the exact integer-ratio Jaccard, so the edge sets
+    are identical and the hash check proves transitive closure, not
+    just pairing."""
     from breweries_data_pipeline_spark.operators.graph import connected_components
 
     docs = read_table(spark, sf_dir, "documents")
@@ -9006,13 +9007,14 @@ def q_dedup_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     — q_neardup_buckets_minhash minus the Arrow signature kernel.
     Oracle: banding on lane-value equality + per-bucket min + star
     edges in SQL, then the same recursive-CTE reachability closure
-    q_dedup_neardup uses, proving the distributed CC against an
-    independent fixpoint."""
+    q_dedup_neardup uses, proving the CC against an independent
+    fixpoint."""
     docs = read_table(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
-    # persisted (tracked): edges feed the node projection AND the CC
+    # persisted (tracked): edges feed the CC's size probe and, above
+    # the driver threshold, its endpoint distinct and label rounds
     edges = _persist(
         lsh_bucket_star_edges(md5_minhash_signatures(sh), "doc_id", 4, 4)
     )
@@ -9639,7 +9641,8 @@ def q_corpus_funnel_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
     # same tracked-persist discipline as q_dedup_lsh_buckets: the
-    # edges fan out to the node projection and the CC
+    # edges feed the CC's size probe and, above the driver threshold,
+    # its endpoint distinct and label rounds
     edges = _persist(
         lsh_bucket_star_edges(md5_minhash_signatures(sh), "doc_id", 4, 4)
     )
@@ -15125,8 +15128,9 @@ def q_winnow_dedup_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the 8-byte fp (one exchange, no join-back re-evaluating the
     kernel lineage); the keep-min is the LSH dedup's own
     keep_component_min (operators/dedup.py): CC over the docs that
-    have an edge, O(log diameter) rounds of bucketed equi-joins, then
-    one anti-join. Oracle: DuckDB WITH RECURSIVE
+    have an edge (labeled on the driver when the edge list is small,
+    else O(log diameter) rounds of bucketed equi-joins), then one
+    anti-join. Oracle: DuckDB WITH RECURSIVE
     reachability over the same star edges proves the collapse is the
     true transitive closure, not just the pairing."""
     from breweries_data_pipeline_spark.functions.text import (

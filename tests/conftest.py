@@ -25,3 +25,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def distributed_cc(monkeypatch):
+    """Turn off connected components' driver path, so every graph,
+    however small, runs the distributed label-propagation loop (the
+    one used above ``graph._DRIVER_EDGES`` edges); restored
+    afterwards."""
+    from breweries_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from breweries_data_pipeline_spark.operators.dedup import (
     exact_dedup,
@@ -143,20 +144,36 @@ def test_lsh_plan_has_no_cartesian_product(spark, sf_dir):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_connected_components_chain_star_isolated(spark):
-    from breweries_data_pipeline_spark.operators.graph import connected_components
+def _on_both_paths(monkeypatch):
+    """Yield the graph module twice: with connected components' driver
+    path on, then with it off (the distributed loop)."""
+    from breweries_data_pipeline_spark.operators import graph
 
+    yield graph
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
+    yield graph
+
+
+def _labels(df, id_col="id", label_col="cluster_id"):
+    return {r[id_col]: r[label_col] for r in df.collect()}
+
+
+def test_connected_components_chain_star_isolated(spark, monkeypatch):
     # chain 1-2-3-4, star 10-{11,12,13}, isolated 20
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (10, 12), (13, 10)],
         "id_a long, id_b long",
     )
     nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 12, 13, 20]], "id long")
-    lab = {r.id: r.cluster_id for r in connected_components(edges, nodes).collect()}
-    assert lab == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}
+    for graph in _on_both_paths(monkeypatch):
+        lab = _labels(graph.connected_components(edges, nodes))
+        assert lab == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20}
+        # without a node table: the endpoints, each once
+        ends = _labels(graph.connected_components(edges, None))
+        assert ends == {k: v for k, v in lab.items() if k != 20}
 
 
-def test_connected_components_long_chain_converges_by_jumping(spark):
+def test_connected_components_long_chain_converges_by_jumping(spark, distributed_cc):
     from breweries_data_pipeline_spark.operators.graph import connected_components
 
     n = 200  # chain of 200 nodes; naive propagation would need 200 rounds
@@ -164,6 +181,122 @@ def test_connected_components_long_chain_converges_by_jumping(spark):
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     lab = connected_components(edges, nodes, max_iter=12)
     assert lab.filter(F.col("cluster_id") != 0).count() == 0
+
+
+def test_connected_components_raises_when_not_converged(spark, distributed_cc):
+    from breweries_data_pipeline_spark.operators.graph import connected_components
+
+    n = 200
+    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
+    with pytest.raises(RuntimeError, match="max_iter=3"):
+        connected_components(edges, nodes, max_iter=3)
+
+
+def test_connected_components_empty_edge_list(spark, monkeypatch):
+    edges = spark.createDataFrame([], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(3,), (1,), (2,)], "id long")
+    for graph in _on_both_paths(monkeypatch):
+        assert _labels(graph.connected_components(edges, nodes)) == {1: 1, 2: 2, 3: 3}
+        assert graph.connected_components(edges, None).count() == 0
+
+
+def test_connected_components_ignores_null_endpoints(spark, monkeypatch):
+    """An edge with a null endpoint joins nothing, as in the
+    distributed join; a null node keeps a null label."""
+    edges = spark.createDataFrame(
+        [(2, 1), (None, 3), (3, None), (None, None)], "id_a long, id_b long"
+    )
+    nodes = spark.createDataFrame([(1,), (2,), (3,), (None,)], "id long")
+    for graph in _on_both_paths(monkeypatch):
+        got = _labels(graph.connected_components(edges, nodes))
+        assert got == {1: 1, 2: 1, 3: 3, None: None}
+        assert _labels(graph.connected_components(edges, None)) == {1: 1, 2: 1}
+
+
+def test_connected_components_int_ids_keep_their_type(spark, monkeypatch):
+    """``cluster_id`` has the id column's type on both paths, and the
+    two paths return the same schema and rows."""
+    edges = spark.createDataFrame([(5, 4), (4, 3), (7, 8)], "id_a int, id_b int")
+    nodes = spark.createDataFrame([(i,) for i in range(3, 10)], "id int")
+    out = []
+    for graph in _on_both_paths(monkeypatch):
+        for with_nodes in (nodes, None):
+            df = graph.connected_components(edges, with_nodes)
+            out.append((df.schema, sorted(df.collect())))
+    assert out[:2] == out[2:]
+    assert out[0][0]["cluster_id"].dataType == T.IntegerType()
+    assert dict(out[0][1]) == {3: 3, 4: 3, 5: 3, 6: 6, 7: 7, 8: 7, 9: 9}
+
+
+@pytest.mark.parametrize("n_edges, on_driver", [(3, True), (4, False)])
+def test_connected_components_driver_threshold(spark, monkeypatch, n_edges, on_driver):
+    """Exactly ``_DRIVER_EDGES`` edges label on the driver; one more
+    runs the distributed loop. Both give the component minimum."""
+    from breweries_data_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 3)
+    calls = []
+    real = graph._min_labels
+    monkeypatch.setattr(
+        graph, "_min_labels", lambda u, v: calls.append(len(u)) or real(u, v)
+    )
+    pairs = [(9, 8), (8, 7), (7, 6), (6, 5)][:n_edges]
+    edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(5, 10)], "id long")
+    lab = _labels(graph.connected_components(edges, nodes))
+    low = 10 - n_edges - 1
+    assert lab == {i: (low if i >= low else i) for i in range(5, 10)}
+    assert calls == ([n_edges] if on_driver else [])
+
+
+def test_min_labels_match_union_find():
+    """The driver-side labeling against a plain union-find on random
+    graphs, including chains whose ids run against the edge order."""
+    import numpy as np
+
+    from breweries_data_pipeline_spark.operators.graph import _min_labels
+
+    rng = np.random.default_rng(7)
+    for n, m in [(1, 0), (2, 1), (50, 30), (300, 250), (1000, 999)]:
+        if m == n - 1 and n > 2:
+            perm = rng.permutation(n)
+            u, v = perm[:-1], perm[1:]
+        else:
+            u, v = rng.integers(0, n, m), rng.integers(0, n, m)
+        u = np.append(u, n - 1)  # every node present
+        v = np.append(v, n - 1)
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in zip(u.tolist(), v.tolist()):
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        assert _min_labels(u, v).tolist() == [find(i) for i in range(n)]
+
+
+def test_small_graph_connected_components_job_budget(spark):
+    """A small graph's components plus a collect run at most 6 Spark
+    jobs: the edge probe, the broadcast and the collect, not two jobs
+    per label-propagation round."""
+    from breweries_data_pipeline_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(99)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(120)], "id long")
+    sc = spark.sparkContext
+    group = "cc-small-graph"
+    sc.setJobGroup(group, "small-graph connected components")
+    try:
+        rows = connected_components(edges, nodes).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(r.cluster_id for r in rows) == [0] * 100 + list(range(100, 120))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def _chain_docs(spark):

@@ -91,3 +91,23 @@ def test_similarity_parity_without_broadcast(spark, sf_dir, no_broadcast, name):
     fn, sql = REGISTRY[name]
     result = compare(fn(spark, sf_dir), sql, sf_dir)
     assert result["match"], f"{name}: {result['detail']}"
+
+
+# the oracled queries whose result goes through connected components
+# (operators/graph.py); the default run above takes the driver path at
+# this size, this leg the distributed label-propagation loop
+CC_BACKED = [
+    "q_cluster_best",
+    "q_corpus_funnel_buckets",
+    "q_dedup_clusters",
+    "q_dedup_lsh_buckets",
+    "q_dedup_neardup",
+    "q_winnow_dedup_star",
+]
+
+
+@pytest.mark.parametrize("name", CC_BACKED)
+def test_cc_parity_on_distributed_path(spark, sf_dir, distributed_cc, name):
+    fn, sql = REGISTRY[name]
+    result = compare(fn(spark, sf_dir), sql, sf_dir)
+    assert result["match"], f"{name}: {result['detail']}"

@@ -590,18 +590,20 @@ def test_bitext_mine_reuses_persisted_candidates(spark, sf_dir):
 
 
 # Plan budget of the LSH dedup compositions at sf0.001: node counts
-# over every SQL execution a query triggers (connected components runs
-# several), with the cached subplans counted at each read site. Planned
-# with AQE off so the counts are the static plan shape; AQE's runtime
-# replanning depends on which stages finish first.
+# over every SQL execution a query triggers, with the cached subplans
+# counted at each read site. Planned with AQE off so the counts are the
+# static plan shape; AQE's runtime replanning depends on which stages
+# finish first. The two keep-min queries run two executions: connected
+# components' edge probe, which labels these small graphs on the
+# driver, and the anti-join against the local drop table.
 _LSH_PLAN_BUDGET = {
     "q_neardup_buckets_minhash": {
-        "Exchange": 42, "BroadcastExchange": 14, "BroadcastHashJoin": 15,
-        "SortMergeJoin": 4, "ArrowEvalPython": 16, "InMemoryTableScan": 27,
+        "Exchange": 4, "BroadcastExchange": 2, "BroadcastHashJoin": 2,
+        "SortMergeJoin": 0, "ArrowEvalPython": 2, "InMemoryTableScan": 3,
     },
     "q_dedup_lsh_buckets": {
-        "Exchange": 50, "BroadcastExchange": 30, "BroadcastHashJoin": 31,
-        "SortMergeJoin": 4, "ArrowEvalPython": 0, "InMemoryTableScan": 27,
+        "Exchange": 5, "BroadcastExchange": 4, "BroadcastHashJoin": 4,
+        "SortMergeJoin": 0, "ArrowEvalPython": 0, "InMemoryTableScan": 3,
     },
     "q_minhash_lsh": {
         "Exchange": 7, "BroadcastExchange": 4, "BroadcastHashJoin": 5,

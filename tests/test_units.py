@@ -849,6 +849,55 @@ class TestBenchScalingEvidence:
         monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
         assert bench._scaling_evidence("/tmp/sfX") is None
 
+    @pytest.mark.parametrize("caller, child", [
+        ("24g", "12g"), ("4g", "4g"), ("2048m", "2048m"), (None, "12g"),
+    ])
+    def test_child_heap_and_shared_budget(self, monkeypatch, caller, child):
+        """Each child's heap is the smaller of 12g and the caller's
+        SPARK_DRIVER_MEMORY; the second child's timeout is what the
+        first one left of the budget."""
+        bench = self._bench()
+        import json as _json
+        import subprocess
+        import types
+
+        clock = [1000.0]
+        seen = []
+
+        def _fake_run(cmd, **k):
+            seen.append((k["env"]["SPARK_DRIVER_MEMORY"], k["timeout"]))
+            clock[0] += 100.0  # each child takes 100 s
+            qs = {q: {"min": 1.0, "probe": 0.18}
+                  for q in bench.SCALING_EVIDENCE_QUERIES}
+
+            class _R:
+                returncode = 0
+                stdout = _json.dumps(qs) + "\n"
+                stderr = ""
+
+            return _R()
+
+        monkeypatch.setattr(subprocess, "run", _fake_run)
+        monkeypatch.setattr(bench, "time",
+                            types.SimpleNamespace(monotonic=lambda: clock[0]))
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+        if caller is None:
+            monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_DRIVER_MEMORY", caller)
+        assert bench._scaling_evidence("/tmp/sfX", budget=300.0) is not None
+        assert seen == [(child, 300.0), (child, 200.0)]
+        # a first child that uses the whole budget leaves none to spawn
+        seen.clear()
+        assert bench._scaling_evidence("/tmp/sfX", budget=100.0) is None
+        assert len(seen) == 1
+
+    def test_mem_bytes(self):
+        bench = self._bench()
+        assert bench._mem_bytes("12g") == 12 * 1024**3
+        assert bench._mem_bytes("512M") == 512 * 1024**2
+        assert bench._mem_bytes("1048576") == 1048576
+
 
 class TestBenchCalibration:
     """r11 self-adjudicating measurements: every SF1_WALLS merge stamps
