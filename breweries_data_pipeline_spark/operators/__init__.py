@@ -7,9 +7,9 @@ from breweries_data_pipeline_spark.operators.clean import (  # noqa: F401
     normalize_strings,
 )
 from breweries_data_pipeline_spark.operators.aggregate import (  # noqa: F401
+    aggregate_views,
     declarative_aggregate,
     grouped_count,
-    union_views,
 )
 from breweries_data_pipeline_spark.operators.quality import (  # noqa: F401
     evaluate_rules,

@@ -3,24 +3,32 @@
 ``declarative_aggregate`` implements the reference's *declared* config
 contract (configs/breweries_gold_pipeline.yml:41-51 — group_by list +
 named metric exprs) which the reference's code never actually honours
-(it hard-codes three groupBy-counts instead). ``union_views``
+(it hard-codes three groupBy-counts instead). ``aggregate_views``
 reproduces the reference's distinctive Gold output shape: heterogeneous
-aggregate views stacked long-format with a discriminator column and
+declared views stacked long-format with a discriminator column and
 missing-columns-as-nulls (breweries_aggregate_gold_notebook.py:37-60).
 
 Scale notes: groupBy compiles to partial (map-side) + final hash
 aggregation — the shuffle moves only group keys × partial states, not
-rows. The union is plan-level (no data movement). A rollup/cube/
-grouping-sets over the same keys is usually cheaper than N separate
-groupBys when the views share a scan; ``union_views`` exists for the
-heterogeneous-keys case where they don't.
+rows. ``aggregate_views`` compiles every declared view into ONE
+grouping-sets aggregate: one scan of the input feeds an Expand (one
+copy of each row per distinct key set, the keys a set leaves out
+nulled) and one partial + final hash aggregate keyed by the keys and
+the grouping id. N views cost one scan and one shuffle instead of N
+of each (Dremel's many aggregates from one columnar scan); the price
+is K row copies per input row inside the map-side aggregate for K
+distinct key sets, which is CPU, not I/O, and leaves the shuffle at
+one partial state per (key set, group) per task. A DISTINCT metric
+(``count(distinct x)``) adds Spark's distinct-aggregate rewrite: a
+second Expand and a second shuffle keyed by the group and x.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,23 +60,106 @@ def declarative_aggregate(
     return df.agg(*aggs)
 
 
-def union_views(
-    views: dict[str, DataFrame],
+def _case(branches: Iterable[tuple[Column, Column]]) -> Column:
+    """CASE WHEN cond THEN value ... END over ``(cond, value)`` pairs,
+    null when no branch holds."""
+    out = F
+    for cond, value in branches:
+        out = out.when(cond, value)
+    return out
+
+
+def aggregate_views(
+    df: DataFrame,
+    specs: list[dict[str, Any]],
     *,
     tag_column: str = "aggregation",
     stamp_column: str | None = "transformation_date",
     stamp_value: Any | None = None,
 ) -> DataFrame:
-    """Stack heterogeneous aggregate views long-format (reference U1 +
-    P2/P3): each view gets a literal ``tag_column`` naming it, views
-    are combined with ``unionByName(allowMissingColumns=True)`` so
-    columns absent from a view become null, and an optional literal
-    stamp column is appended (injected, not ``date.today()``).
+    """Every declared view of ``df`` in one long-format table, from one
+    grouping-sets aggregate (reference U1 + P2/P3).
+
+    ``specs``: ``[{name, group_by: [...], metrics: [{name, expr}]}]``,
+    each view as ``declarative_aggregate`` would compute it. The result
+    equals those views each tagged with a literal ``tag_column`` naming
+    it and stacked with ``unionByName(allowMissingColumns=True)``: the
+    columns are the views' group-by keys, metric names and the tag in
+    first-declared order, a column a view does not produce is null in
+    its rows, and ``stamp_column`` holds the injected ``stamp_value``
+    (not ``date.today()``) when both are given.
+
+    The distinct key sets become the grouping sets over one scan;
+    ``grouping_id`` tells a null key value from a key the set leaves
+    out, and maps each group to the view(s) declaring its key set
+    (views that share a key set share its groups, one output row per
+    view). Each distinct metric expression is aggregated once over
+    every set, reading the input's real columns, never the Expand's
+    nulled keys, then masked to the views that declare it under that
+    name. Unlike a global ``df.agg``, a view with an empty ``group_by``
+    has no row over an empty input (Spark's grouping-sets semantics).
     """
-    tagged = [df.withColumn(tag_column, F.lit(name)) for name, df in views.items()]
-    out = tagged[0]
-    for df in tagged[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
+    names = [s["name"] for s in specs]
+    if not specs or len(set(names)) != len(names):
+        raise ValueError(f"aggregate views need unique view names, got {names}")
+    for s in specs:
+        if not s["metrics"]:
+            raise ValueError(f"view {s['name']!r} declares no metric")
+
+    def unique(items):
+        return list(dict.fromkeys(items))
+
+    keys = unique(k for s in specs for k in s.get("group_by", []))
+    exprs = unique(m["expr"] for s in specs for m in s["metrics"])
+    agg_col = {e: f"__m{i}" for i, e in enumerate(exprs)}
+    views_of_set: dict[frozenset[str], list[str]] = {}
+    for s in specs:
+        views_of_set.setdefault(frozenset(s.get("group_by", [])), []).append(s["name"])
+
+    grouped = df.groupingSets(
+        [[k for k in keys if k in ks] for ks in views_of_set], *keys
+    ).agg(
+        *[F.expr(e).alias(agg_col[e]) for e in exprs],
+        F.grouping_id().alias("__gid"),
+    )
+    # grouping_id: bit (n-1-i) is set when keys[i] is left out of the set
+    tag = _case(
+        (
+            F.col("__gid")
+            == sum(1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in ks),
+            F.array(*map(F.lit, views)),
+        )
+        for ks, views in views_of_set.items()
+    )
+    tagged = grouped.select(
+        *keys, *agg_col.values(), F.explode(tag).alias(tag_column)
+    )
+
+    metric_names = {m["name"] for s in specs for m in s["metrics"]}
+
+    def column(name: str) -> Column:
+        if name not in metric_names:
+            return F.col(name)
+        declared = {
+            s["name"]: m["expr"]
+            for s in specs for m in s["metrics"] if m["name"] == name
+        }
+        if len(declared) == len(specs) and len(set(declared.values())) == 1:
+            return F.col(agg_col[declared[specs[0]["name"]]])
+        return _case(
+            (
+                F.col(tag_column).isin([v for v, ve in declared.items() if ve == e]),
+                F.col(agg_col[e]),
+            )
+            for e in unique(declared.values())
+        )
+
+    order = unique(
+        c
+        for s in specs
+        for c in (*s.get("group_by", []), *(m["name"] for m in s["metrics"]), tag_column)
+    )
+    out = tagged.select(*[column(c).alias(c) for c in order])
     if stamp_column is not None and stamp_value is not None:
         out = out.withColumn(stamp_column, F.lit(stamp_value))
     return out

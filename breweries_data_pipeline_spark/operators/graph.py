@@ -131,10 +131,11 @@ def connected_components(
 
     ``edges`` is an undirected edge list (each pair once, either
     order); edges with a null endpoint are ignored. ``nodes`` carries
-    every node id, and must hold every edge endpoint (isolated nodes
-    form singleton components labeled with themselves); None means the
-    endpoints of the edges without a null endpoint, each once.
-    ``cluster_id`` has the id column's type.
+    every node id (isolated nodes form singleton components labeled
+    with themselves), and the components are those of the subgraph it
+    induces: an edge with an endpoint outside ``nodes`` is dropped, so
+    it links nothing. None means the endpoints of the edges without a
+    null endpoint, each once. ``cluster_id`` has the id column's type.
 
     Edge lists of at most ``_DRIVER_EDGES`` (2^20) edges are labeled
     on the driver in numpy (the module docstring gives the memory
@@ -152,7 +153,12 @@ def connected_components(
             .unionByName(edges.select(F.col(dst).alias(id_col)))
             .distinct()
         )
-    nodes = nodes.select(id_col)
+    else:
+        nodes = nodes.select(id_col)
+        for end in (src, dst):
+            edges = edges.join(
+                nodes.withColumnRenamed(id_col, end), end, "left_semi"
+            )
     id_field = nodes.schema[id_col]
 
     found = _driver_components(edges, src, dst)

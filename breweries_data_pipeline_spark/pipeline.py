@@ -38,14 +38,11 @@ from dataclasses import dataclass, field
 from typing import Any, Callable
 
 import yaml
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from breweries_data_pipeline_spark.operators.aggregate import (
-    declarative_aggregate,
-    union_views,
-)
+from breweries_data_pipeline_spark.operators.aggregate import aggregate_views
 from breweries_data_pipeline_spark.operators.clean import (
     cast_columns,
     deduplicate,
@@ -285,25 +282,32 @@ def run_transform_stage(
 def run_aggregate_stage(
     spark: SparkSession, stage: Stage, paths: PathResolver
 ) -> dict[str, Any]:
-    """Gold: declarative aggregations unioned long-format with a view
-    discriminator + stamp (reference
+    """Gold: every declared aggregation view, stacked long-format with a
+    view discriminator + stamp (reference
     breweries_aggregate_gold_notebook.py:32-68, realizing the declared
-    config contract configs/breweries_gold_pipeline.yml:41-51)."""
+    config contract configs/breweries_gold_pipeline.yml:41-51).
+
+    ``aggregate_views`` compiles the views into one grouping-sets
+    aggregate, so silver is scanned and shuffled once whatever the
+    number of views (the reference runs one groupBy, and one scan,
+    per view). The gold write is the stage's one action; its row count
+    rides it via ``Observation``."""
     p = stage.parameters
     df = spark.read.parquet(paths.resolve(p["input_path"]))
-    views: dict[str, DataFrame] = {}
-    for spec in p["aggregations"]:
-        views[spec["name"]] = declarative_aggregate(
-            df, spec.get("group_by", []), spec["metrics"]
-        )
-    gold = union_views(views, stamp_value=paths.variables.get("ds"))
+    gold = aggregate_views(
+        df, p["aggregations"], stamp_value=paths.variables.get("ds")
+    )
     out = paths.resolve(p["output_path"])
     from pyspark.sql import Observation
 
     obs = Observation(f"gold_{stage.task_id}")
     gold = gold.observe(obs, F.count(F.lit(1)).alias("rows"))
     write_parquet(gold, out)
-    return {"output_path": out, "views": sorted(views), "rows": obs.get["rows"]}
+    return {
+        "output_path": out,
+        "views": sorted(v["name"] for v in p["aggregations"]),
+        "rows": obs.get["rows"],
+    }
 
 
 def run_quality_stage(

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from breweries_data_pipeline_spark.operators import (
     add_literal,
+    aggregate_views,
     cast_columns,
     deduplicate,
     declarative_aggregate,
@@ -32,7 +33,6 @@ from breweries_data_pipeline_spark.operators import (
     grouped_count,
     normalize_strings,
     rules_dataframe,
-    union_views,
 )
 from breweries_data_pipeline_spark.functions.text import (
     STOPWORDS_EN,
@@ -530,13 +530,17 @@ def q_groupby_count_3key(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gold_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1+P2+P3: the reference's distinctive Gold contract — stacked
     heterogeneous aggregate views, discriminator tag, missing columns
-    as nulls (breweries_aggregate_gold_notebook.py:37-60)."""
-    orders = read_table(spark, sf_dir, "orders")
-    views = {
-        "by_status": grouped_count(orders, ["o_orderstatus"]),
-        "by_priority": grouped_count(orders, ["o_orderpriority"]),
-    }
-    return union_views(views, stamp_value=STAMP_DATE)
+    as nulls (breweries_aggregate_gold_notebook.py:37-60) — both views
+    from one grouping-sets aggregate over one scan of ``orders``."""
+    count = [{"name": "total_count", "expr": "count(*)"}]
+    return aggregate_views(
+        read_table(spark, sf_dir, "orders"),
+        [
+            {"name": "by_status", "group_by": ["o_orderstatus"], "metrics": count},
+            {"name": "by_priority", "group_by": ["o_orderpriority"], "metrics": count},
+        ],
+        stamp_value=STAMP_DATE,
+    )
 
 
 @register(

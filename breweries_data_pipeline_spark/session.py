@@ -69,6 +69,19 @@ def get_spark(
     )
     if master is not None:
         builder = builder.master(master)
+    if master is not None and master.startswith("local"):
+        # Partition discovery above this many directories lists them in
+        # a Spark job, so a cluster's executors share a big listing. In
+        # local mode those tasks run in the driver JVM anyway: the job
+        # buys no parallelism the driver lacks, and on a 4-core host it
+        # cost 0.3-0.5 s, plus about 1 s of task-deserialisation CPU,
+        # on every read of a 43-directory partitioned table. So local
+        # sessions always list on the driver; cluster sessions keep the
+        # default (32).
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

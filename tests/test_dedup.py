@@ -214,6 +214,20 @@ def test_connected_components_ignores_null_endpoints(spark, monkeypatch):
         assert _labels(graph.connected_components(edges, None)) == {1: 1, 2: 1}
 
 
+@pytest.mark.parametrize("distributed", [False, True])
+def test_connected_components_nodes_induce_the_subgraph(spark, request, distributed):
+    """An edge with an endpoint outside ``nodes`` links nothing, on the
+    driver path and in the distributed loop alike: node 2 is left out,
+    so 1 and 3 are not joined through it."""
+    from breweries_data_pipeline_spark.operators.graph import connected_components
+
+    if distributed:
+        request.getfixturevalue("distributed_cc")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 3)], "id_a long, id_b long")
+    nodes = spark.createDataFrame([(1,), (3,), (4,)], "id long")
+    assert _labels(connected_components(edges, nodes)) == {1: 1, 3: 3, 4: 3}
+
+
 def test_connected_components_int_ids_keep_their_type(spark, monkeypatch):
     """``cluster_id`` has the id column's type on both paths, and the
     two paths return the same schema and rows."""

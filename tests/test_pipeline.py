@@ -160,6 +160,126 @@ def test_engine_gold_pipeline_with_quality_report(spark, tmp_path):
     assert by_rule["View discriminator present"]["invalid_count"] == 0
 
 
+def _count(name="brewery_count"):
+    return {"name": name, "expr": "count(*)"}
+
+
+def _views_by_union(df, specs, stamp):
+    """The per-view reference: one groupBy per view, each tagged with
+    its name and stacked by column name, missing columns null."""
+    from pyspark.sql import functions as F
+
+    out = None
+    for spec in specs:
+        aggs = [F.expr(m["expr"]).alias(m["name"]) for m in spec["metrics"]]
+        keys = spec.get("group_by", [])
+        view = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
+        view = view.withColumn("aggregation", F.lit(spec["name"]))
+        out = view if out is None else out.unionByName(view, allowMissingColumns=True)
+    return out.withColumn("transformation_date", F.lit(stamp))
+
+
+_VIEW_SPECS = {
+    # a null brewery_type is a group of by_type, not "not grouped"
+    "null_key": [
+        {"name": "by_state", "group_by": ["state"], "metrics": [_count()]},
+        {"name": "by_type", "group_by": ["brewery_type"], "metrics": [_count()]},
+    ],
+    # one key set, two views (declared in different key orders)
+    "shared_key_set": [
+        {"name": "by_country_type", "group_by": ["country", "brewery_type"],
+         "metrics": [_count()]},
+        {"name": "by_type_country", "group_by": ["brewery_type", "country"],
+         "metrics": [_count()]},
+        {"name": "by_state", "group_by": ["state"], "metrics": [_count()]},
+    ],
+    "grand_total": [
+        {"name": "total", "group_by": [], "metrics": [_count()]},
+        {"name": "by_type", "group_by": ["brewery_type"], "metrics": [_count()]},
+    ],
+    # per-view metric lists, one name with two expressions, and a
+    # metric over another view's key, which must see the real states
+    "per_view_metrics": [
+        {"name": "by_state", "group_by": ["state"],
+         "metrics": [_count(), {"name": "top_type", "expr": "max(brewery_type)"}]},
+        {"name": "by_type", "group_by": ["brewery_type"],
+         "metrics": [{"name": "n_states", "expr": "count(distinct state)"},
+                     {"name": "brewery_count", "expr": "count(brewery_type)"}]},
+        {"name": "by_country", "group_by": ["country"],
+         "metrics": [_count(), {"name": "n_states", "expr": "count(distinct state)"}]},
+    ],
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_VIEW_SPECS))
+def test_aggregate_views_matches_per_view_union(spark, shape):
+    """One grouping-sets aggregate gives the per-view groupBy union's
+    rows, column order and column types for every spec shape."""
+    from collections import Counter
+
+    from breweries_data_pipeline_spark.operators.aggregate import aggregate_views
+
+    silver = spark.createDataFrame(
+        [("tx", "micro", "us"), ("tx", None, "us"), ("tx", "nano", "us"),
+         ("or", "micro", "us"), ("on", "micro", "ca"), (None, None, "ca")],
+        "state string, brewery_type string, country string",
+    )
+    specs = _VIEW_SPECS[shape]
+    got = aggregate_views(silver, specs, stamp_value="2025-01-01")
+    want = _views_by_union(silver, specs, "2025-01-01")
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, want.collect()))
+
+
+def test_aggregate_views_gold_contract(spark):
+    """The medallion gold views keep the gold table's column order, and
+    a null brewery_type stays apart from the rows that do not group by
+    it."""
+    from breweries_data_pipeline_spark.operators.aggregate import aggregate_views
+
+    silver = spark.createDataFrame(
+        [("tx", None, "us"), ("tx", "micro", "us")],
+        "state string, brewery_type string, country string",
+    )
+    gold = aggregate_views(
+        silver,
+        [
+            {"name": "by_state", "group_by": ["state"], "metrics": [_count()]},
+            {"name": "by_type", "group_by": ["brewery_type"], "metrics": [_count()]},
+            {"name": "by_country_type", "group_by": ["country", "brewery_type"],
+             "metrics": [_count()]},
+        ],
+        stamp_value="2025-01-01",
+    )
+    assert gold.columns == [
+        "state", "brewery_count", "aggregation", "brewery_type", "country",
+        "transformation_date",
+    ]
+    rows = {tuple(r[:5]) for r in gold.collect()}
+    assert rows == {
+        ("tx", 2, "by_state", None, None),
+        (None, 1, "by_type", None, None),
+        (None, 1, "by_type", "micro", None),
+        (None, 1, "by_country_type", None, "us"),
+        (None, 1, "by_country_type", "micro", "us"),
+    }
+
+
+def test_aggregate_views_rejects_bad_specs(spark):
+    from breweries_data_pipeline_spark.operators.aggregate import aggregate_views
+
+    df = spark.createDataFrame([("tx",)], "state string")
+    with pytest.raises(ValueError, match="unique view names"):
+        aggregate_views(df, [
+            {"name": "v", "group_by": ["state"], "metrics": [_count()]},
+            {"name": "v", "group_by": [], "metrics": [_count()]},
+        ])
+    with pytest.raises(ValueError, match="declares no metric"):
+        aggregate_views(df, [{"name": "v", "group_by": ["state"], "metrics": []}])
+
+
 def test_unknown_rule_type_raises(spark, tmp_path):
     spark.createDataFrame([(1,)], ["x"]).write.parquet(str(tmp_path / "t"))
     cfg = load_pipeline_config("configs/example_gold_pipeline.yml")

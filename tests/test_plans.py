@@ -688,3 +688,67 @@ def test_lsh_dedup_plan_budget(spark, sf_dir, name):
 def test_similarity_plan_budget(spark, sf_dir, name):
     budget = _SIMILARITY_PLAN_BUDGET[name]
     assert _plan_node_counts(spark, sf_dir, name, budget) == budget
+
+
+def _plan_nodes(df) -> "Counter[str]":
+    """Node names of ``df``'s executed plan, one count per node."""
+    import re
+    from collections import Counter
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return Counter(re.findall(r"^[\s+\-:|]*(?:\*\(\d+\) )?(\w+)", plan, re.M))
+
+
+def test_gold_views_plan_one_scan_and_listing_stays_on_driver(spark, tmp_path):
+    """Gold over a silver table partitioned into 40 state directories
+    (more than the 32 at which partition discovery turns into a Spark
+    job): every declared view comes from one parquet scan, one Expand
+    and one Exchange, and a local session lists the directories on the
+    driver, with no listing job."""
+    from pyspark.sql import functions as F
+
+    from breweries_data_pipeline_spark.operators.aggregate import aggregate_views
+
+    silver = str(tmp_path / "silver")
+    spark.range(400).select(
+        F.format_string("s%02d", F.col("id") % 40).alias("state"),
+        F.when(F.col("id") % 3 == 0, None).otherwise(F.lit("micro")).alias("brewery_type"),
+        F.lit("us").alias("country"),
+    ).write.partitionBy("state", "country").parquet(silver)
+
+    sc = spark.sparkContext
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    local_threshold = spark.conf.get(key)
+    schema = spark.read.parquet(silver).schema
+
+    def listing_jobs(threshold: str) -> int:
+        group = f"silver-listing-{threshold}"
+        spark.conf.set(key, threshold)
+        sc.setJobGroup(group, "partition discovery")
+        try:
+            # an explicit schema leaves listing as the read's only job
+            spark.read.schema(schema).parquet(silver)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.conf.set(key, local_threshold)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert listing_jobs("32") >= 1
+    assert listing_jobs(local_threshold) == 0
+
+    count = [{"name": "brewery_count", "expr": "count(*)"}]
+    specs = [
+        {"name": "by_state", "group_by": ["state"], "metrics": count},
+        {"name": "by_type", "group_by": ["brewery_type"], "metrics": count},
+        {"name": "by_country_type", "group_by": ["country", "brewery_type"],
+         "metrics": count},
+    ]
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        gold = aggregate_views(spark.read.parquet(silver), specs, stamp_value="2025-01-01")
+        nodes = _plan_nodes(gold)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert (nodes["FileScan"], nodes["Expand"], nodes["Exchange"]) == (1, 1, 1)
+    assert gold.count() == 40 + 2 + 2

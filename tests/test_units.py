@@ -101,7 +101,8 @@ def test_fetch_distributed_pulls_all_pages(spark):
 
 def test_get_spark_sizes_local_session_from_host_cores(monkeypatch):
     """Without SPARK_GRAFT_CPUS the local master and the shuffle
-    partition count follow the host's core count. The builder is a
+    partition count follow the host's core count, and only a local
+    master raises the partition-discovery threshold. The builder is a
     recording fake, so no JVM starts."""
     import types
 
@@ -142,6 +143,15 @@ def test_get_spark_sizes_local_session_from_host_cores(monkeypatch):
     built = session.get_spark("t")
     assert built.master_ == "local[5]"
     assert built.conf["spark.sql.shuffle.partitions"] == "5"
+    # a local session lists partition directories on the driver; a
+    # cluster session keeps Spark's parallel-listing threshold
+    discovery = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert built.conf[discovery] == str(2**31 - 1)
+    monkeypatch.setattr(
+        session, "SparkSession", types.SimpleNamespace(builder=Builder())
+    )
+    built = session.get_spark("t", master="spark://head:7077")
+    assert discovery not in built.conf
 
 
 # ---------------------------------------------------------------- schema
