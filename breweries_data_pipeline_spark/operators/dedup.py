@@ -40,7 +40,11 @@ too: shingle sets (``_shingle_sets``), the rarest-first prefix cut
 ``prefix_filtered_similarity_join`` runs them with the corpus on both
 sides; ``near_dedup_against_index`` runs them with a new batch against
 a ``ShingleIndex``, whose one storage form is the bucketed catalog
-tables of ``write_shingle_index_bucketed``.
+tables of ``write_shingle_index_bucketed``. A shingle set has one
+form as well: the distinct xxhash64 fingerprints of the doc's
+shingles, so every sort, exchange, write and verify of the family
+moves 8-byte longs (the prefix lemma only needs one shared total
+order, which the fingerprints give; exact up to 64-bit collisions).
 """
 
 from __future__ import annotations
@@ -92,45 +96,6 @@ def _prefix_len_expr(size_col: str, t_ppm: int):
         f"cast({size_col} as bigint) - "
         f"(({t_ppm} * cast({size_col} as bigint) + 999999) div 1000000) + 1"
     )
-
-
-def _hash_gate_cols(sets_df: DataFrame) -> DataFrame:
-    """Per-doc columns for the exact 64-bit hash pre-gate that runs
-    between candidate generation and string verification: the distinct
-    xxhash64 array (8-byte elements intersect ~an order of magnitude
-    cheaper than ~25-byte shingle strings), the true set size, and an
-    injectivity flag. Exactness argument: a DEFICIT in
-    |h(A) ∩ h(B)| vs |A ∩ B| requires two distinct common shingles
-    with colliding hashes — both live in BOTH docs, so each doc's own
-    hash array shrinks under array_distinct and the flag trips;
-    flagged docs bypass the gate entirely. Collisions between
-    A-only and B-only shingles can only INFLATE the hash overlap, and
-    inflated pairs die in the exact string verify that follows. So
-    gate-pass ⊇ true pairs always, at ~2^-64 per-pair flag odds."""
-    return sets_df.select(
-        "id",
-        F.array_distinct(F.expr("transform(shingles, s -> xxhash64(s))")).alias("__h"),
-        F.col("size").cast("long").alias("__sz"),
-    ).withColumn("__flag", F.size("__h") < F.col("__sz"))
-
-
-def _hash_gate_keep(t_ppm: int):
-    """Gate predicate over two ``_hash_gate_cols`` tables suffixed
-    ``_a`` / ``_b``: hash-overlap Jaccard >= t (in exact ppm using
-    TRUE set sizes, valid because deficit implies a flag), or either
-    side flagged."""
-    inter = F.size(F.array_intersect("__h_a", "__h_b")).cast("long")
-    sa, sb = F.col("__sz_a"), F.col("__sz_b")
-    return (
-        (inter * 1_000_000 >= t_ppm * (sa + sb - inter))
-        | F.col("__flag_a")
-        | F.col("__flag_b")
-    )
-
-
-def _suffixed(df: DataFrame, side: str) -> DataFrame:
-    """Every column of ``df`` renamed ``<name>_<side>``."""
-    return df.select(*[F.col(c).alias(f"{c}_{side}") for c in df.columns])
 
 
 def _ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
@@ -655,32 +620,20 @@ def near_dedup_minhash(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_size: int = 3,
-    chain_safe: bool = True,
 ) -> DataFrame:
     """Near-dup dedup: keep exactly one representative (the minimum
     id) per connected component of the verified near-dup pair graph.
 
-    ``chain_safe=True`` (default) runs connected components over the
-    pair stream, so multi-hop duplicate chains collapse fully — e.g.
-    edges (1,3) and (2,3) leave only doc 1, because 1 and 2 are
-    transitively linked through 3 even though they never pair
-    directly. The CC label table holds only docs that appear in some
-    pair (duplicates are a small fraction of a real corpus), so the
-    iterative step is tiny relative to the corpus scan.
-
-    ``chain_safe=False`` is the documented cheap mode: drop every doc
-    that appears as the larger id of some verified pair — one
-    anti-join, no iteration, but a doc linked only THROUGH a dropped
-    intermediary survives (in the example above, doc 2 would). Right
-    when pairs are known to be 1-hop (e.g. after an exact-dedup pass
-    on templated corpora), or when a pass-per-day incremental
-    pipeline tolerates stragglers for a round."""
+    Connected components run over the pair stream, so multi-hop
+    duplicate chains collapse fully — e.g. edges (1,3) and (2,3) leave
+    only doc 1, because 1 and 2 are transitively linked through 3 even
+    though they never pair directly. The CC label table holds only
+    docs that appear in some pair (duplicates are a small fraction of
+    a real corpus), so the iterative step is tiny relative to the
+    corpus scan."""
     pairs = verified_near_dup_pairs(
         df, text_col, id_col, threshold, num_hashes, bands, shingle_size
     )
-    if not chain_safe:
-        dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        return df.join(dup_ids, id_col, "left_anti")
     return keep_component_min(df, pairs, id_col)
 
 
@@ -834,29 +787,23 @@ def prefix_filtered_similarity_join(
     a doc is so small that t forces a long prefix.
 
     Plan: the shared prefix-filter steps with the corpus on both
-    sides — persisted shingle sets (:func:`_shingle_sets`; they feed
-    the token explode AND both verify sides, without the cache the
-    regex shingle extraction re-runs 4x) -> corpus-frequency partial
-    AGGREGATE broadcast-joined back (see _freq_hint: the exploded
-    stream is never exchanged by the Zipfian shingle key) -> per-doc
-    rarest-first window (:func:`_prefix_rows`; shuffle by doc id,
-    uniform) -> :func:`_verified_prefix_pairs`. The persisted prefix
-    carries the shingle's 8-BYTE xxhash64 as the candidate key (ids +
-    hash shuffled, never text; a hash collision can only ADD
-    candidates, which die in the gate/verify, so the
-    zero-false-negative guarantee is untouched — the rarest-first
-    ORDER itself still ties on the exact string). Output is exact
-    fixed-point ppm ``(id_a, id_b, jaccard_ppm)`` with ``id_a <
-    id_b``, so it is oracle-checkable against brute force.
+    sides — persisted fingerprint sets (:func:`_shingle_sets`; they
+    feed the token explode AND both verify sides, without the cache
+    the regex shingle extraction re-runs 4x) -> corpus-frequency
+    partial AGGREGATE broadcast-joined back (see _freq_hint: the
+    exploded stream is never exchanged by the Zipfian shingle key) ->
+    per-doc rarest-first window (:func:`_prefix_rows`; shuffle by doc
+    id, uniform) -> :func:`_verified_prefix_pairs`. Every one of those
+    steps moves 8-byte fingerprints, never shingle text; the
+    rarest-first order ties on the fingerprint, which is as good a
+    shared total order as the string. Output is exact fixed-point ppm
+    ``(id_a, id_b, jaccard_ppm)`` with ``id_a < id_b``, so it is
+    oracle-checkable against brute force.
     """
     sets = track_persist(_shingle_sets(docs, text_col, id_col, shingle_size))
-    prefix = track_persist(
-        _prefix_rows(sets, _shingle_freq(sets), threshold)
-        .withColumn("shingle", F.xxhash64("shingle"))
-    )
-    return _verified_prefix_pairs(
-        prefix, sets, prefix, sets, _t_ppm(threshold), gate=True
-    )
+    # persisted: the prefix table is both sides of the candidate join
+    prefix = track_persist(_prefix_rows(sets, _shingle_freq(sets), threshold))
+    return _verified_prefix_pairs(prefix, sets, prefix, sets, _t_ppm(threshold))
 
 
 class ShingleIndex:
@@ -870,10 +817,14 @@ class ShingleIndex:
       shingle per indexed doc (the AllPairs candidate join side).
       Append-only across ingest days; bucketed by ``shingle`` on disk,
       so the daily candidate join is exchange-free on the corpus side.
-    - ``sets``: (id, shingles, size) — per-doc distinct shingle arrays
-      for exact verification of candidates.
+    - ``sets``: (id, shingles, size) — per-doc distinct shingle
+      fingerprint arrays for exact verification of candidates.
     - ``freq``: (shingle, n) — the FROZEN corpus shingle-frequency
       snapshot that defines the global rarest-first order.
+
+    Every ``shingle`` is a bigint xxhash64 fingerprint (see
+    :func:`_shingle_sets`), so the index's sorts, bucketed writes and
+    daily joins move 8-byte longs.
 
     The prefix-filter lemma needs both docs of a pair ordered by ONE
     total order; the snapshot is that order. A new batch must compute
@@ -890,18 +841,12 @@ class ShingleIndex:
     """
 
     def __init__(self, prefix: DataFrame, sets: DataFrame, freq: DataFrame,
-                 threshold: float, shingle_size: int,
-                 fingerprint: bool = False):
+                 threshold: float, shingle_size: int):
         self.prefix = prefix
         self.sets = sets
         self.freq = freq
         self.threshold = threshold
         self.shingle_size = shingle_size
-        # True when the index stores xxhash64 fingerprints instead of
-        # raw shingle strings (see _shingle_sets): batches queried
-        # against it MUST shingle the same way, and the string-verify
-        # hash pre-gate is skipped (the sets already ARE hash arrays)
-        self.fingerprint = fingerprint
 
 
 def _shingle_sets(
@@ -910,14 +855,12 @@ def _shingle_sets(
     id_col: str,
     shingle_size: int,
     *,
-    fingerprint: bool = False,
     carry: tuple = (),
 ) -> DataFrame:
-    """Per-doc distinct shingle sets. ``fingerprint=True`` maps each
-    shingle through xxhash64 IN THE SAME NARROW PASS, so every
-    downstream exchange, sort, and bucketed write carries 8-byte
-    longs instead of ~25-byte shingle strings — the
-    fingerprint-before-exchange production step (the sf10 shingle
+    """Per-doc distinct shingle fingerprint sets: each shingle maps
+    through xxhash64 IN THE SAME NARROW PASS that extracts it, so
+    every downstream exchange, sort, bucketed write and verify carries
+    8-byte longs instead of ~25-byte shingle strings (the sf10 shingle
     sort's spill was dominated by raw shingle text). Distinctness is
     taken AFTER hashing: a collision between two distinct shingles
     of the SAME doc merges them (set size shrinks by 1), between
@@ -926,9 +869,7 @@ def _shingle_sets(
     per shingle pair (tests account collisions explicitly)."""
     from breweries_data_pipeline_spark.functions.text import shingles
 
-    sh = shingles(text_col, shingle_size)
-    if fingerprint:
-        sh = F.transform(sh, lambda s: F.xxhash64(s))
+    sh = F.transform(shingles(text_col, shingle_size), lambda s: F.xxhash64(s))
     return (
         df.select(
             F.col(id_col).alias("id"),
@@ -998,8 +939,6 @@ def _verified_prefix_pairs(
     prefix_b: DataFrame,
     sets_b: DataFrame,
     t_ppm: int,
-    *,
-    gate: bool,
 ) -> DataFrame:
     """The one candidate-and-verify step of the prefix-filter joins,
     shared by the self-join (:func:`prefix_filtered_similarity_join`:
@@ -1008,10 +947,10 @@ def _verified_prefix_pairs(
     (:func:`near_dedup_against_index`: batch as ``a``, index as
     ``b``). ``prefix_*`` are :func:`_prefix_rows` tables cut under ONE
     shared frequency order; ``sets_*`` are :func:`_shingle_sets`
-    tables. Returns ``(id_a, id_b, jaccard_ppm, *extras)`` for every
-    pair with exact Jaccard >= t, where ``extras`` are the columns
-    ``sets_b`` carries beyond ``id, shingles, size`` (the collapsed
-    index's ``w``).
+    fingerprint tables. Returns ``(id_a, id_b, jaccard_ppm, *extras)``
+    for every pair with exact Jaccard >= t, where ``extras`` are the
+    columns ``sets_b`` carries beyond ``id, shingles, size`` (the
+    collapsed index's ``w``).
 
     1. Candidates: one equi-join on the prefix shingle. The AllPairs
        length filter (J(A,B) >= t forces min(|A|,|B|) >=
@@ -1021,19 +960,10 @@ def _verified_prefix_pairs(
        prefix never reach distinct or verify (on dense-vocabulary
        corpora the positional bound is what keeps verify proportional
        to true-match volume; it halved the sf1 wall when it landed).
-    2. ``gate``: the exact 64-bit hash pre-gate (:func:`_hash_gate_cols`)
-       — candidates that survive the prefix filters are still mostly
-       false, and intersecting 8-byte hash arrays costs ~an order of
-       magnitude less than comparing shingle strings. Skip it when the
-       sets already ARE hash arrays (a fingerprinted index): the
-       verify is then exactly the gate's intersection. A self-join
-       persists ONE gate table for both sides: the interpreted
-       transform(shingles, xxhash64) pass (CodegenFallback) is the
-       most expensive projection of the gate phase (~half its wall at
-       sf1), and would otherwise run once per side.
-    3. Verify: exact Jaccard in fixed-point ppm, joining the two
-       shingle-array tables back on the candidate ids (the smaller side
-       AQE-broadcastable)."""
+    2. Verify: exact Jaccard in fixed-point ppm, joining the two
+       fingerprint-array tables back on the candidate ids (the smaller
+       side AQE-broadcastable); the candidates are intersected as
+       8-byte arrays, so no cheaper pre-gate is worth a pass."""
     self_join = prefix_a is prefix_b and sets_a is sets_b
     on = F.col("a.shingle") == F.col("b.shingle")
     if self_join:
@@ -1053,17 +983,6 @@ def _verified_prefix_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    if gate:
-        if self_join:
-            gate_a = gate_b = track_persist(_hash_gate_cols(sets_a))
-        else:
-            gate_a, gate_b = _hash_gate_cols(sets_a), _hash_gate_cols(sets_b)
-        pairs = (
-            pairs.join(_suffixed(gate_a, "a"), "id_a")
-            .join(_suffixed(gate_b, "b"), "id_b")
-            .where(_hash_gate_keep(t_ppm))
-            .select("id_a", "id_b")
-        )
     extras = [c for c in sets_b.columns if c not in ("id", "shingles", "size")]
     ppm = F.expr(
         "(cast(size(array_intersect(__s_a, __s_b)) as bigint) * 1000000) div "
@@ -1093,7 +1012,6 @@ def build_shingle_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_size: int = 3,
-    fingerprint: bool = False,
     collapse_exact: bool = False,
 ) -> ShingleIndex:
     """Build the :class:`ShingleIndex` for a corpus. One shingle
@@ -1104,17 +1022,15 @@ def build_shingle_index(
     :func:`read_shingle_index_bucketed`, and only the (small) new
     batch is ever shingled again.
 
-    ``fingerprint=True`` builds the index over xxhash64 shingle
-    fingerprints instead of raw strings (see :func:`_shingle_sets`):
-    the prefix window's sort, the frequency aggregate, the bucketed
-    catalog write, and every daily candidate join then move 8-byte
-    longs — the production form for corpora whose shingle sort
-    otherwise dominates shuffle/spill bytes (the locally-measured
-    sf10 disk ceiling). The prefix-filter lemma is hash-agnostic (it
-    needs only ONE shared total order, which the fingerprint
-    frequency snapshot provides), and verification is exact Jaccard
-    over the fingerprint sets — exact over shingles up to 64-bit
-    collisions.
+    The index holds xxhash64 shingle fingerprints (see
+    :func:`_shingle_sets`): the prefix window's sort, the frequency
+    aggregate, the bucketed catalog write, and every daily candidate
+    join move 8-byte longs (raw shingle text dominated the
+    locally-measured sf10 spill). The prefix-filter lemma is
+    hash-agnostic (it needs only ONE shared total order, which the
+    fingerprint frequency snapshot provides), and verification is
+    exact Jaccard over the fingerprint sets — exact over shingles up
+    to 64-bit collisions.
 
     ``collapse_exact=True`` collapses byte-identical history docs
     FIRST (one rep per distinct text = the group's smallest id, with
@@ -1144,10 +1060,7 @@ def build_shingle_index(
         # near_dedup_against_index weights match counts by it
         carry = ("w",)
     sets = track_persist(
-        _shingle_sets(
-            history, text_col, id_col, shingle_size,
-            fingerprint=fingerprint, carry=carry,
-        )
+        _shingle_sets(history, text_col, id_col, shingle_size, carry=carry)
     )
     # persisted: the freq table feeds BOTH the index's own prefix cut
     # (via _prefix_rows) and the returned/written freq snapshot — one
@@ -1160,28 +1073,12 @@ def build_shingle_index(
     # shingle key at all (see _freq_hint).
     freq = track_persist(_shingle_freq(sets))
     prefix = _prefix_rows(sets, freq, threshold)
-    return ShingleIndex(prefix, sets, freq, threshold, shingle_size, fingerprint)
+    return ShingleIndex(prefix, sets, freq, threshold, shingle_size)
 
 
-def _meta_format_version(meta, where: str) -> int:
-    """Validated shingle-index format_version from a meta row: absent
-    (pre-versioning layouts, all string-shingle) reads as 2; anything
-    outside the understood set fails loudly — the guard that keeps a
-    version-unaware reader from silently null-joining string shingles
-    against a fingerprinted (v3, bigint-shingle) layout."""
-    ver = (
-        int(meta["format_version"])
-        if "format_version" in meta.__fields__
-        and meta["format_version"] is not None
-        else 2
-    )
-    if ver not in (2, 3):
-        raise ValueError(
-            f"shingle index {where} has format_version={ver}, newer than "
-            "this reader understands (2-3). Upgrade the library or "
-            "rebuild the index with this version's writer."
-        )
-    return ver
+# the one on-disk layout read and written: bigint fingerprint shingles
+# (a fingerprint batch would silently null-join a string-shingle one)
+_INDEX_FORMAT_VERSION = 3
 
 
 def write_shingle_index_bucketed(
@@ -1226,12 +1123,10 @@ def write_shingle_index_bucketed(
         [(
             int(round(index.threshold * 1_000_000)),
             index.shingle_size,
-            # fingerprinted layouts are a DIFFERENT on-disk format
-            # (bigint shingle column): version 3, so readers that
-            # enforce the version set fail loudly instead of silently
-            # null-joining string shingles against fingerprints
-            3 if index.fingerprint else 2,
-            bool(index.fingerprint),
+            _INDEX_FORMAT_VERSION,
+            # always true: kept so readers that still branch on the
+            # flag read this layout as the fingerprint one it is
+            True,
         )],
         "threshold_ppm bigint, shingle_size int, format_version int, "
         "fingerprint boolean",
@@ -1240,16 +1135,24 @@ def write_shingle_index_bucketed(
 
 
 def read_shingle_index_bucketed(spark, table_prefix: str) -> ShingleIndex:
+    """The :class:`ShingleIndex` that :func:`write_shingle_index_bucketed`
+    stored under ``table_prefix``. Only :data:`_INDEX_FORMAT_VERSION`
+    reads: an older or versionless (string-shingle) layout and an
+    unknown newer one fail loudly instead of mis-joining."""
     meta = spark.table(f"{table_prefix}_meta").first()
-    _meta_format_version(meta, f"tables {table_prefix!r}")
+    ver = meta["format_version"] if "format_version" in meta.__fields__ else None
+    if ver != _INDEX_FORMAT_VERSION:
+        raise ValueError(
+            f"shingle index tables {table_prefix!r} have format_version={ver}; "
+            f"this reader understands only {_INDEX_FORMAT_VERSION} "
+            "(fingerprint shingles). Rebuild the index with this version's writer."
+        )
     return ShingleIndex(
         spark.table(f"{table_prefix}_prefix"),
         spark.table(f"{table_prefix}_sets"),
         spark.table(f"{table_prefix}_freq"),
         meta["threshold_ppm"] / 1_000_000,
         int(meta["shingle_size"]),
-        # absent on tables written before the fingerprint option
-        bool(meta["fingerprint"]) if "fingerprint" in meta.__fields__ else False,
     )
 
 
@@ -1274,11 +1177,11 @@ def near_dedup_against_index(
     rarest-first order, any (new, old) pair with J >= t shares a
     shingle inside both prefixes, so candidates = batch prefix
     equi-join ``index.prefix`` — no crossJoin, and Zipf-head shingles
-    are never join keys. The length and positional filters, the hash
-    pre-gate (skipped for a fingerprinted index, whose sets already
-    are hash arrays) and the exact verify are the self-join's own
-    step, :func:`_verified_prefix_pairs`, with the batch as side
-    ``a`` and the index as side ``b``.
+    are never join keys. The length and positional filters and the
+    exact verify are the self-join's own step,
+    :func:`_verified_prefix_pairs`, with the batch as side ``a`` and
+    the index as side ``b``; the batch is fingerprinted the way the
+    index is (:func:`_shingle_sets`).
 
     ``threshold`` defaults to the index's own; a HIGHER one is allowed
     (the indexed prefixes are supersets of what that gate needs — see
@@ -1331,16 +1234,12 @@ def near_dedup_against_index(
         )
     t_ppm = _t_ppm(t)
     sets = track_persist(
-        _shingle_sets(
-            new_batch, text_col, id_col, index.shingle_size,
-            fingerprint=index.fingerprint,
-        )
+        _shingle_sets(new_batch, text_col, id_col, index.shingle_size)
     )
     # batch as side a, index as side b: the index's sets carry the
     # collapsed index's per-rep multiplicities ``w`` through the step
     verified = _verified_prefix_pairs(
-        _prefix_rows(sets, index.freq, t), sets, index.prefix, index.sets, t_ppm,
-        gate=not index.fingerprint,
+        _prefix_rows(sets, index.freq, t), sets, index.prefix, index.sets, t_ppm
     ).select(
         F.col("id_a").alias("__bid"),
         F.col("id_b").alias("__hid"),

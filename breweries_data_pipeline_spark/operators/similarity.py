@@ -336,8 +336,9 @@ def dedup_embeddings(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup dedup: drop every vector with a
-    near-duplicate of smaller id (same single-pass collapse semantics
-    as near_dedup_minhash)."""
+    near-duplicate of smaller id: one anti-join, no connected
+    components, so the far end of a multi-hop chain can survive
+    (near_dedup_minhash collapses chains)."""
     pairs = embedding_near_dup_pairs(corpus, threshold, id_col, vec_col)
     dup_ids = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return corpus.join(dup_ids, id_col, "left_anti")

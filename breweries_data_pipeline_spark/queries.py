@@ -1597,9 +1597,9 @@ def q_dedup_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle): MinHash-LSH candidates, exact-Jaccard verification at
     0.7, connected components over the pair graph, keep each
     component's minimum id. Multi-hop chains (A~B~C with A and C
-    never pairing directly) collapse to ONE survivor — the single
-    anti-join pass, kept as near_dedup_minhash(chain_safe=False),
-    would let C survive whenever it is never the larger id of a pair.
+    never pairing directly) collapse to ONE survivor — a single
+    anti-join pass (drop every larger id of a pair) would let C
+    survive whenever it is never the larger id of a pair.
 
     Oracle: exhaustive shared-shingle blocking regenerates every pair
     above threshold (same argument as q_neardup_edit_gate — the 32x2
@@ -8258,11 +8258,13 @@ def q_similarity_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fine at oracle SF); the Spark plan is the prefix-filtered
     equi-join from ``prefix_filtered_similarity_join``, whose
     rarest-first global token order keeps candidate buckets small on
-    Zipfian shingle distributions. Every pair the quadratic oracle
-    finds MUST appear — the prefix lemma guarantees no false
-    negatives, and the exact verify kills false positives — so this
-    oracle row proves the filter's completeness, not just its
-    plumbing."""
+    Zipfian shingle distributions. The Spark side works on xxhash64
+    shingle fingerprints and the oracle on shingle strings, so the
+    hash match also checks that the fingerprints stay exact (no
+    64-bit collision) here. Every pair the quadratic oracle finds
+    MUST appear — the prefix lemma guarantees no false negatives, and
+    the exact verify kills false positives — so this oracle row
+    proves the filter's completeness, not just its plumbing."""
     from breweries_data_pipeline_spark.operators.dedup import (
         prefix_filtered_similarity_join,
     )
@@ -12418,10 +12420,13 @@ def q_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest are the (small) new batch's. The corpus-side shuffle is
     paid once at index-build, amortized over every daily run
     (tests/test_dedup.py plan-asserts the exchange-free corpus side).
-    Timing this query therefore measures build + bucketed write +
-    read-back + join: the true daily-ingest cost, not just the join.
-    The index tables are scratch: release_caches() drops them once
-    the result is materialised."""
+    The index holds xxhash64 shingle fingerprints, its one form, so
+    every table and join moves 8-byte longs. Timing this query
+    therefore measures build + bucketed write + read-back + join: the
+    true daily-ingest cost, not just the join. The index tables are
+    scratch: release_caches() drops them once the result is
+    materialised. q_neardup_index_fp is the same cycle with
+    collapse_exact on both sides."""
     from breweries_data_pipeline_spark.operators.dedup import (
         build_shingle_index,
         near_dedup_against_index,
@@ -14361,37 +14366,29 @@ def q_sentence_dedup_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_neardup_index_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION persisted-index ingest cycle — both steps
-    q_neardup_index's scale notes promise, composed:
+    """The PRODUCTION persisted-index ingest cycle: q_neardup_index
+    (whose index already holds xxhash64 shingle fingerprints — at sf3
+    they halved the string form's spill, SCALE.md round 9) with
+    **exact-collapse** on both sides (collapse_exact=True): one rep
+    per distinct text with w multiplicities, the funnel's
+    exact-dedup-before-near-dup order applied inside the operator —
+    candidate volume scales with DISTINCT-text pairs, not copy². The
+    two queries differ only in that switch.
 
-    - **fingerprint**: the index is built over xxhash64 shingle
-      fingerprints (build_shingle_index fingerprint=True), so the
-      prefix window's sort, the bucketed catalog write, the daily
-      candidate join, and the exact-Jaccard verify all move 8-byte
-      longs instead of raw shingle strings (measured at sf3: memory
-      spill 27.1->14.0 GB, disk spill 10.0->5.3 GB, wall
-      149.8->107.7s vs the byte-faithful twin);
-    - **exact-collapse** (collapse_exact=True on both sides): one rep
-      per distinct text with w multiplicities, the funnel's
-      exact-dedup-before-near-dup order applied inside the operator —
-      candidate volume scales with DISTINCT-text pairs, not copy².
-      NOTE (r9 re-measurement): on gen_sf's DEFAULT adversarial
-      replica this does NOT rescue sf10 on a single box — the
-      per-copy suffix defeats exact collapse by design and the
-      100-copy cliques are TRUE near-dup pairs, so the verify stage
-      is output-bound (~k² real pairs) and still exhausts local
-      disk. On the density-controlled replica (gen_sf --doc-text
-      distinct: k× more docs at the source corpus's own dup rate)
-      the full sf10 cycle completes in 36s vs the byte-faithful
-      twin's 42.5s — see SCALE.md round 9.
+    NOTE (r9 re-measurement): on gen_sf's DEFAULT adversarial replica
+    collapse does NOT rescue sf10 on a single box — the per-copy
+    suffix defeats exact collapse by design and the 100-copy cliques
+    are TRUE near-dup pairs, so the verify stage is output-bound (~k²
+    real pairs) and still exhausts local disk. On the
+    density-controlled replica (gen_sf --doc-text distinct: k× more
+    docs at the source corpus's own dup rate) the full sf10 cycle
+    completes in 36s — see SCALE.md round 9.
 
-    Same brute-force oracle as q_neardup_index: both steps are
-    semantics-preserving — collapse provably (byte-identical docs
-    have identical match sets; n_dups weights by w, best_match_id is
-    the best group's min id = its rep; equality tested on a tripled
-    corpus in tests/test_dedup.py), fingerprints up to 64-bit
-    collisions (~2^-64/pair; collision accounting in the same test
-    file). Timing it measures the whole collapsed fingerprinted
+    Same brute-force oracle as q_neardup_index: collapse is
+    semantics-preserving (byte-identical docs have identical match
+    sets; n_dups weights by w, best_match_id is the best group's min
+    id = its rep; equality tested on a tripled corpus in
+    tests/test_dedup.py). Timing it measures the whole collapsed
     build + bucketed write + read-back + join cycle. The index tables
     are scratch, dropped by release_caches() like q_neardup_index's."""
     from breweries_data_pipeline_spark.operators.dedup import (
@@ -14406,9 +14403,7 @@ def q_neardup_index_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     history = docs.where(F.col("doc_id") % 5 != 0)
     tbl = "t_q_neardup_index_fp"
     for t in write_shingle_index_bucketed(
-        build_shingle_index(
-            history, threshold=0.5, fingerprint=True, collapse_exact=True
-        ),
+        build_shingle_index(history, threshold=0.5, collapse_exact=True),
         tbl,
     ):
         _track_table(spark, t)

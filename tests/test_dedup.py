@@ -326,8 +326,8 @@ def _chain_docs(spark):
 
 
 def test_near_dedup_chain_safe_collapses_multi_hop(spark):
-    """chain_safe=True must leave ONE survivor of the 1-3-2 chain;
-    chain_safe=False documents the miss (doc 2 survives)."""
+    """near_dedup_minhash must leave ONE survivor of the 1-3-2 chain
+    (a single anti-join pass would keep doc 2)."""
     docs = _chain_docs(spark)
     pairs = {
         (r.id_a, r.id_b)
@@ -340,14 +340,6 @@ def test_near_dedup_chain_safe_collapses_multi_hop(spark):
         for r in near_dedup_minhash(docs, threshold=0.4, bands=32).collect()
     )
     assert chain_safe == [1]
-
-    single_pass = sorted(
-        r.doc_id
-        for r in near_dedup_minhash(
-            docs, threshold=0.4, bands=32, chain_safe=False
-        ).collect()
-    )
-    assert single_pass == [1, 2]
 
 
 def test_exact_collapse_yields_star_not_clique(spark):
@@ -500,11 +492,12 @@ def test_shingle_index_bucketed_roundtrip_exchange_free_corpus_side(spark, sf_di
 
 
 def test_shingle_index_catalog_format_version_guard(spark):
-    """The catalog index records its on-disk format both ways: a
-    fingerprinted index writes format_version 3 (its shingle column is
-    bigint, not string) and reads back as fingerprinted; a meta table
-    with an UNKNOWN future version is rejected loudly instead of
-    silently mis-joining a layout this reader does not understand."""
+    """The catalog index records its on-disk format: the writer emits
+    format_version 3 with fingerprint = true (the meta schema the
+    previous release reads), and the reader accepts only 3. A
+    versionless or v2 (string-shingle) meta and an unknown future v4
+    are rejected loudly, with a rebuild hint, instead of silently
+    mis-joining a layout this reader does not understand."""
     import pytest as _pytest
 
     from breweries_data_pipeline_spark.operators.dedup import (
@@ -518,28 +511,44 @@ def test_shingle_index_catalog_format_version_guard(spark):
         [(1, BASE), (2, BASE + " tail tokens here"), (3, "completely different words")],
         ["doc_id", "text"],
     )
+    meta_schema = (
+        "threshold_ppm bigint, shingle_size int, format_version int, "
+        "fingerprint boolean"
+    )
+
+    def write_meta(table: str, rows, schema: str = meta_schema) -> None:
+        _drop_table_and_stale_location(spark, table)
+        spark.createDataFrame(rows, schema).write.mode("overwrite").format(
+            "parquet"
+        ).saveAsTable(table)
+
     try:
         write_shingle_index_bucketed(
-            build_shingle_index(history, threshold=0.5, fingerprint=True),
+            build_shingle_index(history, threshold=0.5),
             "t_shidx_fmt",
             n_buckets=2,
         )
-        meta = spark.table("t_shidx_fmt_meta").first()
-        assert int(meta["format_version"]) == 3 and bool(meta["fingerprint"])
-        assert read_shingle_index_bucketed(spark, "t_shidx_fmt").fingerprint is True
+        meta = spark.table("t_shidx_fmt_meta")
+        assert [(f.name, f.dataType.simpleString()) for f in meta.schema] == [
+            ("threshold_ppm", "bigint"), ("shingle_size", "int"),
+            ("format_version", "int"), ("fingerprint", "boolean"),
+        ]
+        assert tuple(meta.first()) == (500000, 3, 3, True)
+        idx = read_shingle_index_bucketed(spark, "t_shidx_fmt")
+        assert (idx.threshold, idx.shingle_size) == (0.5, 3)
 
-        _drop_table_and_stale_location(spark, "t_shidx_future_meta")
-        spark.createDataFrame(
-            [(500000, 3, 4, False)],
-            "threshold_ppm bigint, shingle_size int, format_version int, "
-            "fingerprint boolean",
-        ).write.mode("overwrite").format("parquet").saveAsTable("t_shidx_future_meta")
-        with _pytest.raises(ValueError, match="format_version=4"):
-            read_shingle_index_bucketed(spark, "t_shidx_future")
+        for version in (2, 4):
+            write_meta("t_shidx_fmt_meta", [(500000, 3, version, version > 2)])
+            with _pytest.raises(ValueError, match=f"format_version={version}.*Rebuild"):
+                read_shingle_index_bucketed(spark, "t_shidx_fmt")
+        write_meta(
+            "t_shidx_fmt_meta", [(500000, 3)], "threshold_ppm bigint, shingle_size int"
+        )
+        with _pytest.raises(ValueError, match="format_version=None.*Rebuild"):
+            read_shingle_index_bucketed(spark, "t_shidx_fmt")
     finally:
         for t in ("prefix", "sets", "freq", "meta"):
             spark.sql(f"DROP TABLE IF EXISTS t_shidx_fmt_{t}")
-        spark.sql("DROP TABLE IF EXISTS t_shidx_future_meta")
 
 
 def test_bucket_star_survivors_equal_clique_survivors(spark, sf_dir):
@@ -574,59 +583,46 @@ def test_bucket_star_survivors_equal_clique_survivors(spark, sf_dir):
         sigs.unpersist()
 
 
-def test_fingerprint_index_matches_byte_faithful_twin(spark, sf_dir):
-    """The fingerprint-before-exchange contract (r8 verdict #2): an
-    index built over xxhash64 shingle fingerprints must produce the
-    SAME daily-ingest annotations as the byte-faithful index, row for
-    row — plus explicit collision accounting: on the fixture corpus
-    the number of distinct shingle strings equals the number of
-    distinct fingerprints (zero collisions), which is the exactness
-    precondition the docstrings state. Also asserts the persisted
-    flag survives the bucketed round-trip so a batch queried against
-    a reloaded fingerprint index shingles the same way."""
+def test_fingerprint_index_collision_free_and_bigint_roundtrip(spark, sf_dir):
+    """The exactness precondition of the fingerprint shingle form,
+    accounted explicitly: on the fixture corpus the number of distinct
+    shingle strings equals the number of distinct xxhash64
+    fingerprints (zero collisions), so fingerprint Jaccard equals
+    string Jaccard there (result equality with string shingles is the
+    DuckDB oracle's job). Also asserts the persisted sets/prefix stay
+    bigint through the bucketed round-trip."""
+    from breweries_data_pipeline_spark.functions.text import shingles
     from breweries_data_pipeline_spark.operators.dedup import (
-        _shingle_sets,
         build_shingle_index,
-        near_dedup_against_index,
         read_shingle_index_bucketed,
         write_shingle_index_bucketed,
     )
     from breweries_data_pipeline_spark.sources import read_table
 
     docs = read_table(spark, sf_dir, "documents")
-    batch = docs.where(F.col("doc_id") % 5 == 0)
-    history = docs.where(F.col("doc_id") % 5 != 0)
 
-    # collision accounting over the WHOLE corpus (both sides)
-    sets = _shingle_sets(docs, "text", "doc_id", 3)
     n_strings, n_fps = (
-        sets.select(F.explode("shingles").alias("s"))
+        docs.select(F.explode(shingles("text", 3)).alias("s"))
         .agg(
             F.countDistinct("s").alias("a"),
             F.countDistinct(F.xxhash64("s")).alias("b"),
         )
         .first()
     )
+    assert n_strings > 0
     assert n_strings == n_fps, "64-bit collision on fixture corpus"
 
-    plain = near_dedup_against_index(
-        batch, build_shingle_index(history, threshold=0.5), threshold=0.5
-    )
     try:
         write_shingle_index_bucketed(
-            build_shingle_index(history, threshold=0.5, fingerprint=True),
+            build_shingle_index(
+                docs.where(F.col("doc_id") % 5 != 0), threshold=0.5
+            ),
             "t_shidx_fp_test",
             n_buckets=8,
         )
-        idx_fp = read_shingle_index_bucketed(spark, "t_shidx_fp_test")
-        assert idx_fp.fingerprint is True  # flag survives the round-trip
-        # the persisted sets/prefix really are longs, not strings
-        assert dict(idx_fp.sets.dtypes)["shingles"] == "array<bigint>"
-        assert dict(idx_fp.prefix.dtypes)["shingle"] == "bigint"
-        fp = near_dedup_against_index(batch, idx_fp, threshold=0.5)
-        assert sorted(map(tuple, fp.collect())) == sorted(
-            map(tuple, plain.collect())
-        )
+        idx = read_shingle_index_bucketed(spark, "t_shidx_fp_test")
+        assert dict(idx.sets.dtypes)["shingles"] == "array<bigint>"
+        assert dict(idx.prefix.dtypes)["shingle"] == "bigint"
     finally:
         for t in ("prefix", "sets", "freq", "meta"):
             spark.sql(f"DROP TABLE IF EXISTS t_shidx_fp_test_{t}")
@@ -694,9 +690,7 @@ def test_collapse_exact_index_matches_uncollapsed(spark, sf_dir):
     plain = near_dedup_against_index(
         batch, build_shingle_index(history, threshold=0.5), threshold=0.5
     )
-    idx_c = build_shingle_index(
-        history, threshold=0.5, collapse_exact=True, fingerprint=True
-    )
+    idx_c = build_shingle_index(history, threshold=0.5, collapse_exact=True)
     assert "w" in idx_c.sets.columns
     coll = near_dedup_against_index(
         batch, idx_c, threshold=0.5, collapse_exact=True

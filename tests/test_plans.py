@@ -556,24 +556,37 @@ def test_sentence_dedup_fp_rank_exchange_carries_no_text(spark, sf_dir):
 
 
 def test_fingerprint_index_prefix_moves_longs_not_strings(spark, sf_dir):
-    """build_shingle_index(fingerprint=True): every table the index
-    persists and every exchange the prefix window pays must carry the
-    shingle as an 8-byte LONG — the production step that halved sf3
-    spill. Schema-asserted on all three index surfaces (prefix, sets,
-    freq) so a regression to raw strings fails here, not in a 100 TB
-    shuffle bill."""
+    """The prefix-filter family's one shingle form is the xxhash64
+    fingerprint: every table build_shingle_index returns (prefix,
+    sets, freq) and every table prefix_filtered_similarity_join
+    persists (its sets and prefix) must carry the shingle as an 8-byte
+    LONG — the step that halved sf3 spill. Schema-asserted so a
+    regression to raw strings fails here, not in a 100 TB shuffle
+    bill."""
     from pyspark.sql import types as T
 
+    from breweries_data_pipeline_spark import cache
     from breweries_data_pipeline_spark.operators.dedup import (
         build_shingle_index,
+        prefix_filtered_similarity_join,
     )
     from breweries_data_pipeline_spark.sources import read_table
 
     docs = read_table(spark, sf_dir, "documents").limit(200)
-    idx = build_shingle_index(docs, threshold=0.5, fingerprint=True)
+    idx = build_shingle_index(docs, threshold=0.5)
     assert isinstance(idx.prefix.schema["shingle"].dataType, T.LongType)
     assert isinstance(idx.freq.schema["shingle"].dataType, T.LongType)
     assert isinstance(idx.sets.schema["shingles"].dataType.elementType, T.LongType)
+
+    n_before = len(cache._TRACKED_CACHES)
+    prefix_filtered_similarity_join(docs, threshold=0.5)
+    persisted = [df.schema for df in cache._TRACKED_CACHES[n_before:]]
+    sets = [s for s in persisted if "shingles" in s.fieldNames()]
+    prefix = [s for s in persisted if "shingle" in s.fieldNames()]
+    assert len(sets) == 1 and len(prefix) == 1, persisted
+    assert isinstance(sets[0]["shingles"].dataType.elementType, T.LongType)
+    assert isinstance(prefix[0]["shingle"].dataType, T.LongType)
+    cache.release_caches()
 
 
 def test_bitext_mine_reuses_persisted_candidates(spark, sf_dir):
@@ -617,6 +630,9 @@ _LSH_PLAN_BUDGET = {
 # q_kmeans_assign's 3 are the seed sort, the cluster aggregate and the
 # final sort; q_kmeans_lloyd2's 6 are the seed sort, the M-step's two
 # aggregates and centroid sort, and the final aggregate and sort.
+# q_similarity_join_exact (the self-join) and q_neardup_incremental (a
+# batch against an in-memory index) add the prefix-filter step
+# (operators/dedup.py _verified_prefix_pairs).
 _SIMILARITY_PLAN_BUDGET = {
     "q_kmeans_assign": {
         "Exchange": 3, "BroadcastExchange": 0, "BroadcastHashJoin": 0,
@@ -641,6 +657,14 @@ _SIMILARITY_PLAN_BUDGET = {
     "q_bitext_mine": {
         "Exchange": 7, "BroadcastExchange": 3, "BroadcastHashJoin": 3,
         "SortMergeJoin": 2, "ArrowEvalPython": 3, "InMemoryTableScan": 3,
+    },
+    "q_similarity_join_exact": {
+        "Exchange": 4, "BroadcastExchange": 4, "BroadcastHashJoin": 5,
+        "SortMergeJoin": 0, "ArrowEvalPython": 0, "InMemoryTableScan": 7,
+    },
+    "q_neardup_incremental": {
+        "Exchange": 8, "BroadcastExchange": 3, "BroadcastHashJoin": 4,
+        "SortMergeJoin": 2, "ArrowEvalPython": 0, "InMemoryTableScan": 7,
     },
 }
 
