@@ -2,8 +2,8 @@ from breweries_data_pipeline_spark.operators.clean import (  # noqa: F401
     add_literal,
     cast_columns,
     deduplicate,
-    deduplicate_salted,
     drop_null_required,
+    min_id_groups,
     normalize_strings,
 )
 from breweries_data_pipeline_spark.operators.aggregate import (  # noqa: F401
@@ -28,7 +28,6 @@ from breweries_data_pipeline_spark.operators.windows import (  # noqa: F401
 )
 from breweries_data_pipeline_spark.operators.temporal import (  # noqa: F401
     as_of_join,
-    as_of_join_cogroup,
     as_of_join_forward,
     range_join,
     range_join_bucketed,

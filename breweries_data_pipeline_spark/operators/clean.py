@@ -2,8 +2,9 @@
 
 These are the reference's Silver-stage semantics
 (breweries_transform_silver_notebook.py:70-83) as pure DataFrame ->
-DataFrame functions. All are narrow Column expressions except
-deduplication, which is the stage's one shuffle.
+DataFrame functions. All are narrow Column expressions except the
+two deduplications (``deduplicate``, ``min_id_groups``), one shuffle
+each.
 """
 
 from __future__ import annotations
@@ -28,10 +29,11 @@ def deduplicate(
     ``order_by`` must be a total order within key groups: rows that tie
     on it are kept arbitrarily, exactly like dropDuplicates.
 
-    Scale: both forms shuffle on the key columns. With heavily skewed
-    keys prefer the window form — AQE skew-join handling does not apply
-    to aggregates, but salting can be layered on the window
-    partitioning if one key dominates.
+    The window serves any total order (the silver stage's
+    ``updated_at`` with nulls last, ``merge_upsert``'s descending
+    version). To keep the smallest unique id per group use
+    ``min_id_groups``: its aggregate combines map-side, where this
+    window sends every row of a hot key to one partition.
     """
     if not order_by:
         return df.dropDuplicates(keys)
@@ -43,37 +45,27 @@ def deduplicate(
     )
 
 
-def deduplicate_salted(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[str | Column],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Skew-resistant form of ``deduplicate(..., order_by=...)``.
+def min_id_groups(df: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """Keep the smallest id of each group of identical content: one
+    hash aggregate returning ``(keys..., id_col, w)`` with ``id_col``
+    the group's min id and ``w`` its row count (bigint). Every
+    exact-duplicate collapse in the engine (text, vector and key
+    dedup) is this aggregate under the caller's own key; callers that
+    need the kept rows re-attach them with one join on ``id_col``,
+    callers that need a member -> rep map join the members on the key.
 
-    A single window partitioned by ``keys`` sends EVERY row of a hot
-    key to one task (AQE skew handling does not apply to
-    windows/aggregates). Two-phase instead:
+    Precondition: ``id_col`` is unique in ``df``, so the min-id row of
+    a group IS that group's ``row_number() = 1`` row under
+    ``order_by=[id_col]`` and the id join re-attaches exactly one row.
 
-    1. rank within (keys, salt) — the hot key spreads over
-       ``salt_buckets`` tasks; keep each bucket's first row;
-    2. rank the <= salt_buckets survivors per key — a tiny exchange.
-
-    ``order_by`` must be a total order within key groups (it
-    determines the survivor in both phases); the salt assignment is
-    row-arbitrary and never affects the result under that condition.
+    Skew: min and count combine map-side, so a hot group (a
+    boilerplate page repeated millions of times) shrinks to one row
+    per map task before the exchange. The ``deduplicate`` window
+    would send every row of that group to one partition, which AQE
+    cannot split.
     """
-    salt = F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
-    w1 = Window.partitionBy(*keys, "__salt").orderBy(*order_by)
-    w2 = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__salt", salt)
-        .withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__salt")
+    return df.groupBy(*keys).agg(
+        F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("w")
     )
 
 

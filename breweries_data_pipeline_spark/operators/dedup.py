@@ -5,7 +5,12 @@ Design for 100 TB — the non-negotiable rule is that candidate
 generation is ALWAYS a bucketed equi-join (shuffle on a bucket key),
 never an all-pairs crossJoin:
 
-- exact dedup: md5 fingerprint -> one shuffle on the fingerprint.
+- exact dedup: md5 fingerprint -> one min-id hash aggregate on the
+  fingerprint (``clean.min_id_groups``, combined map-side, so a hot
+  fingerprint never owns a partition), kept rows re-attached by one
+  join on the uniform id. Every exact-group collapse in this module
+  (the LSH pre-pass, the shingle index's and the batch's) is that
+  same aggregate under its own key.
 - MinHash-LSH: signature is a narrow map (no explode, no shuffle);
   banding explodes to ``bands`` rows per doc; candidates come from a
   self equi-join on ``(band, band_hash)`` so only same-bucket docs
@@ -59,16 +64,23 @@ from breweries_data_pipeline_spark.cache import (
     track_persist,
 )
 from breweries_data_pipeline_spark.functions.text import ngram_jaccard
-from breweries_data_pipeline_spark.operators.clean import deduplicate
+from breweries_data_pipeline_spark.operators.clean import min_id_groups
 from breweries_data_pipeline_spark.operators.text import with_fingerprint
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact text dedup: md5 of whitespace-normalized text, keep the
-    smallest id per fingerprint (deterministic, replayable). One
-    shuffle on the fingerprint — the hash key is uniform by
-    construction, so no skew at any scale."""
-    return deduplicate(with_fingerprint(df, text_col), ["fingerprint"], order_by=[id_col])
+    smallest id per fingerprint (deterministic, replayable). Returns
+    ``df``'s columns plus ``fingerprint``. One min-id aggregate on the
+    fingerprint (:func:`min_id_groups`: map-side combined, so a
+    boilerplate page repeated millions of times is one row per map
+    task before the exchange), then one semi-join on the uniform id
+    re-attaches the kept rows, and only those are fingerprinted again:
+    the join moves ids alone (on the 3,745-doc benchmark corpus, 4
+    cores, this ran 8% more rows/s than an inner join carrying the
+    group's fingerprint, 6 pairs). ``id_col`` must be unique."""
+    keep = min_id_groups(with_fingerprint(df, text_col), ["fingerprint"], id_col)
+    return with_fingerprint(df.join(keep.select(id_col), id_col, "left_semi"), text_col)
 
 
 # seeded affine family for the MinHash minima: sig_i = min over
@@ -462,6 +474,34 @@ def keep_component_min(df: DataFrame, edges: DataFrame, id_col: str = "doc_id") 
     return df.join(drop, id_col, "left_anti")
 
 
+def _exact_group_stars(
+    df: DataFrame, key: Column, id_col: str, score_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(reps, star) of the exact-collapse pre-pass that keeps a
+    near-dup pair stream linear in copy count: ``reps`` is ``df``
+    restricted to the min id of each group of equal ``key``
+    (:func:`min_id_groups`, re-attached by a semi-join on the id), and
+    ``star`` holds one (id_a = rep, id_b = member, ``score_col`` =
+    1.0) edge per other member, standing in for the group's clique
+    (component-equivalent). Members join the groups on the key; only
+    groups of two or more take part. k identical rows would otherwise
+    share EVERY band bucket and fan out k(k-1)/2 candidate pairs per
+    band (the r6 sf1 soak measured the embedding case at 61x).
+    ``id_col`` must be unique."""
+    keyed = df.select(F.col(id_col), key.alias("__g"))
+    groups = min_id_groups(keyed, ["__g"], id_col)
+    reps = df.join(groups.select(id_col), id_col, "left_semi")
+    star = (
+        keyed.join(
+            groups.where(F.col("w") > 1).select("__g", F.col(id_col).alias("id_a")),
+            "__g",
+        )
+        .where(F.col(id_col) != F.col("id_a"))
+        .select("id_a", F.col(id_col).alias("id_b"), F.lit(1.0).alias(score_col))
+    )
+    return reps, star
+
+
 def jaccard_pairs(
     pairs: DataFrame, sets: DataFrame, id_col: str = "doc_id", sets_col: str = "shingles"
 ) -> DataFrame:
@@ -478,29 +518,6 @@ def jaccard_pairs(
         .join(sb, "id_b")
         .select(*pairs.columns, ngram_jaccard(F.col("__sa"), F.col("__sb")).alias("jaccard"))
     )
-
-
-def collapse_exact_text_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
-    """(rep_map, reps): group byte-identical texts, electing the min
-    id as representative — the exact-dedup pre-pass the LSH docstring
-    has always demanded, as a reusable primitive. ``rep_map`` is
-    (id, __rep) for every row; ``reps`` is ``df`` restricted to
-    representatives. One md5-keyed shuffle, min(id) aggregate
-    (map-side combined, no collect_list), left-semi restriction. k
-    identical documents would otherwise share EVERY band bucket and
-    fan out k(k-1)/2 candidate pairs per band — collapsing first
-    makes LSH cost a function of unique texts (the r6 sf1 soak
-    measured the embedding twin of this blowup at 61x)."""
-    fp = F.md5(F.col(text_col)).alias("__fp")
-    keyed = df.select(F.col(id_col), fp)
-    rep = keyed.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-    rep_map = keyed.join(rep, "__fp").select(F.col(id_col), F.col("__rep"))
-    reps = df.join(
-        rep.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-    )
-    return rep_map, reps
 
 
 def verified_near_dup_pairs(
@@ -522,7 +539,8 @@ def verified_near_dup_pairs(
     are rare, which AQE decides at runtime.
 
     ``collapse_exact`` (default on) first collapses byte-identical
-    texts to a min-id representative and runs the signature/banding
+    texts (raw-text md5) to a min-id representative
+    (:func:`_exact_group_stars`) and runs the signature/banding
     pipeline on unique texts only; each exact group contributes STAR
     edges (rep -> member, jaccard exactly 1.0) instead of its full
     clique. Component-equivalent output (dedup / connected-components
@@ -530,15 +548,12 @@ def verified_near_dup_pairs(
     blowup identical documents otherwise cause. Pass
     ``collapse_exact=False`` for the literal all-pairs contract."""
     if collapse_exact:
-        rep_map, reps = collapse_exact_text_duplicates(df, text_col, id_col)
+        reps, star = _exact_group_stars(
+            df, F.md5(F.col(text_col)), id_col, "jaccard"
+        )
         rep_pairs = verified_near_dup_pairs(
             reps, text_col, id_col, threshold, num_hashes, bands,
             shingle_size, collapse_exact=False,
-        )
-        star = rep_map.where(F.col(id_col) != F.col("__rep")).select(
-            F.col("__rep").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(1.0).alias("jaccard"),
         )
         return rep_pairs.unionByName(star)
     rows_per_band = num_hashes // bands
@@ -749,15 +764,17 @@ def dedup_incremental(
     daily-crawl ingest shape, where re-fingerprinting history is free
     (store the fingerprint column) but re-deduping it is not.
 
-    Plan: anti-join on the md5 fingerprint (uniform key, no skew),
-    then the usual deterministic keep-smallest-id collapse inside the
-    batch. History contributes ONLY its fingerprint column to the
-    shuffle; at 100 TB that column lives precomputed in the corpus
-    table and the anti-join is exchange-free under bucketing."""
-    new_fp = with_fingerprint(new_batch, text_col)
+    Plan: :func:`exact_dedup` of the batch, then an anti-join on the
+    md5 fingerprint (uniform key, no skew). Collapsing before the
+    anti-join keeps the same rows as after it: the anti-join drops
+    whole fingerprint groups. History contributes ONLY its
+    fingerprint column to the shuffle; at 100 TB that column lives
+    precomputed in the corpus table and the anti-join is
+    exchange-free under bucketing."""
     hist_fp = with_fingerprint(history, text_col).select("fingerprint").distinct()
-    fresh = new_fp.join(hist_fp, "fingerprint", "left_anti")
-    return deduplicate(fresh, ["fingerprint"], order_by=[id_col])
+    return exact_dedup(new_batch, text_col, id_col).join(
+        hist_fp, "fingerprint", "left_anti"
+    )
 
 
 def prefix_filtered_similarity_join(
@@ -1033,8 +1050,9 @@ def build_shingle_index(
     to 64-bit collisions.
 
     ``collapse_exact=True`` collapses byte-identical history docs
-    FIRST (one rep per distinct text = the group's smallest id, with
-    the copy count carried as a ``w`` column on ``sets``) — the
+    FIRST (:func:`min_id_groups` on the text: one rep per distinct
+    text = the group's smallest id, with the copy count carried as a
+    ``w`` column on ``sets``) — the
     standard exact-dedup-before-near-dup funnel order, applied inside
     the index so daily queries inherit it. Semantics-preserving by
     construction: every copy has the SAME Jaccard to any batch doc,
@@ -1047,15 +1065,8 @@ def build_shingle_index(
     candidate rows from 100-copy cliques — drops ~10^4x)."""
     carry: tuple = ()
     if collapse_exact:
-        history = (
-            history.groupBy(F.md5(F.col(text_col)).alias("__g"))
-            .agg(
-                F.min(id_col).alias(id_col),
-                F.first(text_col).alias(text_col),
-                F.count(F.lit(1)).cast("long").alias("w"),
-            )
-            .drop("__g")
-        )
+        # grouped on the text itself, so the group row carries it
+        history = min_id_groups(history, [text_col], id_col)
         # the multiplicity rides the sets table (persisted with it);
         # near_dedup_against_index weights match counts by it
         carry = ("w",)
@@ -1208,13 +1219,13 @@ def near_dedup_against_index(
     from pyspark.sql import Window
 
     if collapse_exact:
-        key = F.md5(F.col(text_col))
-        members = new_batch.select(F.col(id_col), key.alias("__g"))
-        reps = new_batch.groupBy(key.alias("__g")).agg(
-            F.min(id_col).alias(id_col), F.first(text_col).alias(text_col)
-        )
+        # grouped on (md5, text): the group row carries the text to
+        # annotate, and the members join it back on the digest
+        keyed = new_batch.withColumn("__g", F.md5(F.col(text_col)))
+        members = keyed.select(id_col, "__g")
+        reps = min_id_groups(keyed, ["__g", text_col], id_col)
         ann = near_dedup_against_index(
-            reps.drop("__g"), index,
+            reps.select(id_col, text_col), index,
             threshold=threshold, text_col=text_col, id_col=id_col,
         )
         rep_ann = (

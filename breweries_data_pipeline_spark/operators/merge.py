@@ -11,8 +11,11 @@ shuffle a MERGE INTO performs, minus transactional commit (pair with
 the atomic-publish writers for snapshot isolation at the directory
 level).
 
-Skew note: a hot key concentrates its full history in one task; for
-pathological keys compose with deduplicate_salted's two-phase ranking.
+Skew note: a hot key concentrates its full history in one window
+partition. The keep order is the highest version, not the smallest
+unique id, so ``clean.min_id_groups``' map-side-combined aggregate
+does not apply; a pathological key needs its max version aggregated
+first and the winning rows joined back.
 """
 
 from __future__ import annotations

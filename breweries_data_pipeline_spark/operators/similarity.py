@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from breweries_data_pipeline_spark.cache import track_persist
 from breweries_data_pipeline_spark.functions.vectors import l2_norm
+from breweries_data_pipeline_spark.operators.dedup import _exact_group_stars
 from breweries_data_pipeline_spark.operators.windows import topk_per_group
 
 # Fixed pseudo-random hyperplanes over up-to-128-dim embeddings.
@@ -172,38 +173,14 @@ def _exact_dot_udf() -> "object":
     return pandas_udf("double")(_dot)
 
 
-def collapse_exact_vector_duplicates(
-    corpus: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> tuple[DataFrame, DataFrame]:
-    """(rep_map, reps): group BIT-IDENTICAL vectors, electing the min
-    id as representative. ``rep_map`` is (id, __rep) for every row;
-    ``reps`` is the corpus restricted to representatives.
-
-    This is the "run exact dedup first" mitigation for pathological
-    LSH buckets made real: k identical vectors land in the SAME
-    bucket of EVERY band, so banded candidate generation fans out
-    k(k-1)/2 pairs x bands per clique — the r6 sf1 soak measured a
-    61x wall blowup on a corpus with 10 copies per vector. Collapsing
-    exact groups first (one shuffle, grouped on the full vector value
-    so there is no hash-collision correctness risk) makes LSH cost a
-    function of UNIQUE vectors. Skew-safe: the group aggregate is
-    min(id) (map-side combined), never a collect_list.
-
-    Grouping key: md5 of the JSON rendering of the vector — a 128-bit
-    content fingerprint computed JVM-side. Shortest-round-trip float
-    formatting is injective, so equal fingerprints mean equal vectors
-    (the same md5-fingerprint identity the exact TEXT dedup path
-    already relies on); shuffling a 32-char digest instead of the
-    d-double array keeps this pre-pass cheaper than the LSH pass it
-    protects."""
-    fp = F.md5(F.to_json(F.struct(F.col(vec_col).alias("v")))).alias("__fp")
-    keyed = corpus.select(F.col(id_col), fp)
-    rep = keyed.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
-    rep_map = keyed.join(rep, "__fp").select(F.col(id_col), F.col("__rep"))
-    reps = corpus.join(
-        rep.select(F.col("__rep").alias(id_col)), id_col, "left_semi"
-    )
-    return rep_map, reps
+def _vector_key(vec_col: str) -> Column:
+    """Exact-collapse key of a vector column: md5 of its JSON
+    rendering, a 128-bit content fingerprint computed JVM-side.
+    Shortest-round-trip float formatting is injective, so equal
+    fingerprints mean bit-identical vectors, and grouping on a 32-char
+    digest instead of the d-double array keeps the collapse cheaper
+    than the LSH or clustering pass it protects."""
+    return F.md5(F.to_json(F.struct(F.col(vec_col).alias("v"))))
 
 
 def embedding_near_dup_pairs(
@@ -235,10 +212,10 @@ def embedding_near_dup_pairs(
     threshold test can never flip between engines.
 
     ``collapse_exact`` (default on) first collapses bit-identical
-    vectors to one representative (see
-    ``collapse_exact_vector_duplicates``) and runs LSH on unique
-    vectors only; each exact group then contributes STAR edges
-    (rep -> member, cosine exactly 1.0) instead of its full clique.
+    vectors to their min-id representative (``dedup._exact_group_stars``
+    on :func:`_vector_key`) and runs LSH on unique vectors only; each
+    exact group then contributes STAR edges (rep -> member, cosine
+    exactly 1.0) instead of its full clique.
     The returned pair set is component-equivalent to the full one —
     every duplicate is still connected to its group and groups are
     connected through their representatives — so dedup / connected-
@@ -247,17 +224,12 @@ def embedding_near_dup_pairs(
     ``collapse_exact=False`` for the literal all-pairs-listed
     contract (cliques within exact groups)."""
     if collapse_exact:
-        rep_map, reps = collapse_exact_vector_duplicates(corpus, id_col, vec_col)
+        reps, star = _exact_group_stars(corpus, _vector_key(vec_col), id_col, "cosine")
         if n_planes is None or bands is None:
             n_planes, bands = _adaptive_banding(reps.count(), threshold)
         rep_pairs = embedding_near_dup_pairs(
             reps, threshold, id_col, vec_col, n_planes, bands,
             collapse_exact=False,
-        )
-        star = rep_map.where(F.col(id_col) != F.col("__rep")).select(
-            F.col("__rep").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.lit(1.0).alias("cosine"),
         )
         return rep_pairs.unionByName(star)
     if n_planes is None or bands is None:
@@ -942,9 +914,12 @@ def semantic_dedup(
     Plan shape, in scale order:
     0. exact collapse (``collapse_exact``, on when tau <= 1.0): bit-
        identical vectors collapse to their min-id representative
-       BEFORE clustering. Exact copies always lose to their rep under
-       rank-ordered pruning (cosine exactly 1.0, rep ranks earlier by
-       the id tie-break), so the output is IDENTICAL — but a corpus
+       BEFORE clustering — one map-side-combined min-id aggregate on
+       the vector's md5 (``clean.min_id_groups``, via
+       ``dedup._exact_group_stars``), the kept rows re-attached by a
+       semi-join on the (unique) id. Exact copies always lose to
+       their rep under rank-ordered pruning (cosine exactly 1.0, rep
+       ranks earlier by the id tie-break), so the output is IDENTICAL — but a corpus
        with c copies per vector would otherwise fan c^2 pairs per
        clique into every cluster: the r6 sf1 soak (10 copies each)
        measured 14.9x wall vs 10x data before this pre-pass.
@@ -978,7 +953,7 @@ def semantic_dedup(
     """
     work = df
     if collapse_exact and tau <= 1.0:
-        _, work = collapse_exact_vector_duplicates(df, id_col, vec_col)
+        work, _ = _exact_group_stars(df, _vector_key(vec_col), id_col, "cosine")
 
     cents = kmeans_centroids(
         work, vec_col=vec_col, id_col=id_col, k=k, n_iter=n_iter

@@ -11,6 +11,12 @@ primitives rather than custom physical operators).
   join would pay, no range explosion, no per-row lookups. (DuckDB's
   native ASOF JOIN is the oracle spelling.)
 
+- ``as_of_join_forward``: the same composition reversed — the first
+  right row with ``right.ts >= left.ts``, carried back over the
+  following frame. It is the engine's only forward as-of: a cogrouped
+  pandas ``merge_asof`` gives the same rows but pins each key to one
+  task, so a hot key serializes.
+
 - ``range_join``: key equality + a timestamp-band predicate. Spark
   plans the equi part as a hash/SMJ join and applies the band as a
   post-join filter — correct at scale as long as the band is narrow
@@ -97,8 +103,8 @@ def as_of_join_forward(
     (ts, left-before-right-at-ties) and carry the nearest FOLLOWING
     right value back with ``first(value, ignorenulls)`` over
     [currentRow, unboundedFollowing]. ONE shuffle on the key; the
-    exchange is AQE-splittable, unlike the cogroup form where a hot
-    key serializes into a single pandas task.
+    exchange is AQE-splittable, where a cogrouped pandas
+    ``merge_asof`` would serialize a hot key into a single task.
 
     ``include_right_ts`` additionally carries the matched right
     timestamp as ``{right_ts}{suffix}``. Right rows must be unique per
@@ -203,86 +209,4 @@ def range_join_bucketed(
     return joined.filter(
         (F.col(right_ts) >= F.col(left_ts) - width)
         & (F.col(right_ts) <= F.col(left_ts))
-    )
-
-
-def as_of_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str] | None = None,
-    *,
-    suffix: str = "_next",
-) -> DataFrame:
-    """FORWARD as-of join (first right row at or after each left row)
-    via cogrouped applyInPandas: both sides shuffle once on the key,
-    then each key group runs a pandas ``merge_asof`` — a sorted-merge
-    kernel per group, Arrow-batched.
-
-    This is the engine's cogroup surface: the same semantics could be
-    composed with the union + carry-forward window (as_of_join reads
-    backward; reverse sign for forward), but cogroup is the right tool
-    when the per-key logic outgrows window expressions (multi-column
-    nearest-neighbor matching, custom tolerance logic). Deterministic:
-    merge_asof picks the FIRST right row at/after the left timestamp,
-    and right rows must be unique per (key, right_ts) — pre-aggregate
-    ties, as with as_of_join.
-
-    Skew note: one key = one pandas group; a pathological hot key
-    serializes into one task. For hot keys prefer the window form,
-    which AQE can at least split at the exchange."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    value_cols = value_cols or []
-    # Alias EVERY right-side column to a fresh name before the cogroup:
-    # when both sides derive from the same source they share attribute
-    # ids, and Spark's relation-dedup/pruning can drop the right
-    # child's copy of a shared column — the pandas frame then arrives
-    # without it. Fresh aliases make the children attribute-disjoint.
-    rkey = f"{key}__r"
-    rts = f"{right_ts}{suffix}"
-    rvals = [f"{c}{suffix}" for c in value_cols]
-    r2 = right.select(
-        F.col(key).alias(rkey),
-        F.col(right_ts).alias(rts),
-        *[F.col(c).alias(f"{c}{suffix}") for c in value_cols],
-    )
-    out_fields = list(left.schema.fields) + [
-        T.StructField(rts, right.schema[right_ts].dataType, True)
-    ] + [
-        T.StructField(f"{c}{suffix}", right.schema[c].dataType, True)
-        for c in value_cols
-    ]
-    out_schema = T.StructType(out_fields)
-    left_cols = [f.name for f in left.schema.fields]
-
-    def _merge(lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
-        # a key present on only one side delivers the other side as an
-        # empty frame WITHOUT columns — test emptiness before selecting
-        if lpdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        lpdf = lpdf.sort_values(left_ts)
-        if rpdf.empty:
-            out = lpdf[left_cols].copy()
-            for c in [rts, *rvals]:
-                out[c] = None
-            return out
-        rpdf = rpdf[[rts] + rvals].sort_values(rts)
-        return pd.merge_asof(
-            lpdf,
-            rpdf,
-            left_on=left_ts,
-            right_on=rts,
-            direction="forward",
-            allow_exact_matches=True,
-        )
-
-    return (
-        left.groupBy(key)
-        .cogroup(r2.groupBy(rkey))
-        .applyInPandas(_merge, out_schema)
     )

@@ -31,6 +31,7 @@ from breweries_data_pipeline_spark.operators import (
     declarative_aggregate,
     drop_null_required,
     grouped_count,
+    min_id_groups,
     normalize_strings,
     rules_dataframe,
 )
@@ -61,6 +62,7 @@ from breweries_data_pipeline_spark.operators.joins import anti_join, dim_join, s
 from breweries_data_pipeline_spark.operators.similarity import ann_topk, cosine_topk
 from breweries_data_pipeline_spark.operators.text import (
     language_profile,
+    with_fingerprint,
     with_lang_id,
     with_quality_score,
 )
@@ -106,6 +108,17 @@ from breweries_data_pipeline_spark.cache import (  # noqa: E402,F401
     track_persist as _persist,
     track_table as _track_table,
 )
+
+
+def _session_table_prefix(spark: SparkSession, base: str) -> str:
+    """``base`` suffixed with the session's applicationId (every
+    character outside ``[0-9A-Za-z_]`` mapped to ``_``), so two
+    processes that run the same table-writing query from one checkout
+    write distinct catalog tables instead of overwriting each other's."""
+    import re
+
+    return f"{base}_{re.sub(r'[^0-9A-Za-z_]', '_', spark.sparkContext.applicationId)}"
+
 
 # drain-scratch hygiene: streaming queries drop their checkpoint dirs
 # once the memory sink holds the result (a stream-stream join leaves
@@ -350,13 +363,16 @@ def q_dedup_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1 skew-resistant two-phase dedup (salt -> local rank -> global
-    rank). Same oracle as q_dedup_by_key: the salted plan must be
-    result-identical to the single-window form."""
-    from breweries_data_pipeline_spark.operators.clean import deduplicate_salted
-
+    """F1 skew-resistant dedup: the group table of ``min_id_groups``
+    on (user_id, event_type) read directly, no join. min(event_id)
+    combines map-side, so a hot key shrinks to one row per map task
+    before the exchange, where the window of q_dedup_by_key sends all
+    its rows to one partition. Same oracle as q_dedup_by_key:
+    event_id is unique, so the min-id row IS the window's first row."""
     df = read_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    return deduplicate_salted(df, ["user_id", "event_type"], order_by=["event_id"])
+    return min_id_groups(df, ["user_id", "event_type"], "event_id").select(
+        "event_id", "user_id", "event_type"
+    )
 
 
 @register(
@@ -1158,9 +1174,8 @@ def q_asof_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     the backward form: first purchase at/after each click per user,
     carried back with first(ignorenulls) over the forward frame). ONE
     AQE-splittable shuffle on the key — no applyInPandas, no hot-key
-    single-task serialization. The cogroup merge_asof kernel remains
-    available as ``as_of_join_cogroup`` for multi-column / custom
-    tolerance logic. Oracle: the correlated scalar-min subquery."""
+    single-task serialization (tests/test_plans.py pins the window
+    plan). Oracle: the correlated scalar-min subquery."""
     from breweries_data_pipeline_spark.operators.temporal import as_of_join_forward
 
     ev = read_table(spark, sf_dir, "events")
@@ -1441,15 +1456,17 @@ _SQL_SHINGLES = _sql_shingles(3)
 )
 def q_dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 exact text dedup: md5 of whitespace-normalized text, keep the
-    smallest doc_id per fingerprint. One shuffle on the fingerprint.
-    The hash VALUES are uniform, but occurrence counts are not — a
-    boilerplate page repeated millions of times is one hot
-    fingerprint group. For such corpora route through
-    ``deduplicate_salted`` (two-phase, q_dedup_salted) or a
-    groupBy-min + re-join; this form is right when dup clusters are
-    bounded."""
-    docs = read_table(spark, sf_dir, "documents")
-    return exact_dedup(docs).select("doc_id", "fingerprint")
+    smallest doc_id per fingerprint. The output is exactly the group
+    table of ``min_id_groups`` on the fingerprint, read directly: one
+    map-side-combined aggregate, one exchange, and no join back to the
+    rows (``exact_dedup`` adds that join for callers that need the
+    text). A boilerplate page repeated millions of times is one hot
+    fingerprint group, and the partial aggregate shrinks it to one
+    row per map task before the exchange."""
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return min_id_groups(with_fingerprint(docs), ["fingerprint"], "doc_id").select(
+        "doc_id", "fingerprint"
+    )
 
 
 @register(
@@ -9442,27 +9459,11 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline, with counts computed as five tiny aggregates over the
     shared lineage (Catalyst reuses the scan; no stage re-reads the
     corpus from disk)."""
-    from breweries_data_pipeline_spark.functions.text import normalized_text
-
     raw = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     quality = raw.filter(F.size(tokens("text")) >= 20)
-    # exact dedup as min-id aggregate + semi-join (r13): the window
-    # form shuffled (doc_id, text) by the TEXT FINGERPRINT — on a
-    # dup-dense corpus the boilerplate fingerprint owns one window
-    # partition (the same hot-key-window hazard as the r12 verdict's
-    # count-window item; AQE cannot split it). The aggregate is
-    # map-side partial min over ~40-byte (fp, id) pairs and the
-    # semi-join re-keys the text payload by the UNIFORM doc_id.
-    # Row-identical: doc_id is unique, so the min-id row per
-    # fingerprint IS the window's rn=1 row. Persisted: the survivor
-    # set feeds shingling, verification, the near-dup anti-join AND
-    # the stage counts.
-    keep = (
-        quality.groupBy(F.md5(normalized_text("text")).alias("__fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    exact = quality.join(keep, "doc_id", "semi").transform(_persist)
+    # persisted: the exact-dedup survivors feed shingling,
+    # verification, the near-dup anti-join AND the stage counts
+    exact = exact_dedup(quality).drop("fingerprint").transform(_persist)
 
     shs = _ensure_parallelism(exact, key="doc_id").select(
         "doc_id", F.array_distinct(shingles("text", 3)).alias("s")
@@ -9629,20 +9630,12 @@ def q_corpus_funnel_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); this twin is the 100 TB operating point: every stage is
     linear in docs, measured through two decades in SCALE.md
     round-7e. Full oracle including the recursive-CTE closure."""
-    from breweries_data_pipeline_spark.functions.text import normalized_text
     from breweries_data_pipeline_spark.operators.corpus import hash_bucket
 
     raw = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     quality = raw.filter(F.size(tokens("text")) >= 20)
-    # min-id aggregate + semi-join exact dedup (r13) — see
-    # q_corpus_funnel for the hot-fingerprint-window skew argument;
-    # row-identical because doc_id is unique
-    keep = (
-        quality.groupBy(F.md5(normalized_text("text")).alias("__fp"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    exact = quality.join(keep, "doc_id", "semi").transform(_persist)
+    # persisted as in q_corpus_funnel
+    exact = exact_dedup(quality).drop("fingerprint").transform(_persist)
     sh = _ensure_parallelism(exact, key="doc_id").select(
         "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("s")
     )
@@ -10907,13 +10900,10 @@ def q_lsh_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup factor; on the 10x replicated soak corpus it is ~10x
     (measured: 17.7s -> ~4s sf1)."""
     docs = read_table(spark, sf_dir, "documents")
-    uniq = (
-        _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id")
-        .groupBy("text")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.count(F.lit(1)).cast("long").alias("w"),
-        )
+    uniq = min_id_groups(
+        _ensure_parallelism(docs.select("doc_id", "text"), key="doc_id"),
+        ["text"],
+        "doc_id",
     )
     # the multiplicity w is constant per doc, so it rides the
     # signature's grouping key and the band keys
@@ -12424,9 +12414,10 @@ def q_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     every table and join moves 8-byte longs. Timing this query
     therefore measures build + bucketed write + read-back + join: the
     true daily-ingest cost, not just the join. The index tables are
-    scratch: release_caches() drops them once the result is
-    materialised. q_neardup_index_fp is the same cycle with
-    collapse_exact on both sides."""
+    scratch, named per session (``_session_table_prefix``):
+    release_caches() drops them once the result is materialised.
+    q_neardup_index_fp is the same cycle with collapse_exact on both
+    sides."""
     from breweries_data_pipeline_spark.operators.dedup import (
         build_shingle_index,
         near_dedup_against_index,
@@ -12437,7 +12428,7 @@ def q_neardup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     batch = docs.where(F.col("doc_id") % 5 == 0)
     history = docs.where(F.col("doc_id") % 5 != 0)
-    tbl = "t_q_neardup_index"
+    tbl = _session_table_prefix(spark, "t_q_neardup_index")
     for t in write_shingle_index_bucketed(
         build_shingle_index(history, threshold=0.5), tbl
     ):
@@ -14401,7 +14392,7 @@ def q_neardup_index_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     batch = docs.where(F.col("doc_id") % 5 == 0)
     history = docs.where(F.col("doc_id") % 5 != 0)
-    tbl = "t_q_neardup_index_fp"
+    tbl = _session_table_prefix(spark, "t_q_neardup_index_fp")
     for t in write_shingle_index_bucketed(
         build_shingle_index(history, threshold=0.5, collapse_exact=True),
         tbl,

@@ -2,11 +2,13 @@
 streaming half of ``operators/dedup.dedup_incremental`` (BASELINE
 LLM-pipeline surface; the reference has no streaming).
 
-Each micro-batch of documents is fingerprinted (md5 of normalized
-text), anti-joined against everything the store has already accepted,
-collapsed within-batch (keep smallest id), and the survivors are
-published as one committed version of the store — the continuous form
-of the daily-crawl dedup shape.
+Each micro-batch of documents is collapsed within-batch by
+``exact_dedup`` (md5 of normalized text, keep the smallest id),
+anti-joined on that fingerprint against everything the store has
+already accepted, and the survivors are published as one committed
+version of the store — the continuous form of the daily-crawl dedup
+shape (collapsing first keeps the same rows: the anti-join drops
+whole fingerprint groups).
 
 Commit protocol: versions publish through the same ``_commits``
 manifest as the snapshot store (streaming/upsert.py) — data directory
@@ -30,8 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from breweries_data_pipeline_spark.operators.clean import deduplicate
-from breweries_data_pipeline_spark.operators.text import with_fingerprint
+from breweries_data_pipeline_spark.operators.dedup import exact_dedup
 from breweries_data_pipeline_spark.streaming.upsert import (
     commit_snapshot_version,
     committed_versions,
@@ -65,12 +66,11 @@ def streaming_corpus_ingest(
         spark = batch_df.sparkSession
         if batch_id in committed_versions(store_dir):
             return  # redelivered batch: already published, skip
-        fresh = with_fingerprint(batch_df, text_col)
+        fresh = exact_dedup(batch_df, text_col, id_col)
         existing = read_corpus(spark, store_dir)
         if existing is not None:
             seen = existing.select("fingerprint").distinct()
             fresh = fresh.join(seen, "fingerprint", "left_anti")
-        fresh = deduplicate(fresh, ["fingerprint"], order_by=[id_col])
         fresh.write.mode("overwrite").parquet(
             os.path.join(store_dir, f"v{batch_id}")
         )

@@ -702,16 +702,26 @@ def test_collapse_exact_index_matches_uncollapsed(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ["q_neardup_index", "q_neardup_index_fp"])
 def test_neardup_index_tables_dropped_on_release(spark, sf_dir, name):
-    """The index tables these queries write are scratch: once the
-    result is materialised, release_caches() drops every one of them,
-    catalog entry and warehouse directory."""
+    """The index tables these queries write are scratch, named per
+    session so two processes sharing a checkout do not overwrite each
+    other's: every tracked table carries the session's sanitised
+    applicationId, and once the result is materialised,
+    release_caches() drops every one of them, catalog entry and
+    warehouse directory."""
     import os
+    import re
     from urllib.parse import urlparse
 
+    from breweries_data_pipeline_spark import cache
     from breweries_data_pipeline_spark.queries import REGISTRY, release_caches
 
+    release_caches()
     REGISTRY[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    tables = [f"t_{name}_{t}" for t in ("prefix", "sets", "freq", "meta")]
+    app = re.sub(r"[^0-9A-Za-z_]", "_", spark.sparkContext.applicationId)
+    tables = [t for _, t in cache._TRACKED_TABLES]
+    assert sorted(tables) == sorted(
+        f"t_{name}_{app}_{t}" for t in ("prefix", "sets", "freq", "meta")
+    )
     assert all(spark.catalog.tableExists(t) for t in tables)
     release_caches()
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path

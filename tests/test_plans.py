@@ -669,6 +669,44 @@ _SIMILARITY_PLAN_BUDGET = {
 }
 
 
+# The same budget for the exact-duplicate collapses, counted the same
+# way. Every keep-the-smallest-id pass is one min-id hash aggregate
+# (operators/clean.py min_id_groups): a partial and a final
+# HashAggregate around one Exchange, never a row-number Window or a
+# SortAggregate. The Windows left in q_neardup_index_fp are the index
+# prefix cut and the best-match ranking, not collapses.
+_EXACT_DEDUP_PLAN_BUDGET = {
+    "q_corpus_funnel": {
+        "Exchange": 19, "BroadcastExchange": 11, "BroadcastHashJoin": 12,
+        "SortMergeJoin": 1, "Window": 0, "SortAggregate": 0, "HashAggregate": 32,
+    },
+    "q_dedup_embedding": {
+        "Exchange": 10, "BroadcastExchange": 9, "BroadcastHashJoin": 9,
+        "SortMergeJoin": 1, "Window": 0, "SortAggregate": 0, "HashAggregate": 18,
+    },
+    "q_dedup_incremental": {
+        "Exchange": 2, "BroadcastExchange": 2, "BroadcastHashJoin": 2,
+        "SortMergeJoin": 0, "Window": 0, "SortAggregate": 0, "HashAggregate": 4,
+    },
+    "q_dedup_neardup": {
+        "Exchange": 8, "BroadcastExchange": 7, "BroadcastHashJoin": 8,
+        "SortMergeJoin": 0, "Window": 0, "SortAggregate": 0, "HashAggregate": 10,
+    },
+    "q_dedup_salted": {
+        "Exchange": 1, "BroadcastExchange": 0, "BroadcastHashJoin": 0,
+        "SortMergeJoin": 0, "Window": 0, "SortAggregate": 0, "HashAggregate": 2,
+    },
+    "q_dedup_text": {
+        "Exchange": 1, "BroadcastExchange": 0, "BroadcastHashJoin": 0,
+        "SortMergeJoin": 0, "Window": 0, "SortAggregate": 0, "HashAggregate": 2,
+    },
+    "q_neardup_index_fp": {
+        "Exchange": 16, "BroadcastExchange": 7, "BroadcastHashJoin": 7,
+        "SortMergeJoin": 1, "Window": 4, "SortAggregate": 0, "HashAggregate": 22,
+    },
+}
+
+
 def _plan_node_counts(spark, sf_dir, name, nodes):
     """Count the named plan nodes over every SQL execution that running
     the registry query ``name`` triggers, planned with AQE off."""
@@ -711,6 +749,12 @@ def test_lsh_dedup_plan_budget(spark, sf_dir, name):
 @pytest.mark.parametrize("name", sorted(_SIMILARITY_PLAN_BUDGET))
 def test_similarity_plan_budget(spark, sf_dir, name):
     budget = _SIMILARITY_PLAN_BUDGET[name]
+    assert _plan_node_counts(spark, sf_dir, name, budget) == budget
+
+
+@pytest.mark.parametrize("name", sorted(_EXACT_DEDUP_PLAN_BUDGET))
+def test_exact_dedup_plan_budget(spark, sf_dir, name):
+    budget = _EXACT_DEDUP_PLAN_BUDGET[name]
     assert _plan_node_counts(spark, sf_dir, name, budget) == budget
 
 

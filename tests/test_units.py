@@ -1,6 +1,6 @@
 """Unit tests for the non-oracle surface: REST source retry/backoff,
 distributed fetch, schema compiler error paths, quality rule policy,
-sink atomicity, and the salted dedup operator (SURVEY.md §5 — the
+sink atomicity, and the min-id dedup operator (SURVEY.md §5 — the
 reference's own unit-test level, applied to our engine modules)."""
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ import pytest
 
 from breweries_data_pipeline_spark.operators.clean import (
     deduplicate,
-    deduplicate_salted,
+    min_id_groups,
 )
 from breweries_data_pipeline_spark.operators.quality import rules_dataframe
 from breweries_data_pipeline_spark.schema import build_struct_type, parse_type
@@ -237,28 +237,26 @@ def test_write_parquet_partitioned_layout(spark, tmp_path):
     assert {(r.state, r.v) for r in back.collect()} == {("tx", 1), ("or", 2)}
 
 
-# ---------------------------------------------------------------- salted dedup
+# ---------------------------------------------------------------- min-id dedup
 
 
-def test_salted_dedup_matches_plain_on_skew(spark):
+def test_min_id_groups_matches_window_on_skew(spark):
     # 90%-one-key skew fixture
     rows = [("hot", i, f"v{i}") for i in range(900)]
     rows += [(f"k{i}", i, f"v{i}") for i in range(100)]
     df = spark.createDataFrame(rows, ["k", "ord", "v"])
+    groups = min_id_groups(df, ["k"], "ord")
+    # ord repeats across keys here, so the rows re-attach on (k, ord)
+    kept = df.join(groups.select("k", "ord"), ["k", "ord"], "semi")
     plain = deduplicate(df, ["k"], order_by=["ord"])
-    salted = deduplicate_salted(df, ["k"], order_by=["ord"], salt_buckets=8)
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-    assert salted.count() == 101
-
-
-def test_salted_dedup_plan_has_two_keyed_exchanges(spark):
-    df = spark.createDataFrame([("a", 1)], ["k", "ord"])
-    plan = (
-        deduplicate_salted(df, ["k"], order_by=["ord"], salt_buckets=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "__salt" in plan  # phase-1 exchange spreads the hot key
-    assert plan.count("Exchange hashpartitioning") >= 2
+    assert sorted(map(tuple, kept.collect())) == sorted(map(tuple, plain.collect()))
+    assert groups.count() == 101
+    assert groups.agg({"w": "sum"}).first()[0] == len(rows)
+    # map-side combined: a partial aggregate below the exchange, and
+    # no window that would send all 900 hot rows to one partition
+    plan = groups._jdf.queryExecution().executedPlan().toString()
+    assert "partial_min(ord" in plan and "HashAggregate" in plan
+    assert "Window" not in plan
 
 
 def test_approx_percentile_within_rank_error(spark, sf_dir):
@@ -352,19 +350,14 @@ def test_salted_join_rejects_replication_breaking_how(spark):
     assert salted_join(left, right, "k", salt_from=["lv"], how="inner").count() == 1
 
 
-def test_asof_forward_window_vs_cogroup_on_hot_key(spark):
+def test_asof_forward_window_plan_on_hot_key(spark):
     """SCALE.md's as-of claim, executed: on a 90%-one-key timeline the
-    window form and the cogroup form agree row-for-row, but their
-    plans differ where it matters at 100 TB — the window form's only
-    wide op is a hash exchange (AQE can split a skewed partition),
-    while the cogroup form pins each key to ONE FlatMapCoGroupsInPandas
-    task, so the hot key serializes no matter how many executors
-    exist."""
+    forward as-of's only wide op is a hash exchange on the key (AQE
+    can split a skewed partition), with no pandas task that would pin
+    the hot key to one executor. Its rows are checked against a
+    model in tests/test_properties.py."""
     from pyspark.sql import functions as F
-    from breweries_data_pipeline_spark.operators.temporal import (
-        as_of_join_cogroup,
-        as_of_join_forward,
-    )
+    from breweries_data_pipeline_spark.operators.temporal import as_of_join_forward
 
     n = 20000
     base = spark.range(n).select(
@@ -379,13 +372,8 @@ def test_asof_forward_window_vs_cogroup_on_hot_key(spark):
     buys = base.filter(F.col("id") % 2 == 1).select("user_id", "ts").distinct()
 
     w = as_of_join_forward(clicks, buys, "user_id", "ts", "ts", suffix="_next")
-    c = as_of_join_cogroup(clicks, buys, "user_id", "ts", "ts", suffix="_next")
-    assert sorted(map(tuple, w.collect())) == sorted(map(tuple, c.collect()))
-
     wplan = w._jdf.queryExecution().executedPlan().toString()
-    cplan = c._jdf.queryExecution().executedPlan().toString()
     assert "InPandas" not in wplan and "hashpartitioning(user_id" in wplan
-    assert "FlatMapCoGroupsInPandas" in cplan
 
 
 def test_asof_forward_carries_value_columns(spark):
