@@ -20,6 +20,21 @@ def test_oracle_parity(spark, sf_dir, name):
     assert result["match"], f"{name}: {result['detail']}"
 
 
+# sha256 of the JSON list of sorted (name, oracle SQL) pairs: 300
+# queries, 289 with an oracle. A refactor of query code must leave every
+# oracle string byte-identical; a change to one re-pins this digest.
+_ORACLE_SHA256 = "b7474b371859de6ab7613d7de6132c5c5098951432d7c0a6a543c686c707bae3"
+
+
+def test_oracle_strings_are_pinned():
+    import hashlib
+    import json
+
+    pairs = sorted((name, sql) for name, (_, sql) in REGISTRY.items())
+    assert (len(pairs), len(ORACLE_QUERIES)) == (300, 289)
+    assert hashlib.sha256(json.dumps(pairs).encode()).hexdigest() == _ORACLE_SHA256
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_queries_run(spark, sf_dir, name):
     fn, _ = REGISTRY[name]

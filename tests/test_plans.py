@@ -632,8 +632,27 @@ _LSH_PLAN_BUDGET = {
 # aggregates and centroid sort, and the final aggregate and sort.
 # q_similarity_join_exact (the self-join) and q_neardup_incremental (a
 # batch against an in-memory index) add the prefix-filter step
-# (operators/dedup.py _verified_prefix_pairs).
+# (operators/dedup.py _verified_prefix_pairs). The exact-cosine top-k
+# plans (q_similarity_topk, q_similarity_ann, q_hard_negatives, and the
+# verify joins of q_dedup_embedding) count one ArrowEvalPython per
+# exact-fold dot or norm evaluation site.
 _SIMILARITY_PLAN_BUDGET = {
+    "q_similarity_topk": {
+        "Exchange": 2, "BroadcastExchange": 1, "BroadcastHashJoin": 0,
+        "SortMergeJoin": 0, "ArrowEvalPython": 3, "InMemoryTableScan": 0,
+    },
+    "q_similarity_ann": {
+        "Exchange": 3, "BroadcastExchange": 1, "BroadcastHashJoin": 1,
+        "SortMergeJoin": 0, "ArrowEvalPython": 5, "InMemoryTableScan": 0,
+    },
+    "q_hard_negatives": {
+        "Exchange": 2, "BroadcastExchange": 1, "BroadcastHashJoin": 0,
+        "SortMergeJoin": 0, "ArrowEvalPython": 3, "InMemoryTableScan": 0,
+    },
+    "q_dedup_embedding": {
+        "Exchange": 10, "BroadcastExchange": 9, "BroadcastHashJoin": 9,
+        "SortMergeJoin": 1, "ArrowEvalPython": 5, "InMemoryTableScan": 17,
+    },
     "q_kmeans_assign": {
         "Exchange": 3, "BroadcastExchange": 0, "BroadcastHashJoin": 0,
         "SortMergeJoin": 0, "ArrowEvalPython": 0, "InMemoryTableScan": 0,

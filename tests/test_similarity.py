@@ -77,6 +77,42 @@ def test_ivf_kmeans_centroids_improve_or_match(spark, sf_dir):
     assert recall >= 0.4, f"IVF+kmeans recall {recall:.2f} below floor"
 
 
+@pytest.mark.parametrize("kmeans_iter", [0, 2])
+def test_ivf_cell_join_emits_each_pair_once(spark, sf_dir, kmeans_iter):
+    """A corpus vector sits in exactly one cell and a probe's n_probe
+    cells are distinct, so the cell equi-join meets each (probe, vector)
+    pair at most once: ivf_topk needs no dedupe before its rank. Checked
+    on the join itself (rebuilt from the same centroids and lanes) and
+    on ivf_topk with k large enough to return every candidate."""
+    from breweries_data_pipeline_spark.operators.similarity import (
+        ivf_topk,
+        kmeans_centroids,
+        nearest_centroid_udf,
+    )
+
+    emb, probes = _probe_set(spark, sf_dir)
+    cells = list(enumerate(kmeans_centroids(emb, k=16, n_iter=kmeans_iter)))
+    c = emb.select(
+        "vec_id", nearest_centroid_udf(cells)(F.col("embedding"))["cluster"].alias("cell")
+    )
+    p = probes.select(
+        F.col("vec_id").alias("probe_id"),
+        F.explode(nearest_centroid_udf(cells, n=4)(F.col("embedding"))).alias("cell"),
+    )
+    joined = [
+        (r.probe_id, r.vec_id)
+        for r in c.join(p, "cell").where(F.col("vec_id") != F.col("probe_id")).collect()
+    ]
+    assert joined and len(joined) == len(set(joined))
+
+    n = emb.count()
+    top = [
+        (r.probe_id, r.vec_id)
+        for r in ivf_topk(emb, probes, k=n, kmeans_iter=kmeans_iter).collect()
+    ]
+    assert sorted(top) == sorted(joined)
+
+
 def test_embedding_dedup_drops_exact_duplicate_vectors(spark, sf_dir):
     from breweries_data_pipeline_spark.operators.similarity import (
         dedup_embeddings,
