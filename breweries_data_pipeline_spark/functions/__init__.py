@@ -4,7 +4,6 @@ from breweries_data_pipeline_spark.functions.text import (  # noqa: F401
     token_count,
     tokens,
 )
-from breweries_data_pipeline_spark.functions.vectors import l2_norm  # noqa: F401
 from breweries_data_pipeline_spark.functions.zorder import (  # noqa: F401
     morton_key,
     morton_key_sql,

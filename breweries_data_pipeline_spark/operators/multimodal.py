@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from breweries_data_pipeline_spark.operators.dedup import _ensure_parallelism
+
 if TYPE_CHECKING:  # pandas imported lazily — executors only
     import pandas as pd
 
@@ -231,23 +233,6 @@ def decode_image(blob: bytes) -> tuple[int, int, int, bytes]:
     return decode_real_image(blob)
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Blob generation and decoding are compute-heavy narrow maps; a
-    small parquet scan arrives as 1-2 splits and would serialize the
-    kernel onto as many tasks. Repartition to the session's
-    parallelism when the scan under-splits (same rule as
-    operators.dedup._ensure_parallelism; a no-op cost next to the
-    kernel it feeds)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files < target:
-        return df.repartition(target)
-    return df
-
-
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -285,7 +270,7 @@ def media_from_ids(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread(ids_df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    return _ensure_parallelism(ids_df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 def decode_dimensions(media: DataFrame) -> DataFrame:
@@ -333,7 +318,7 @@ def png_media_from_ids(ids_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 }
             )
 
-    return _spread(ids_df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    return _ensure_parallelism(ids_df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 def jpeg_media_from_ids(
@@ -384,7 +369,7 @@ def jpeg_media_from_ids(
                 }
             )
 
-    return _spread(ids_df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
+    return _ensure_parallelism(ids_df.select(id_col)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 PNG_DECODED_SCHEMA = T.StructType(
@@ -590,7 +575,7 @@ def audio_from_ids(
             )
 
     cols = [id_col] if seed_col is None else [id_col, seed_col]
-    return _spread(ids_df.select(*cols)).mapInPandas(gen, MEDIA_SCHEMA)
+    return _ensure_parallelism(ids_df.select(*cols)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
 FRAME_ENERGY_SCHEMA = T.StructType(

@@ -2,27 +2,37 @@
 brute-force cosine top-k baseline + LSH-bucketed ANN scale path).
 
 Top-k search plans share one contract (probe_id, vec_id, cosine,
-rank):
+rank). Each plan generates candidates its own way, then runs the ONE
+exact refine step (``refine_sides`` + ``refine_topk``): an exact norm per
+vector (``exact_norm``, the Arrow fold kernel ``_exact_dot_udf``; a
+literal vector's norm is the driver-side ``fold_norm``, same IEEE
+order), the exact cosine ``dot(a, b) / (na * nb)`` (``exact_cosine``),
+a dedupe only where a pair can meet twice, and one salted per-probe
+rank. The candidate generators:
 
 - ``cosine_topk`` (exact baseline): broadcast the (small) probe set
   against the corpus — a BroadcastNestedLoopJoin that scans the corpus
-  ONCE regardless of probe count, then ranks per probe with one hash
-  exchange on probe_id. Cost is O(|corpus| * |probes|) multiply-adds,
-  all inside whole-stage codegen. Correct plan when probes are few;
-  never quadratic in the corpus.
+  ONCE regardless of probe count. Cost is O(|corpus| * |probes|)
+  multiply-adds; never quadratic in the corpus.
 
 - ``ann_topk`` (scale path): random-hyperplane LSH. Each vector gets a
   b-bit signature (sign of dot with b fixed pseudo-random planes);
   signatures band into groups of adjacent bits; probe meets corpus
   vector only if some band matches — an equi-join on (band, value), so
   candidate generation shuffles on band buckets instead of fanning the
-  whole corpus to every probe. Candidates are then ranked by exact
-  cosine. Recall tunes with bands/bits (more bands = more recall, more
-  candidates). At 100 TB the signature pass is a narrow scan-bound
-  map and the join touches only colliding buckets.
+  whole corpus to every probe. A pair can share several bands, so it
+  is the one plan that dedupes. Recall tunes with bands/bits (more
+  bands = more recall, more candidates). At 100 TB the signature pass
+  is a narrow scan-bound map and the join touches only colliding
+  buckets.
 
 - ``ivf_topk`` and ``pq_topk``: centroid-partitioned search (inverted
-  lists; product-quantization codes), each with an exact rerank.
+  lists, an equi-join on cell id; product-quantization codes, an
+  approximate shortlist).
+
+``embedding_near_dup_pairs``, ``semantic_dedup``'s exact lane and the
+registry's cosine queries score with the same ``exact_norm`` and
+``exact_cosine``.
 
 The clustering family (IVF, PQ, ``semantic_dedup``, the registry's
 k-means and bitext queries) shares ONE nearest-centroid assignment
@@ -37,10 +47,10 @@ L2, ties to the lowest centroid id):
   centroid literal, each distance a pinned-order ``aggregate`` fold —
   the IEEE sequence a DuckDB CROSS JOIN + row_number replay
   reproduces bit-for-bit. Its codegen cost grows with k, so callers
-  that pick a lane by k switch to the numpy lane above k = 16:
-  ``ivf_l2_cell_column`` (squared L2) and ``semantic_dedup``, whose
-  oracle lane is the cosine form of the fold (exact-fold dots,
-  ``array_max`` over (cosine, -id)).
+  that pick a lane by k take the numpy lane above
+  ``_FOLD_MAX_K`` = 16 centroids: ``ivf_l2_cell_column`` (squared L2)
+  and ``semantic_dedup``, whose oracle lane is the cosine form of the
+  fold (exact-fold dots, ``array_max`` over (cosine, -id)).
 
 Every Lloyd iteration is ``kmeans_centroids`` (E-step through the
 numpy lane, M-step as one per-cluster hash aggregate).
@@ -50,8 +60,9 @@ across sessions/executors, no numpy, no driver->executor closure
 capture beyond plain literals.
 
 All cosine arithmetic is pinned-order double (float->double cast,
-left-fold sum): verified bit-equal between Spark's F.aggregate and
-DuckDB's list_sum, so exact queries are hash-checkable.
+left-fold sum): verified bit-equal between the Arrow kernel, Spark's
+F.aggregate fold and DuckDB's list fold, so exact queries are
+hash-checkable.
 """
 
 from __future__ import annotations
@@ -63,7 +74,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from breweries_data_pipeline_spark.cache import track_persist
-from breweries_data_pipeline_spark.functions.vectors import l2_norm
 from breweries_data_pipeline_spark.operators.dedup import _exact_group_stars
 from breweries_data_pipeline_spark.operators.windows import topk_per_group
 
@@ -91,59 +101,10 @@ HYPERPLANES: list[list[float]] = [
 ]
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k neighbors per probe.
-
-    ``probes`` must be small (it is broadcast); ``corpus`` is scanned
-    once. Returns (probe_id, vec_id, cosine, rank) with deterministic
-    (cosine desc, vec_id) tie-break; self-matches excluded.
-
-    Norms are computed ONCE per corpus/probe row (not per pair), and
-    the per-pair dot runs as an Arrow-batched exact-fold kernel —
-    bit-identical to the naive fold (see _exact_dot_udf), ~100x less
-    interpreted work than a per-pair higher-order function.
-    """
-    dot = _exact_dot_udf()
-    c = corpus.select(
-        id_col,
-        vec_col,
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__cnorm"),
-    )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("__probe_vec"),
-    ).withColumn("__pnorm", F.sqrt(dot(F.col("__probe_vec"), F.col("__probe_vec"))))
-    scored = (
-        c.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
-        .select(
-            "probe_id",
-            id_col,
-            (
-                dot(F.col(vec_col), F.col("__probe_vec"))
-                / (F.col("__cnorm") * F.col("__pnorm"))
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col(id_col)],
-        k,
-        rank_name="rank",
-        # probe counts are small (the operator's contract), so a plain
-        # per-probe window caps parallelism at n_probes tasks, each
-        # sorting its probe's whole candidate slice; the salted
-        # two-phase prune keeps n_probes x 64 tasks busy and is
-        # result-identical (same total order in both phases)
-        salt=F.xxhash64(F.col(id_col)),
-        salt_buckets=64,
-    ).withColumn("rank", F.col("rank").cast("long"))
+# Up to this many centroids, a nearest-centroid step that picks its lane
+# by k runs the exact-fold lane (the oracle regime); above it, the numpy
+# lane, since the fold's codegen grows with k.
+_FOLD_MAX_K = 16
 
 
 def _exact_dot_udf() -> "object":
@@ -171,6 +132,111 @@ def _exact_dot_udf() -> "object":
 
     _dot.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
     return pandas_udf("double")(_dot)
+
+
+def exact_norm(v: Column) -> Column:
+    """double Column: the exact L2 norm of a vector column, sqrt of its
+    left-fold self dot (``_exact_dot_udf``)."""
+    return F.sqrt(_exact_dot_udf()(v, v))
+
+
+def fold_norm(vec: list[float]) -> float:
+    """``exact_norm`` of a literal vector, folded on the driver in the
+    same IEEE order, for use as a plan constant."""
+    acc = 0.0
+    for x in vec:
+        acc = acc + float(x) * float(x)
+    return math.sqrt(acc)
+
+
+def exact_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """double Column: the exact cosine of vectors ``a`` and ``b`` given
+    their norms, ``dot(a, b) / (na * nb)`` with the left-fold dot."""
+    return _exact_dot_udf()(a, b) / (na * nb)
+
+
+def refine_sides(
+    corpus: DataFrame,
+    probes: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    corpus_cols: tuple[Column, ...] = (),
+    probe_cols: tuple[Column, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """The two inputs of the refine step, each norm computed once per
+    row (not per pair): the corpus as (id_col, vec_col, __norm,
+    *corpus_cols) and the probes as (probe_id, __pvec, __pnorm,
+    *probe_cols). A plan joins them by its own candidate filter and
+    hands the joined rows to ``refine_topk``."""
+    v = F.col(vec_col)
+    c = corpus.select(id_col, vec_col, exact_norm(v).alias("__norm"), *corpus_cols)
+    p = probes.select(
+        F.col(id_col).alias("probe_id"),
+        v.alias("__pvec"),
+        exact_norm(v).alias("__pnorm"),
+        *probe_cols,
+    )
+    return c, p
+
+
+def refine_topk(
+    cand: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dedupe: bool = False,
+    salted: bool = True,
+) -> DataFrame:
+    """The exact refine step of every top-k plan: score each candidate
+    row of ``refine_sides``' joined columns by exact cosine, drop repeat
+    (probe_id, id_col) pairs where the generator can emit one twice
+    (``dedupe``), and keep the top ``k`` per probe by (cosine desc,
+    id_col). Returns (probe_id, id_col, cosine, rank: long).
+
+    Scoring happens before the dedupe, so the dedupe shuffles scalar
+    keys, not vectors. Probe counts are small (the plans' contract), so
+    a plain per-probe window would cap parallelism at n_probes tasks,
+    each sorting its probe's whole candidate slice; the salted
+    two-phase prune keeps n_probes x 64 tasks busy and is
+    result-identical (same total order in both phases). ``salted=False``
+    is for candidate sets already cut to a short list per probe."""
+    scored = cand.select(
+        "probe_id",
+        id_col,
+        exact_cosine(
+            F.col(vec_col), F.col("__pvec"), F.col("__norm"), F.col("__pnorm")
+        ).alias("cosine"),
+    )
+    if dedupe:
+        scored = scored.dropDuplicates(["probe_id", id_col])
+    return topk_per_group(
+        scored,
+        ["probe_id"],
+        [F.col("cosine").desc(), F.col(id_col)],
+        k,
+        rank_name="rank",
+        salt=F.xxhash64(F.col(id_col)) if salted else None,
+        salt_buckets=64,
+    ).withColumn("rank", F.col("rank").cast("long"))
+
+
+def cosine_topk(
+    corpus: DataFrame,
+    probes: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact cosine top-k neighbors per probe.
+
+    ``probes`` must be small (it is broadcast); ``corpus`` is scanned
+    once. Returns (probe_id, vec_id, cosine, rank) with deterministic
+    (cosine desc, vec_id) tie-break; self-matches excluded. The
+    candidates are every (corpus, probe) pair; ``refine_topk`` scores
+    and ranks them."""
+    c, p = refine_sides(corpus, probes, id_col, vec_col)
+    cand = c.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
+    return refine_topk(cand, k, id_col, vec_col)
 
 
 def _vector_key(vec_col: str) -> Column:
@@ -206,10 +272,10 @@ def embedding_near_dup_pairs(
     Shuffle discipline: the self-join carries ONLY (id, band) pairs;
     candidate id-pairs are deduped BEFORE vectors are re-attached
     (two hash joins), norms are precomputed once per vector, and the
-    pair dot products run as one numpy kernel per Arrow batch. The
-    kernel is the exact left-fold dot (_exact_dot_udf), so surviving
-    pairs are bit-comparable to a DuckDB list-fold recompute — the
-    threshold test can never flip between engines.
+    pairs are scored by ``exact_cosine`` (the left-fold dot, one numpy
+    kernel per Arrow batch), so surviving pairs are bit-comparable to
+    a DuckDB list-fold recompute — the threshold test can never flip
+    between engines.
 
     ``collapse_exact`` (default on) first collapses bit-identical
     vectors to their min-id representative (``dedup._exact_group_stars``
@@ -238,7 +304,7 @@ def embedding_near_dup_pairs(
     base = corpus.select(
         F.col(id_col),
         F.col(vec_col).alias("__vec"),
-        l2_norm(F.col(vec_col)).alias("__norm"),
+        exact_norm(F.col(vec_col)).alias("__norm"),
         bands_expr.alias("__bands"),
     ).transform(track_persist)
     buckets = base.select(id_col, F.posexplode("__bands").alias("__pos", "__val"))
@@ -263,16 +329,15 @@ def embedding_near_dup_pairs(
     vb = base.select(
         F.col(id_col).alias("id_b"), F.col("__vec").alias("__vb"), F.col("__norm").alias("__nb")
     )
-    dot = _exact_dot_udf()
     return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
         .select(
             "id_a",
             "id_b",
-            (dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb"))).alias(
-                "cosine"
-            ),
+            exact_cosine(
+                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
+            ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -511,50 +576,22 @@ def ivf_topk(
     n_probe/n_clusters of the corpus instead of all of it."""
     cents = kmeans_centroids(corpus, vec_col, id_col, n_clusters, kmeans_iter)
     cells = list(enumerate(cents))
-    dot = _exact_dot_udf()
-    c = corpus.select(
+    v = F.col(vec_col)
+    c, p = refine_sides(
+        corpus,
+        probes,
         id_col,
         vec_col,
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__cnorm"),
-        nearest_centroid_udf(cells)(F.col(vec_col))["cluster"].alias("__cluster"),
+        (nearest_centroid_udf(cells)(v)["cluster"].alias("__cluster"),),
+        (F.explode(nearest_centroid_udf(cells, n=n_probe)(v)).alias("__cluster"),),
     )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("__probe_vec"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__pnorm"),
-        F.explode(nearest_centroid_udf(cells, n=n_probe)(F.col(vec_col))).alias(
-            "__cluster"
-        ),
+    # a corpus vector sits in ONE cell and a probe's n_probe cells are
+    # distinct, so this join meets each (probe, vector) pair once
+    cand = c.join(
+        F.broadcast(p),
+        (c["__cluster"] == p["__cluster"]) & (F.col(id_col) != F.col("probe_id")),
     )
-    scored = (
-        c.join(
-            F.broadcast(p),
-            (c["__cluster"] == p["__cluster"]) & (F.col(id_col) != F.col("probe_id")),
-        )
-        .select(
-            "probe_id",
-            id_col,
-            (
-                dot(F.col(vec_col), F.col("__probe_vec"))
-                / (F.col("__cnorm") * F.col("__pnorm"))
-            ).alias("cosine"),
-        )
-        .dropDuplicates(["probe_id", id_col])
-    )
-    return topk_per_group(
-        scored,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col(id_col)],
-        k,
-        rank_name="rank",
-        # probe counts are small (the operator's contract), so a plain
-        # per-probe window caps parallelism at n_probes tasks, each
-        # sorting its probe's whole candidate slice; the salted
-        # two-phase prune keeps n_probes x 64 tasks busy and is
-        # result-identical (same total order in both phases)
-        salt=F.xxhash64(F.col(id_col)),
-        salt_buckets=64,
-    ).withColumn("rank", F.col("rank").cast("long"))
+    return refine_topk(cand, k, id_col, vec_col)
 
 
 def hyperplane_bands(vec_col: str | Column, n_planes: int = N_PLANES, bands: int = 8) -> Column:
@@ -611,63 +648,36 @@ def ann_topk(
     followed by exact cosine ranking of candidates only. Same output
     contract as cosine_topk; recall < 1 by design."""
     bands_expr = hyperplane_bands(vec_col, n_planes, bands)
-    dot = _exact_dot_udf()
     # ONE equi-join on (band_index, band_value) instead of a union of
     # per-band joins: both sides posexplode their band arrays; the
     # probe side stays tiny (|probes| * bands rows) so AQE broadcasts
     # it and the corpus side never shuffles. Norms are computed before
     # the explode — once per vector, not once per (vector, band).
-    c = corpus.select(
+    c, p = refine_sides(
+        corpus,
+        probes,
         id_col,
         vec_col,
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__cnorm"),
-        bands_expr.alias("__bands"),
-    ).select(
-        id_col, vec_col, "__cnorm", F.posexplode("__bands").alias("__pos", "__val")
+        (bands_expr.alias("__bands"),),
+        (bands_expr.alias("__bands"),),
     )
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("__probe_vec"),
-        F.sqrt(dot(F.col(vec_col), F.col(vec_col))).alias("__pnorm"),
-        bands_expr.alias("__bands"),
-    ).select(
+    c = c.select(
+        id_col, vec_col, "__norm", F.posexplode("__bands").alias("__pos", "__val")
+    )
+    p = p.select(
         "probe_id",
-        "__probe_vec",
+        "__pvec",
         "__pnorm",
         F.posexplode("__bands").alias("__ppos", "__pval"),
     )
-    # score inside the join and dedupe on scalar keys only: re-deriving
-    # a cosine for a pair that collides in several bands is cheap
-    # arithmetic, while a distinct() over raw vectors would shuffle
-    # 64-float arrays
     cand = c.join(
         F.broadcast(p),
         (F.col("__pos") == F.col("__ppos"))
         & (F.col("__val") == F.col("__pval"))
         & (F.col(id_col) != F.col("probe_id")),
-    ).select(
-        "probe_id",
-        id_col,
-        (
-            dot(F.col(vec_col), F.col("__probe_vec"))
-            / (F.col("__cnorm") * F.col("__pnorm"))
-        ).alias("cosine"),
     )
-    scored = cand.dropDuplicates(["probe_id", id_col])
-    return topk_per_group(
-        scored,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col(id_col)],
-        k,
-        rank_name="rank",
-        # probe counts are small (the operator's contract), so a plain
-        # per-probe window caps parallelism at n_probes tasks, each
-        # sorting its probe's whole candidate slice; the salted
-        # two-phase prune keeps n_probes x 64 tasks busy and is
-        # result-identical (same total order in both phases)
-        salt=F.xxhash64(F.col(id_col)),
-        salt_buckets=64,
-    ).withColumn("rank", F.col("rank").cast("long"))
+    # a pair that collides in several bands meets once per band
+    return refine_topk(cand, k, id_col, vec_col, dedupe=True)
 
 
 def quantize_embeddings(
@@ -841,35 +851,13 @@ def pq_topk(
         rank_name="__arank",
     ).select("probe_id", "__id")
 
-    dot = _exact_dot_udf()
-    vecs = corpus.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__cvec"),
-        F.sqrt(_exact_dot_udf()(F.col(vec_col), F.col(vec_col))).alias("__cnorm"),
+    c, p = refine_sides(corpus, probes, id_col, vec_col)
+    cand = (
+        shortlist.select("probe_id", F.col("__id").alias(id_col))
+        .join(c, id_col)
+        .join(F.broadcast(p), "probe_id")
     )
-    pv = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__pvec")
-    )
-    exact = (
-        shortlist.join(vecs, "__id")
-        .join(F.broadcast(pv), "probe_id")
-        .select(
-            "probe_id",
-            F.col("__id").alias(id_col),
-            (
-                dot(F.col("__cvec"), F.col("__pvec"))
-                / (F.col("__cnorm") * F.sqrt(dot(F.col("__pvec"), F.col("__pvec"))))
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        exact,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col(id_col)],
-        k,
-        rank_name="rank",
-    ).withColumn("rank", F.col("rank").cast("long"))
-
+    return refine_topk(cand, k, id_col, vec_col, salted=False)
 
 
 def ivf_l2_cell_column(
@@ -878,8 +866,8 @@ def ivf_l2_cell_column(
 ) -> Column:
     """long Column: nearest seed by squared L2 (IVF cell assignment),
     ties to the LOWEST cell id whatever the list order. The lane
-    follows from the seed count, as in ``semantic_dedup``: up to 16
-    seeds the exact-fold ``nearest_centroid_fold`` (the oracle
+    follows from the seed count, as in ``semantic_dedup``: up to
+    ``_FOLD_MAX_K`` seeds the exact-fold ``nearest_centroid_fold`` (the oracle
     regime), above that the numpy ``nearest_centroid_udf`` (one pass
     for ALL seeds; not an IEEE-order replay — the two lanes are pinned
     to the same cells by tests/test_similarity.py's cross-lane
@@ -887,7 +875,7 @@ def ivf_l2_cell_column(
 
     ``seed_cells`` is bounded model state (k x d floats) — the
     documented bounded-collect class."""
-    if len(seed_cells) <= 16:
+    if len(seed_cells) <= _FOLD_MAX_K:
         return nearest_centroid_fold(seed_cells, vec_col)
     col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return nearest_centroid_udf(seed_cells, "l2")(col)["cluster"]
@@ -901,8 +889,6 @@ def semantic_dedup(
     tau: float = 0.25,
     n_iter: int = 0,
     collapse_exact: bool = True,
-    force_scale_path: bool = False,
-    force_exact_path: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus, then inside each cluster
@@ -927,7 +913,8 @@ def semantic_dedup(
        ``n_iter`` Lloyd rounds — 0 keeps the whole operator
        SQL-oracle-reproducible, >0 is the production setting).
     2. assignment — the family's nearest-centroid step (cosine, ties
-       to the lowest centroid id) in two lanes picked by k:
+       to the lowest centroid id) in two lanes picked by k against
+       ``_FOLD_MAX_K`` = 16:
        - k <= 16 (oracle regime): k exact-fold dots per row against
          literal centroid arrays, argmax via array_max over (cos, -id)
          structs — the cosine form of ``nearest_centroid_fold``,
@@ -946,8 +933,8 @@ def semantic_dedup(
        target_cluster_size to bound cluster sizes; a hub cluster that
        still blows up gets sub-sharded by a secondary LSH band over
        its members (compose with ann_topk's banding) before pairing.
-       Pair scoring: the exact-fold kernel on the oracle path; the
-       scale path scores each cluster in one matmul (below).
+       Pair scoring: ``exact_cosine`` on the oracle path; the scale
+       path scores each cluster in one matmul (below).
     5. drops: pair qualifies when cosine >= tau; survivors via
        anti-join.
     """
@@ -958,32 +945,20 @@ def semantic_dedup(
     cents = kmeans_centroids(
         work, vec_col=vec_col, id_col=id_col, k=k, n_iter=n_iter
     )
-    # force_exact_path exists for the cross-lane equivalence tests
-    # (run the fold lane at k > 16 against the matmul lane) — the
-    # k-fold-columns codegen cost makes it a test-only setting
-    exact_path = force_exact_path or (k <= 16 and not force_scale_path)
-
-    if exact_path:
+    if k <= _FOLD_MAX_K:
         # oracle path: fold assignment, explicit pair join + exact-fold
         # scoring — every intermediate reproducible in SQL
         from pyspark.sql import Window
 
-        dot = _exact_dot_udf()
         base = work.select(id_col, vec_col).withColumn(
-            "__n", F.sqrt(dot(F.col(vec_col), F.col(vec_col)))
+            "__n", exact_norm(F.col(vec_col))
         )
-
-        def _fold_norm(vec: list[float]) -> float:
-            acc = 0.0
-            for x in vec:
-                acc = acc + float(x) * float(x)
-            return math.sqrt(acc)
-
         sims = []
         for i, c in enumerate(cents):
             cvec = F.array(*[F.lit(float(x)) for x in c])
-            cn = _fold_norm(c)
-            cos_i = dot(F.col(vec_col), cvec) / (F.col("__n") * F.lit(cn))
+            cos_i = exact_cosine(
+                F.col(vec_col), cvec, F.col("__n"), F.lit(fold_norm(c))
+            )
             sims.append(F.struct(cos_i.alias("c"), F.lit(-i).alias("ni")))
         best = F.array_max(F.array(*sims))
         assigned = base.select(
@@ -1017,8 +992,9 @@ def semantic_dedup(
             a.join(b, "cluster_id")
             .filter(F.col("__a_rnk") < F.col("__b_rnk"))
             .filter(
-                dot(F.col("__a_vec"), F.col("__b_vec"))
-                / (F.col("__a_n") * F.col("__b_n"))
+                exact_cosine(
+                    F.col("__a_vec"), F.col("__b_vec"), F.col("__a_n"), F.col("__b_n")
+                )
                 >= F.lit(tau)
             )
             .select(F.col("__b_id").alias(id_col))

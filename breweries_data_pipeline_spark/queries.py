@@ -1407,10 +1407,8 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SQL_FINGERPRINT = r"md5(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'))"
-# DuckDB spelling of functions.text.shingles(text, 3): token 3-grams,
-# whole-doc fallback for short docs. range() is end-exclusive so
-# range(1, len-1) yields start positions 1..len-2 — same count as
-# Spark's sequence(0, size-3).
+
+
 def _long_div(num: Column, den: Column) -> Column:
     """Integer floor-division of two non-negative long Columns,
     matching DuckDB's ``//`` on BIGINT exactly. ``num - num % den``
@@ -1428,7 +1426,9 @@ def _sql_shingles(n: int) -> str:
     """DuckDB spelling of ``functions.text.shingles(text, n)``: all
     space-joined token n-grams, with sub-``n``-token docs collapsing
     to one whole-document shingle (same convention as the Spark side,
-    so oracle parity holds for every doc length)."""
+    so oracle parity holds for every doc length). range() is
+    end-exclusive, so range(1, len - n + 2) yields the start positions
+    1..len-n+1 — the same count as Spark's sequence(0, size - n)."""
     toks = r"regexp_split_to_array(trim(text), '\s+')"
     return (
         rf"CASE WHEN len({toks}) >= {n} "
@@ -1774,10 +1774,11 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §2.6 X8 similarity search (embeddings table)
 # ---------------------------------------------------------------------------
 
-# DuckDB spelling of functions.vectors: pinned-order double arithmetic
-# (left-fold sum over element products; denominator sqrt(a)*sqrt(b)).
-# list_sum over a double list is bit-equal to Spark's F.aggregate fold
-# (verified empirically on the testdata embeddings).
+# DuckDB spelling of similarity.exact_cosine: pinned-order double
+# arithmetic (left-fold sum over element products; denominator
+# sqrt(a)*sqrt(b)). list_sum over a double list is bit-equal to the
+# Arrow left-fold kernel (verified empirically on the testdata
+# embeddings).
 _SQL_DOT = (
     "list_sum(list_transform(range(1, len({a}) + 1), "
     "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
@@ -3029,18 +3030,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang")
 
 
-def _sql_shingles_n(n: int) -> str:
-    """DuckDB spelling of functions.text.shingles(text, n) — token
-    ``n``-grams with the whole-document fallback for short docs."""
-    toks = r"regexp_split_to_array(trim(text), '\s+')"
-    return (
-        f"CASE WHEN len({toks}) >= {n} "
-        f"THEN list_transform(range(1, len({toks}) - {n - 2}), "
-        f"i -> array_to_string(list_slice({toks}, i, i + {n - 1}), ' ')) "
-        f"ELSE [array_to_string({toks}, ' ')] END"
-    )
-
-
 @register(
     "q_split_assign",
     """
@@ -3101,7 +3090,7 @@ def q_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_decontaminate",
     f"""
     WITH sh5 AS (
-      SELECT doc_id, {_sql_shingles_n(5)} AS s FROM documents
+      SELECT doc_id, {_sql_shingles(5)} AS s FROM documents
     ),
     bench AS (
       SELECT DISTINCT unnest(s) AS sh FROM sh5 WHERE doc_id % 97 = 0
@@ -9238,43 +9227,24 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the label inequality fused into the join condition (pushed
     ahead of the dot product, so mismatched pairs never reach the
     kernel); exact-fold cosine keeps the oracle bit-exact."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    from breweries_data_pipeline_spark.operators.similarity import _exact_dot_udf
+    from breweries_data_pipeline_spark.operators.similarity import (
+        refine_sides,
+        refine_topk,
+    )
 
-    dot = _exact_dot_udf()
-    c = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("__cn"),
+    emb = read_table(spark, sf_dir, "embeddings")
+    c, p = refine_sides(
+        emb,
+        emb.filter(F.col("vec_id") < 10),
+        corpus_cols=(F.col("label"),),
+        probe_cols=(F.col("label").alias("__plabel"),),
     )
-    p = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("label").alias("__plabel"),
-        F.col("embedding").alias("__pe"),
-    )
-    p = p.withColumn("__pn", F.sqrt(dot(F.col("__pe"), F.col("__pe"))))
-    scored = c.join(
+    cand = c.join(
         F.broadcast(p),
         (F.col("vec_id") != F.col("probe_id"))
         & (F.col("label") != F.col("__plabel")),
-    ).select(
-        "probe_id",
-        "vec_id",
-        (dot(F.col("embedding"), F.col("__pe")) / (F.col("__cn") * F.col("__pn")))
-        .alias("cosine"),
     )
-    return topk_per_group(
-        scored,
-        ["probe_id"],
-        [F.col("cosine").desc(), F.col("vec_id")],
-        3,
-        rank_name="rank",
-        # 10 probes over a full corpus scan: same few-groups collapse
-        # as cosine_topk — salted two-phase prune, result-identical
-        salt=F.xxhash64(F.col("vec_id")),
-        salt_buckets=64,
-    ).withColumn("rank", F.col("rank").cast("long"))
+    return refine_topk(cand, 3)
 
 
 @register(
@@ -10553,41 +10523,37 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors as plan literals. Exact-fold cosines keep the unrolled
     SQL oracle bit-exact — deterministic diversified retrieval, the
     standard re-rank after an ANN shortlist."""
-    from breweries_data_pipeline_spark.operators.similarity import _exact_dot_udf
+    from breweries_data_pipeline_spark.operators.similarity import (
+        exact_cosine,
+        exact_norm,
+        fold_norm,
+    )
 
-    dot = _exact_dot_udf()
     emb = read_table(spark, sf_dir, "embeddings")
     probe_vec = [
         float(x)
         for x in emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     ]
-    pv = F.array(*[F.lit(x) for x in probe_vec])
-    cand = emb.filter(F.col("vec_id") != 0).select(
-        "vec_id",
-        "embedding",
-        (
-            dot(F.col("embedding"), pv)
-            / (
-                F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                * F.sqrt(dot(pv, pv))
-            )
-        ).alias("r"),
-    ).transform(_persist)
+
+    def cos_to(vec: list[float]) -> Column:
+        # the literal's norm is a driver constant; each row's is __n
+        lit_vec = F.array(*[F.lit(float(x)) for x in vec])
+        return exact_cosine(
+            F.col("embedding"), lit_vec, F.col("__n"), F.lit(fold_norm(vec))
+        )
+
+    cand = (
+        emb.filter(F.col("vec_id") != 0)
+        .select("vec_id", "embedding", exact_norm(F.col("embedding")).alias("__n"))
+        .withColumn("r", cos_to(probe_vec))
+        .transform(_persist)
+    )
 
     selected: list[tuple[int, float, list[float]]] = []
     for step in range(3):
         scored = cand
         if selected:
-            sim_cols = []
-            for _, _, svec in selected:
-                sv = F.array(*[F.lit(float(x)) for x in svec])
-                sim_cols.append(
-                    dot(F.col("embedding"), sv)
-                    / (
-                        F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                        * F.sqrt(dot(sv, sv))
-                    )
-                )
+            sim_cols = [cos_to(svec) for _, _, svec in selected]
             max_sim = sim_cols[0]
             for c in sim_cols[1:]:
                 max_sim = F.greatest(max_sim, c)
@@ -13721,8 +13687,8 @@ def q_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm division are all integers.
 
     Scale: one broadcast-probes corpus scan for the top-k (salted
-    two-phase rank, see cosine_topk), one broadcast join for the
-    per-class relevant counts — corpus growth touches only the
+    two-phase rank, see similarity.refine_topk), one broadcast join
+    for the per-class relevant counts — corpus growth touches only the
     embarrassingly parallel scan."""
     emb = read_table(spark, sf_dir, "embeddings")
     train = emb.filter(F.col("vec_id") >= 16)
@@ -14647,7 +14613,7 @@ def q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bucketed discipline as the MinHash-LSH family. The HOF
     lane is the oracle-true exact path; its O(n*k) interpreted cost
     is bounded by k=5 (a production Arrow kernel would be the swap-in
-    for hot loops, as with _exact_dot_udf)."""
+    for hot loops, as with the similarity family's exact dot)."""
     from breweries_data_pipeline_spark.functions.text import (
         winnow_stats_udf,
     )
@@ -15742,13 +15708,6 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < k).orderBy("vec_id").collect()
     )
 
-    def _fold_dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     # ivf_l2_cell_column picks the nearest-centroid lane from k: the
     # exact-fold lane up to k = 16 (the oracle regime, same doubles
     # DuckDB's CROSS JOIN + row_number replays; the SQL computes k
@@ -15757,6 +15716,8 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # centroids, ties to the lowest cell id; not an IEEE-order replay
     # — cross-lane equivalence pinned by tests/test_similarity.py).
     from breweries_data_pipeline_spark.operators.similarity import (
+        exact_cosine,
+        exact_norm,
         ivf_l2_cell_column,
     )
 
@@ -15764,7 +15725,7 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = ivf_l2_cell_column(seed_cells, F.col("v")).alias("cell")
 
     assigned = e.select("vec_id", "v", cell).withColumn(
-        "nrm", F.sqrt(_fold_dot(F.col("v"), F.col("v")))
+        "nrm", exact_norm(F.col("v"))
     )
     x = assigned.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("x_id"),
@@ -15779,23 +15740,18 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("yn"),
     )
     from breweries_data_pipeline_spark.cache import track_persist
-    from breweries_data_pipeline_spark.operators.similarity import (
-        _exact_dot_udf,
-    )
 
-    # per-PAIR dot via the Arrow exact-fold kernel (bit-identical IEEE
-    # sequence to the interpreted HOF fold and DuckDB's list fold, see
-    # _exact_dot_udf) — the candidate volume makes interpreted
+    # per-PAIR exact cosine through the Arrow exact-fold kernel
+    # (bit-identical IEEE sequence to the interpreted HOF fold and
+    # DuckDB's list fold) — the candidate volume makes interpreted
     # per-element folds the bottleneck here. Persisted because THREE
     # consumers read it (both neighborhood windows + the margin join).
-    dot = _exact_dot_udf()
     p = track_persist(
         x.join(y, "cell").select(
             "x_id",
             "y_id",
             F.round(
-                dot(F.col("xv"), F.col("yv"))
-                / (F.col("xn") * F.col("yn"))
+                exact_cosine(F.col("xv"), F.col("yv"), F.col("xn"), F.col("yn"))
                 * 1000000.0
             )
             .cast("long")

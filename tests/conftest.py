@@ -36,3 +36,17 @@ def distributed_cc(monkeypatch):
     from breweries_data_pipeline_spark.operators import graph
 
     monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
+
+
+@pytest.fixture
+def fold_lane_cap(monkeypatch):
+    """Setter for the centroid count up to which the nearest-centroid
+    step runs its exact-fold lane (``similarity._FOLD_MAX_K``):
+    ``fold_lane_cap(0)`` sends every k to the numpy lane, a cap above k
+    sends k to the fold lane; restored afterwards."""
+    from breweries_data_pipeline_spark.operators import similarity
+
+    def set_cap(k: int) -> None:
+        monkeypatch.setattr(similarity, "_FOLD_MAX_K", k)
+
+    return set_cap

@@ -632,10 +632,13 @@ _LSH_PLAN_BUDGET = {
 # aggregates and centroid sort, and the final aggregate and sort.
 # q_similarity_join_exact (the self-join) and q_neardup_incremental (a
 # batch against an in-memory index) add the prefix-filter step
-# (operators/dedup.py _verified_prefix_pairs). The exact-cosine top-k
-# plans (q_similarity_topk, q_similarity_ann, q_hard_negatives, and the
-# verify joins of q_dedup_embedding) count one ArrowEvalPython per
-# exact-fold dot or norm evaluation site.
+# (operators/dedup.py _verified_prefix_pairs). Every exact norm and
+# cosine runs the refine step's Arrow kernel: one ArrowEvalPython per
+# projection that evaluates one. q_similarity_ivf ranks with no dedupe
+# (its cell join meets each pair once); q_bitext_mine's two norm
+# projections and its cosine are counted under each of the three read
+# sites of its persisted pair table; q_similarity_pq norms its probes
+# once, on the broadcast side.
 _SIMILARITY_PLAN_BUDGET = {
     "q_similarity_topk": {
         "Exchange": 2, "BroadcastExchange": 1, "BroadcastHashJoin": 0,
@@ -666,16 +669,16 @@ _SIMILARITY_PLAN_BUDGET = {
         "SortMergeJoin": 1, "ArrowEvalPython": 4, "InMemoryTableScan": 0,
     },
     "q_similarity_ivf": {
-        "Exchange": 3, "BroadcastExchange": 1, "BroadcastHashJoin": 1,
+        "Exchange": 2, "BroadcastExchange": 1, "BroadcastHashJoin": 1,
         "SortMergeJoin": 0, "ArrowEvalPython": 5, "InMemoryTableScan": 0,
     },
     "q_similarity_pq": {
         "Exchange": 10, "BroadcastExchange": 2, "BroadcastHashJoin": 2,
-        "SortMergeJoin": 0, "ArrowEvalPython": 10, "InMemoryTableScan": 15,
+        "SortMergeJoin": 0, "ArrowEvalPython": 11, "InMemoryTableScan": 15,
     },
     "q_bitext_mine": {
         "Exchange": 7, "BroadcastExchange": 3, "BroadcastHashJoin": 3,
-        "SortMergeJoin": 2, "ArrowEvalPython": 3, "InMemoryTableScan": 3,
+        "SortMergeJoin": 2, "ArrowEvalPython": 9, "InMemoryTableScan": 3,
     },
     "q_similarity_join_exact": {
         "Exchange": 4, "BroadcastExchange": 4, "BroadcastHashJoin": 5,

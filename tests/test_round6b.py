@@ -148,11 +148,12 @@ def test_dsir_weights_favor_target_like_docs(spark, sf_dir):
     assert means[True] > means[False]
 
 
-def test_semantic_dedup_scale_path_matches_oracle_path(spark, sf_dir):
+def test_semantic_dedup_scale_path_matches_oracle_path(spark, sf_dir, fold_lane_cap):
     emb = read_table(spark, sf_dir, "embeddings")
     kw = dict(k=8, tau=0.25, n_iter=0)
     exact = semantic_dedup(emb, **kw)
-    scale = semantic_dedup(emb, force_scale_path=True, **kw)
+    fold_lane_cap(0)
+    scale = semantic_dedup(emb, **kw)
     ex = {(r["vec_id"], r["cluster_id"], r["rnk"]) for r in exact.collect()}
     sc = {(r["vec_id"], r["cluster_id"], r["rnk"]) for r in scale.collect()}
     assert ex == sc

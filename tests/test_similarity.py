@@ -391,18 +391,20 @@ def test_ivf_cell_tie_contract_survives_unsorted_seeds(spark):
         assert got == {0: 3, 1: 3, 2: 9}, f"{lane} lane: {got}"
 
 
-def test_semantic_dedup_lanes_agree_above_k16(spark, sf_dir):
+def test_semantic_dedup_lanes_agree_above_k16(spark, sf_dir, fold_lane_cap):
     # the k=8 twin lives in test_round6b; this one crosses the lane
     # switch: default path at k=20 IS the matmul/grouped-prune scale
-    # lane, force_exact_path replays it with fold columns + pair join
+    # lane, a raised fold-lane cap replays it with fold columns + pair
+    # join
     from breweries_data_pipeline_spark.operators.similarity import (
         semantic_dedup,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
     kw = dict(k=20, tau=0.25, n_iter=0)
-    exact = semantic_dedup(emb, force_exact_path=True, **kw)
     scale = semantic_dedup(emb, **kw)
+    fold_lane_cap(20)
+    exact = semantic_dedup(emb, **kw)
     ex = {(r["vec_id"], r["cluster_id"], r["rnk"]) for r in exact.collect()}
     sc = {(r["vec_id"], r["cluster_id"], r["rnk"]) for r in scale.collect()}
     assert ex == sc
