@@ -100,9 +100,13 @@ def test_reference_ingestion_pipeline_end_to_end(spark, tmp_path):
     assert rows["b2"].state == "or" and rows["b2"].city == "portland"
     # partitioned by state per the metadata declaration
     assert results["transform_silver"]["partition_by"] == ["state"]
-    part_dirs = [d for d in os.listdir(results["transform_silver"]["output_path"])
-                 if d.startswith("state=")]
+    out = results["transform_silver"]["output_path"]
+    part_dirs = [d for d in os.listdir(out) if d.startswith("state=")]
     assert len(part_dirs) == 3
+    # one data file per partition directory
+    for d in part_dirs:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
 
 
 def test_reference_gold_aggregate_stage(spark, tmp_path):

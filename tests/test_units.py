@@ -237,6 +237,56 @@ def test_write_parquet_partitioned_layout(spark, tmp_path):
     assert {(r.state, r.v) for r in back.collect()} == {("tx", 1), ("or", 2)}
 
 
+def _partition_files(root) -> dict[str, list[str]]:
+    """Partition directory -> its parquet data files, for a one-level
+    hive layout."""
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(root, d)) if f.endswith(".parquet"))
+        for d in sorted(os.listdir(root))
+        if "=" in d
+    }
+
+
+def test_write_parquet_new_target_one_file_per_directory(spark, tmp_path):
+    """A partitioned write to a new path: rows spread round-robin over
+    8 tasks still land as exactly one data file per directory, the
+    commit leaves no staging tree behind, and the rows round-trip."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(48).select(
+        F.concat(F.lit("k"), (F.col("id") % 3).cast("string")).alias("k"),
+        F.col("id").alias("v"),
+    ).repartition(8)
+    assert df.rdd.getNumPartitions() == 8
+    out = str(tmp_path / "t")
+    write_parquet(df, out, partition_by=["k"])
+
+    files = _partition_files(out)
+    assert sorted(files) == ["k=k0", "k=k1", "k=k2"]
+    assert [len(f) for f in files.values()] == [1, 1, 1]
+    assert not [d for d in os.listdir(out) if d.startswith((".spark-staging", "_temporary"))]
+    back = spark.read.parquet(out)
+    want = sorted((f"k{i % 3}", i) for i in range(48))
+    assert sorted((r.k, r.v) for r in back.collect()) == want
+
+
+def test_write_parquet_rerun_keeps_untouched_partitions(spark, tmp_path):
+    """Overwriting an existing target replaces only the partitions the
+    new rows touch: a re-run that writes {b} leaves {a} as it was."""
+    out = str(tmp_path / "t")
+    write_parquet(
+        spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"]), out, partition_by=["k"]
+    )
+    before = _partition_files(out)
+    write_parquet(spark.createDataFrame([("b", 3)], ["k", "v"]), out, partition_by=["k"])
+    after = _partition_files(out)
+
+    assert after["k=a"] == before["k=a"]
+    assert after["k=b"] != before["k=b"]
+    back = spark.read.parquet(out)
+    assert sorted((r.k, r.v) for r in back.collect()) == [("a", 1), ("b", 3)]
+
+
 # ---------------------------------------------------------------- min-id dedup
 
 
