@@ -23,17 +23,41 @@ def write_parquet(
     mode: str = "overwrite",
 ) -> None:
     """Parquet sink; with ``partition_by`` -> hive-partitioned layout
-    (reference breweries_transform_silver_notebook.py:85-92). Pair with
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in the
-    session factory) for idempotent partition-level re-runs.
+    (reference breweries_transform_silver_notebook.py:85-92).
 
-    Scale note: choose partition columns with bounded cardinality
-    (state/country-like, O(10^2-10^4) values). High-cardinality
-    partitionBy creates a small-files explosion at 100 TB.
+    A partitioned write first hash-partitions the rows by
+    ``partition_by`` into ``spark.sql.shuffle.partitions`` tasks (an
+    explicit count, which AQE does not coalesce back to one task). So
+    each directory gets exactly one file per write, from one task;
+    tasks write disjoint directories in parallel; and the file count is
+    bounded by the directory count, not tasks x directories.
+
+    Commit: an existing target is overwritten under the session's
+    ``partitionOverwriteMode=dynamic``, so a re-run replaces only the
+    partitions its rows touch. A target that does not exist yet is
+    committed statically: both modes publish the same data files there
+    (static also leaves the committer's ``_SUCCESS`` marker), and
+    static skips dynamic's ``.spark-staging-<job>`` tree and its
+    per-partition mkdir and rename at job commit.
+
+    Scale note: a directory's rows go through one task, so at 100 TB
+    one dominant directory is one task's work;
+    ``spark.sql.files.maxRecordsPerFile`` bounds file size, not that
+    skew. Choose partition columns with bounded cardinality
+    (state/country-like, O(10^2-10^4) values): high-cardinality
+    partitionBy creates a small-files explosion.
     """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    if not partition_by:
+        df.write.mode(mode).parquet(path)
+        return
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    writer = df.repartition(n, *partition_by).write.mode(mode).partitionBy(*partition_by)
+    # the Hadoop FileSystem API, so remote targets behave as local ones
+    target = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not target.getFileSystem(sc._jsc.hadoopConfiguration()).exists(target):
+        writer = writer.option("partitionOverwriteMode", "static")
     writer.parquet(path)
 
 
@@ -195,9 +219,12 @@ def write_audit_publish(
     the publish-step note below: the two-rename dir swap does expose
     a brief no-table window to a racing reader, which only a true
     snapshot commit (manifest / table format) eliminates. Staging
-    writes to ``path.tmp`` and each individual rename is atomic on
-    POSIX; on an object store, put a manifest commit in front (see
-    streaming/upsert.py, which implements exactly that).
+    goes through :func:`write_parquet` to a pid-suffixed
+    ``path.<pid>.staging`` directory (published or removed before the
+    call returns, so a partitioned stage commits statically), and each
+    individual rename is atomic on POSIX; on an object store, put a
+    manifest commit in front (see streaming/upsert.py, which
+    implements exactly that).
 
     The audit runs on the STAGED files, not the input frame — it
     validates what was actually written (catching any write-path
@@ -210,10 +237,7 @@ def write_audit_publish(
 
     spark = df.sparkSession
     tmp = f"{path}.{os.getpid()}.staging"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    write_parquet(df, tmp, partition_by=partition_by)
 
     staged = spark.read.parquet(tmp)
     results = evaluate_rules(staged, rules)
