@@ -291,8 +291,6 @@ def embedding_near_dup_pairs(
     contract (cliques within exact groups)."""
     if collapse_exact:
         reps, star = _exact_group_stars(corpus, _vector_key(vec_col), id_col, "cosine")
-        # the banding count and the pair plan both read reps: collapse once
-        reps = track_persist(reps)
         if n_planes is None or bands is None:
             n_planes, bands = _adaptive_banding(reps.count(), threshold)
         rep_pairs = embedding_near_dup_pairs(

@@ -44,8 +44,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         # --- reference-carried configuration ---
-        # dynamic applies to existing targets: writers.write_parquet
-        # commits a target that does not exist yet statically
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- scale-oriented configuration ---

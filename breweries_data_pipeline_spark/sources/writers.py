@@ -30,35 +30,25 @@ def write_parquet(
     explicit count, which AQE does not coalesce back to one task). So
     each directory gets exactly one file per write, from one task;
     tasks write disjoint directories in parallel; and the file count is
-    bounded by the directory count, not tasks x directories.
+    bounded by the directory count, not tasks x directories. The commit
+    is the session's ``partitionOverwriteMode=dynamic``: a re-run
+    replaces only the partitions its rows touch.
 
-    Commit: an existing target is overwritten under the session's
-    ``partitionOverwriteMode=dynamic``, so a re-run replaces only the
-    partitions its rows touch. A target that does not exist yet is
-    committed statically: both modes publish the same data files there
-    (static also leaves the committer's ``_SUCCESS`` marker), and
-    static skips dynamic's ``.spark-staging-<job>`` tree and its
-    per-partition mkdir and rename at job commit.
-
-    Scale note: a directory's rows go through one task, so at 100 TB
-    one dominant directory is one task's work;
+    Scale trade: the clustering is one more shuffle of every row, and
+    the write runs at most one task per distinct partition value, so
+    its parallelism is capped at the directory count (silver's ~43
+    ``state,country`` directories are ~43 write tasks on any cluster),
+    and every directory, large or small, is one task's work.
     ``spark.sql.files.maxRecordsPerFile`` bounds file size, not that
-    skew. Choose partition columns with bounded cardinality
+    task's work. Choose partition columns with bounded cardinality
     (state/country-like, O(10^2-10^4) values): high-cardinality
     partitionBy creates a small-files explosion.
     """
     if not partition_by:
         df.write.mode(mode).parquet(path)
         return
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    writer = df.repartition(n, *partition_by).write.mode(mode).partitionBy(*partition_by)
-    # the Hadoop FileSystem API, so remote targets behave as local ones
-    target = sc._jvm.org.apache.hadoop.fs.Path(path)
-    if not target.getFileSystem(sc._jsc.hadoopConfiguration()).exists(target):
-        writer = writer.option("partitionOverwriteMode", "static")
-    writer.parquet(path)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    df.repartition(n, *partition_by).write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
 def write_bucketed(
@@ -221,10 +211,9 @@ def write_audit_publish(
     snapshot commit (manifest / table format) eliminates. Staging
     goes through :func:`write_parquet` to a pid-suffixed
     ``path.<pid>.staging`` directory (published or removed before the
-    call returns, so a partitioned stage commits statically), and each
-    individual rename is atomic on POSIX; on an object store, put a
-    manifest commit in front (see streaming/upsert.py, which
-    implements exactly that).
+    call returns), and each individual rename is atomic on POSIX; on
+    an object store, put a manifest commit in front (see
+    streaming/upsert.py, which implements exactly that).
 
     The audit runs on the STAGED files, not the input frame — it
     validates what was actually written (catching any write-path

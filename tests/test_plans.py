@@ -638,10 +638,7 @@ _LSH_PLAN_BUDGET = {
 # (its cell join meets each pair once); q_bitext_mine's two norm
 # projections and its cosine are counted under each of the three read
 # sites of its persisted pair table; q_similarity_pq norms its probes
-# once, on the broadcast side. q_dedup_embedding persists the exact
-# collapse's representatives: the banding count reads that cache once,
-# and each of the pair plan's four read sites is a scan of it, under
-# which the plan graph also draws the cached plan's own corpus scan.
+# once, on the broadcast side.
 _SIMILARITY_PLAN_BUDGET = {
     "q_similarity_topk": {
         "Exchange": 2, "BroadcastExchange": 1, "BroadcastHashJoin": 0,
@@ -657,7 +654,7 @@ _SIMILARITY_PLAN_BUDGET = {
     },
     "q_dedup_embedding": {
         "Exchange": 10, "BroadcastExchange": 9, "BroadcastHashJoin": 9,
-        "SortMergeJoin": 1, "ArrowEvalPython": 5, "InMemoryTableScan": 22,
+        "SortMergeJoin": 1, "ArrowEvalPython": 5, "InMemoryTableScan": 17,
     },
     "q_kmeans_assign": {
         "Exchange": 3, "BroadcastExchange": 0, "BroadcastHashJoin": 0,

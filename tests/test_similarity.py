@@ -143,28 +143,6 @@ def test_embedding_dedup_drops_exact_duplicate_vectors(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_embedding_pairs_collapse_exact_runs_once(spark, sf_dir):
-    """The exact collapse's representatives feed both the banding count
-    and the pair plan; they are computed once, so building and
-    counting the pairs runs at most 17 jobs (18 when the pair count
-    ran the collapse a second time)."""
-    from breweries_data_pipeline_spark.operators.similarity import embedding_near_dup_pairs
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    clone = emb.filter(F.col("vec_id") == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding", "label"
-    )
-    sc = spark.sparkContext
-    group = "embedding-pairs-collapse"
-    sc.setJobGroup(group, "embedding near-dup pairs")
-    try:
-        n = embedding_near_dup_pairs(emb.unionByName(clone), threshold=0.99).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert n >= 1
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 17
-
-
 def test_kmeans_matches_numpy_lloyd_exactly(spark):
     """The one-row-per-cluster aggregate (r5 advice: no posexplode
     row amplification) must reproduce a reference numpy Lloyd
